@@ -47,7 +47,6 @@ from rtree_cpp_spark.operators.range_query import (
 from rtree_cpp_spark.operators.spatial_join import (
     distance_join,
     spatial_join,
-    spatial_join_adaptive,
     spatial_join_salted,
 )
 from rtree_cpp_spark.operators.tiles import (
@@ -175,7 +174,7 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # mixed-resolution adaptive cells: hot coarse cells subdivide
         # 2 levels finer (STR's density-adaptive leaf extent, structural
         # skew defense — candidate pairs SHRINK instead of re-sharding)
-        "spatial_join_adaptive": lambda s, d: spatial_join_adaptive(
+        "spatial_join_adaptive": lambda s, d: spatial_join(
             rects.rects_a(s, d), rects.rects_b(s, d), GRID,
             hot_threshold=2000, levels_finer=2, sample_fraction=0.25,
         ),

@@ -6,6 +6,12 @@ walking nodes, every rect is exploded to the grid cells it covers and
 candidates meet by cell equi-join.  Pure JVM Column expressions
 (``explode(sequence(...))``) — stays inside whole-stage codegen, no
 Python in the hot path.
+
+The rect and polygon intersection joins share one candidate path:
+:func:`side_cover` explodes each side, :func:`hot_census` finds the
+cells dense enough to need a skew defense, and :func:`cell_candidates`
+meets the two sides by cell — plainly, salted, or at mixed resolution —
+and hands back the exactly-once rule the caller's refine must apply.
 """
 
 from __future__ import annotations
@@ -36,6 +42,20 @@ def with_cover_cells(df: DataFrame, grid: Grid, prefix: str = "") -> DataFrame:
     )
 
 
+def side_cover(rects: DataFrame, grid: Grid, prefix: str) -> DataFrame:
+    """One join side: ``doc_id`` and the bbox renamed under ``prefix``
+    (``a_``/``b_``), exploded to one row per covered cell.  Slim by
+    design — polygon rings are re-attached by id after the cell join."""
+    return with_cover_cells(
+        rects.select(
+            F.col("doc_id").alias(f"{prefix}doc_id"),
+            *(F.col(c).alias(f"{prefix}{c}") for c in ("min_x", "min_y", "max_x", "max_y")),
+        ),
+        grid,
+        prefix=prefix,
+    )
+
+
 def ref_point_cell_col(
     grid: Grid,
     a_min_x: Column, a_min_y: Column,
@@ -47,3 +67,150 @@ def ref_point_cell_col(
     this cell makes every true pair survive **exactly once** without a
     ``distinct`` shuffle (SURVEY.md J1: "reference-point dedup")."""
     return grid.cell_of_point_col(F.greatest(a_min_x, b_min_x), F.greatest(a_min_y, b_min_y))
+
+
+def hot_census(
+    a_rects: DataFrame, grid: Grid, hot_threshold: int | None, sample_fraction: float = 1.0
+) -> DataFrame | None:
+    """Cells whose A-side cover count exceeds ``hot_threshold``
+    (columns ``cell, _n``), persisted; ``None`` when there are none or
+    no threshold is set.
+
+    ``sample_fraction < 1`` counts a seeded sample of A with the
+    threshold scaled by the fraction instead of a second full
+    cover-explode — sampling error only shifts which cells get the skew
+    defense, never which pairs come out.  Persisted because the hot set
+    feeds BOTH sides' broadcast joins and Spark does not reuse the
+    exchange across them (measured: the census explode+agg executed
+    twice, ~33% of the salted wall at sf0.1).  Tiny by construction, so
+    never unpersisted.  The emptiness probe is a bounded planning action
+    on that O(hot cells) result (same class as the layout medians)."""
+    if hot_threshold is None:
+        return None
+    src = a_rects if sample_fraction >= 1.0 else a_rects.sample(fraction=sample_fraction, seed=42)
+    census = (
+        side_cover(src, grid, "a_")
+        .groupBy("cell")
+        .agg(F.count("*").alias("_n"))
+        .where(F.col("_n") > hot_threshold * sample_fraction)
+    ).persist()
+    return None if census.isEmpty() else census
+
+
+def cell_candidates(
+    a: DataFrame,
+    b: DataFrame,
+    grid: Grid,
+    census: DataFrame | None,
+    n_salt: int = 16,
+    levels_finer: int | None = None,
+) -> tuple[DataFrame, Column]:
+    """Meet two :func:`side_cover` sides by cell → ``(candidates, keep)``.
+
+    ``keep`` is the exactly-once rule the refine must apply: the pair's
+    key is the cell of its reference point.  Three shapes:
+
+    - ``census is None``: the plain ``cell`` equi-join (AQE skew-join is
+      the only skew defense) — no broadcast, no salt, no rekey;
+    - ``levels_finer=None``: explicit SALTING — in hot cells A rows hash
+      into ``n_salt`` buckets and B rows fan out over all of them, join
+      key ``(cell, salt)``.  Re-partitions the same candidate pairs;
+    - ``levels_finer=k``: MIXED-RESOLUTION cells — hot coarse cells
+      subdivide ``k`` levels finer (:func:`adaptive_rekey`, join key
+      ``key``) and ``keep`` is :func:`adaptive_keep_col`.  Pairs that
+      never share a fine cell are never generated, so the candidate
+      cross-product SHRINKS instead of being re-sharded — the
+      structural skew defense STR packing gets by construction (leaf
+      extent adapts to density, RTreeBulkLoad.cpp:29-60).
+    """
+    if census is not None and levels_finer is not None:
+        hot = census.select("cell", F.lit(True).alias("_hot"))
+        joined = adaptive_rekey(a, "a_", grid, hot, levels_finer).join(
+            adaptive_rekey(b, "b_", grid, hot, levels_finer), "key"
+        )
+        rx = F.greatest(F.col("a_min_x"), F.col("b_min_x"))
+        ry = F.greatest(F.col("a_min_y"), F.col("b_min_y"))
+        return joined, adaptive_keep_col(grid, levels_finer, rx, ry)
+    keep = F.col("cell") == ref_point_cell_col(
+        grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
+    )
+    if census is None:
+        return a.join(b, "cell"), keep
+    hot = census.select("cell", F.lit(n_salt).alias("_n_salt"))
+    sa = a.join(F.broadcast(hot), "cell", "left").withColumn(
+        "salt",
+        F.when(F.col("_n_salt").isNull(), F.lit(0)).otherwise(
+            F.pmod(F.xxhash64("a_doc_id"), F.col("_n_salt")).cast("int")
+        ),
+    ).drop("_n_salt")
+    sb = (
+        b.join(F.broadcast(hot), "cell", "left")
+        .withColumn(
+            "salt",
+            F.explode(
+                F.when(F.col("_n_salt").isNull(), F.array(F.lit(0))).otherwise(
+                    F.sequence(F.lit(0), F.col("_n_salt") - 1)
+                )
+            ),
+        )
+        .drop("_n_salt")
+    )
+    return sa.join(sb, ["cell", "salt"]), keep
+
+
+def adaptive_rekey(
+    df: DataFrame, p: str, grid: Grid, hot: DataFrame, levels_finer: int
+) -> DataFrame:
+    """Mixed-resolution rekey: rows whose coarse ``cell`` is in the
+    broadcast ``hot`` set (columns ``cell, _hot=true``) REPLACE it with
+    the fine cells of their bbox cover CLIPPED to that coarse cell's
+    children (cell-prefix arithmetic: children of (cx, cy) at +k levels
+    are [cx<<k, (cx<<k)+2^k-1] x same for y); every other row keeps the
+    coarse key.  Fine keys live at ``n^2 + fine_cell`` so the two key
+    spaces never collide.  ``p`` is the bbox column prefix
+    (``a_``/``b_``)."""
+    if levels_finer < 1:
+        raise ValueError(f"levels_finer must be >= 1, got {levels_finer}")
+    fine = Grid(grid.level + levels_finer, grid.extent)
+    m = 1 << levels_finer  # fine cells per coarse cell per axis
+    offset = grid.n * grid.n  # fine keys start above every coarse id
+    ccy = F.pmod(F.col("cell"), F.lit(grid.n))
+    ccx = ((F.col("cell") - ccy) / F.lit(grid.n)).cast("long")
+    fx0, fx1 = fine.cx_col(F.col(f"{p}min_x")), fine.cx_col(F.col(f"{p}max_x"))
+    fy0, fy1 = fine.cx_col(F.col(f"{p}min_y")), fine.cx_col(F.col(f"{p}max_y"))
+    # fine cover clipped to this coarse cell's children — non-empty
+    # by cover construction (the rect covers the coarse cell, and
+    # clamping is applied identically at both levels)
+    lo_x = F.greatest(fx0, ccx * m)
+    hi_x = F.least(fx1, ccx * m + F.lit(m - 1))
+    lo_y = F.greatest(fy0, ccy * m)
+    hi_y = F.least(fy1, ccy * m + F.lit(m - 1))
+    hot_flag = F.coalesce(F.col("_hot"), F.lit(False))
+    one = F.array(F.lit(-1).cast("long"))
+    return (
+        df.join(F.broadcast(hot), "cell", "left")
+        .withColumn("_fx", F.explode(F.when(hot_flag, F.sequence(lo_x, hi_x)).otherwise(one)))
+        .withColumn("_fy", F.explode(F.when(hot_flag, F.sequence(lo_y, hi_y)).otherwise(one)))
+        .withColumn(
+            "key",
+            F.when(
+                hot_flag,
+                F.lit(offset) + F.col("_fx") * F.lit(fine.n) + F.col("_fy"),
+            ).otherwise(F.col("cell")),
+        )
+        .drop("cell", "_hot", "_fx", "_fy")
+    )
+
+
+def adaptive_keep_col(grid: Grid, levels_finer: int, rx, ry):
+    """Exactly-once rule for mixed-resolution candidates: a pair
+    survives iff its key is the cell of its reference point (rx, ry)
+    evaluated AT THE ROW'S OWN RESOLUTION.  A true pair's reference
+    cell is hot or not — exactly one branch can ever match, so no pair
+    is emitted twice across resolutions."""
+    fine = Grid(grid.level + levels_finer, grid.extent)
+    offset = grid.n * grid.n
+    return F.when(
+        F.col("key") >= offset,
+        F.col("key") == F.lit(offset) + fine.cell_of_point_col(rx, ry),
+    ).otherwise(F.col("key") == grid.cell_of_point_col(rx, ry))

@@ -25,7 +25,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
-from rtree_cpp_spark.operators.cover import with_cover_cells
+from rtree_cpp_spark.operators.cover import (
+    cell_candidates,
+    hot_census,
+    ref_point_cell_col,
+    side_cover,
+    with_cover_cells,
+)
 from rtree_cpp_spark.plans.parallelism import fan_out
 
 
@@ -46,6 +52,18 @@ def _with_ring_check(df: DataFrame, xs: str = "xs", ys: str = "ys") -> DataFrame
         F.size(F.col(ys)).cast("string"),
     )
     return df.where(F.coalesce(F.assert_true(ok, msg), F.lit(True)))
+
+
+def _with_bbox(polygons: DataFrame) -> DataFrame:
+    """Polygons with their bbox columns, derived from the ring when the
+    input does not carry them."""
+    if {"min_x", "min_y", "max_x", "max_y"}.issubset(polygons.columns):
+        return polygons
+    return polygons.select(
+        "*",
+        F.array_min("xs").alias("min_x"), F.array_min("ys").alias("min_y"),
+        F.array_max("xs").alias("max_x"), F.array_max("ys").alias("max_y"),
+    )
 
 
 def _id_schema(df: DataFrame, pairs: list[tuple[str, str]], extra: str = "") -> str:
@@ -163,13 +181,7 @@ def polygon_pip_join(
     """
     if refine not in ("expr", "kernel"):
         raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
-    cols = polygons.columns
-    if not {"min_x", "min_y", "max_x", "max_y"}.issubset(cols):
-        polygons = polygons.select(
-            "*",
-            F.array_min("xs").alias("min_x"), F.array_min("ys").alias("min_y"),
-            F.array_max("xs").alias("max_x"), F.array_max("ys").alias("max_y"),
-        )
+    polygons = _with_bbox(polygons)
     # ring validation attaches to the verts branch (the only branch
     # that consumes ring payloads); see polygon_join's docstring for
     # the validate tradeoff on plan-computed rings
@@ -433,22 +445,14 @@ def polygon_join(
     both).
 
     ``hot_threshold`` enables the rect join's hot-cell skew defenses
-    (census over a seeded ``sample_fraction``):
-
-    - ``levels_finer=None`` (default): explicit SALTING — A rows hash
-      into ``n_salt`` buckets, B rows fan out.  Re-partitions the same
-      candidate pairs, so output rows are identical (pytest-asserted on
-      a skewed fixture; measured at 10^6-row clustered scale in
-      BENCH/polygon_skew.json).
-    - ``levels_finer=k``: MIXED-RESOLUTION ADAPTIVE cells — hot coarse
-      cells subdivide ``k`` levels finer and candidates inside them meet
-      at the fine resolution (spatial_join.adaptive_rekey), so pairs
-      that never share a fine cell are never generated: the candidate
-      cross-product SHRINKS structurally instead of being re-sharded.
-      Exactly-once via the bbox reference-point rule evaluated at each
-      row's own resolution (spatial_join.adaptive_keep_col).  This is
-      the skew defense that actually pays for polygons, where each
-      surviving candidate costs a SAT refine (BENCH/polygon_skew.json).
+    from the shared generator (``operators.cover.cell_candidates``,
+    census over a seeded ``sample_fraction``): ``levels_finer=None``
+    salts hot cells ``n_salt`` ways, re-partitioning the same candidate
+    pairs; ``levels_finer=k`` subdivides them ``k`` levels finer, so the
+    candidate cross-product SHRINKS — the defense that actually pays for
+    polygons, where each surviving candidate costs a SAT refine.  Output
+    rows are identical either way (pytest-asserted on skewed fixtures;
+    measured at 10^6-row clustered scale in BENCH/polygon_skew.json).
 
     Precondition: rings have >= 3 vertices and ``len(xs) == len(ys)``.
     With ``validate=True`` (default) the check rides the ring-payload
@@ -469,104 +473,22 @@ def polygon_join(
     # touches the arrays
     va = _with_ring_check(polys_a) if validate else polys_a
     vb = _with_ring_check(polys_b) if validate else polys_b
-
-    def prep(df: DataFrame, p: str) -> DataFrame:
-        if not {"min_x", "min_y", "max_x", "max_y"}.issubset(df.columns):
-            df = df.select(
-                "*",
-                F.array_min("xs").alias("min_x"), F.array_min("ys").alias("min_y"),
-                F.array_max("xs").alias("max_x"), F.array_max("ys").alias("max_y"),
-            )
-        # fan_out only on the plain path: with no hot-cell census the
-        # cell join typically broadcasts and the whole explode→join→
-        # kernel pipeline would inherit a 1-split scan; the salted and
-        # adaptive modes shuffle on their key anyway, where an extra
-        # repartition is pure overhead.  SLIM: the cell join carries
-        # ids + bboxes only; vertex arrays are re-attached by id AFTER
-        # the bbox filter, so the join's candidate blow-up (~40x the
-        # inputs at bench scale) never copies ring payloads.
-        if hot_threshold is None:
-            df = fan_out(df)
-        return with_cover_cells(
-            df.select(
-                F.col("doc_id").alias(f"{p}doc_id"),
-                F.col("min_x").alias(f"{p}min_x"), F.col("min_y").alias(f"{p}min_y"),
-                F.col("max_x").alias(f"{p}max_x"), F.col("max_y").alias(f"{p}max_y"),
-            ),
-            grid,
-            prefix=p,
-        )
-
-    from rtree_cpp_spark.operators.cover import ref_point_cell_col
-
-    pa, pb = prep(polys_a, "a_"), prep(polys_b, "b_")
-    rx = F.greatest(F.col("a_min_x"), F.col("b_min_x"))
-    ry = F.greatest(F.col("a_min_y"), F.col("b_min_y"))
-    if hot_threshold is not None:
-        census_src = (
-            pa
-            if sample_fraction >= 1.0
-            else prep(polys_a.sample(fraction=sample_fraction, seed=42), "a_")
-        )
-        # persist: the hot set feeds both sides' broadcast joins and
-        # Spark does not reuse the exchange across them (see
-        # spatial_join_salted) — cache the O(hot cells) result so the
-        # census computes once.
-        census = (
-            census_src.groupBy("cell")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") > hot_threshold * sample_fraction)
-        ).persist()
-        # Empty-census fast path (see spatial_join_salted): with no hot
-        # cells both the salted and adaptive paths degenerate to the
-        # plain cell join — rebuild the sides through the plain prep so
-        # they also regain its fan_out/broadcast-shape treatment, and
-        # fall through to the unsalted branch.  Bounded planning probe
-        # on the already-persisted O(hot cells) census.
-        if census.isEmpty():
-            hot_threshold = None
-            levels_finer = None
-            pa, pb = prep(polys_a, "a_"), prep(polys_b, "b_")
-    if hot_threshold is not None and levels_finer is not None:
-        from rtree_cpp_spark.operators.spatial_join import (
-            adaptive_keep_col,
-            adaptive_rekey,
-        )
-
-        hot = census.select("cell", F.lit(True).alias("_hot"))
-        joined = adaptive_rekey(pa, "a_", grid, hot, levels_finer).join(
-            adaptive_rekey(pb, "b_", grid, hot, levels_finer), "key"
-        )
-        keep = adaptive_keep_col(grid, levels_finer, rx, ry)
-    elif hot_threshold is not None:
-        hot = census.select("cell", F.lit(n_salt).alias("_n_salt"))
-        sa = pa.join(F.broadcast(hot), "cell", "left").withColumn(
-            "salt",
-            F.when(F.col("_n_salt").isNull(), F.lit(0)).otherwise(
-                F.pmod(F.xxhash64("a_doc_id"), F.col("_n_salt")).cast("int")
-            ),
-        ).drop("_n_salt")
-        sb = (
-            pb.join(F.broadcast(hot), "cell", "left")
-            .withColumn(
-                "salt",
-                F.explode(
-                    F.when(F.col("_n_salt").isNull(), F.array(F.lit(0))).otherwise(
-                        F.sequence(F.lit(0), F.col("_n_salt") - 1)
-                    )
-                ),
-            )
-            .drop("_n_salt")
-        )
-        joined = sa.join(sb, ["cell", "salt"])
-        keep = F.col("cell") == ref_point_cell_col(
-            grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
-        )
-    else:
-        joined = pa.join(pb, "cell")
-        keep = F.col("cell") == ref_point_cell_col(
-            grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
-        )
+    box_a, box_b = _with_bbox(polys_a), _with_bbox(polys_b)
+    census = hot_census(box_a, grid, hot_threshold, sample_fraction)
+    # fan_out only on the plain path (no threshold, or an empty census):
+    # there the cell join typically broadcasts and the whole explode→
+    # join→kernel pipeline would inherit a 1-split scan; the salted and
+    # adaptive modes shuffle on their key anyway, where an extra
+    # repartition is pure overhead.  SLIM: the cell join carries ids +
+    # bboxes only; vertex arrays are re-attached by id AFTER the bbox
+    # filter, so the join's candidate blow-up (~40x the inputs at bench
+    # scale) never copies ring payloads.
+    if census is None:
+        box_a, box_b = fan_out(box_a), fan_out(box_b)
+    joined, keep = cell_candidates(
+        side_cover(box_a, grid, "a_"), side_cover(box_b, grid, "b_"),
+        grid, census, n_salt, levels_finer,
+    )
     bbox_hit = (
         (F.col("a_min_x") <= F.col("b_max_x")) & (F.col("b_min_x") <= F.col("a_max_x"))
         & (F.col("a_min_y") <= F.col("b_max_y")) & (F.col("b_min_y") <= F.col("a_max_y"))
@@ -575,7 +497,9 @@ def polygon_join(
     if keep_cell:
         # the COARSE reference cell in every mode — the adaptive path's
         # mixed "key" is an internal join artifact, not a lineage key
-        cand = cand.withColumn("cell", grid.cell_of_point_col(rx, ry))
+        cand = cand.withColumn("cell", ref_point_cell_col(
+            grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
+        ))
     out_cols = ["a_doc_id", "b_doc_id"] + (["cell"] if keep_cell else [])
     # re-attach ring payloads by id for the bbox SURVIVORS only — two
     # key joins over the (much smaller) surviving candidate set instead

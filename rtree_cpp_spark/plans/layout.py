@@ -571,7 +571,7 @@ def write_bucketed_cover(
     and the shuffle paid once at write time and amortized over every
     subsequent join (SURVEY.md §4.2; the persistent-index analog of the
     reference's saved R-tree)."""
-    from rtree_cpp_spark.operators.cover import with_cover_cells
+    from rtree_cpp_spark.operators.cover import side_cover
 
     spark = rects.sparkSession
     # A killed session can leave the managed-table directory on disk
@@ -583,15 +583,8 @@ def write_bucketed_cover(
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     fs.delete(hadoop.Path(f"{warehouse}/{table_name.lower()}"), True)
 
-    sel = rects.select(
-        F.col("doc_id").alias(f"{prefix}doc_id"),
-        F.col("min_x").alias(f"{prefix}min_x"),
-        F.col("min_y").alias(f"{prefix}min_y"),
-        F.col("max_x").alias(f"{prefix}max_x"),
-        F.col("max_y").alias(f"{prefix}max_y"),
-    )
     (
-        with_cover_cells(sel, grid, prefix=prefix)
+        side_cover(rects, grid, prefix)
         .write.mode("overwrite")
         .bucketBy(n_buckets, "cell")
         .sortBy("cell")

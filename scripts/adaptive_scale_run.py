@@ -10,8 +10,8 @@ on clustered data:
 
 - candidate pairs BEFORE the exact refine, plain/salted key (identical
   counts — salting only re-keys) vs adaptive mixed keys;
-- end-to-end walls for spatial_join (AQE only), spatial_join_salted,
-  and spatial_join_adaptive on the same input;
+- end-to-end walls for spatial_join plain (AQE only), salted and
+  adaptive on the same input;
 - identity: all three variants' outputs are verified equal (counts +
   anti-joins) before any wall is published.
 
@@ -39,14 +39,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from rtree_cpp_spark.functions.cells import Grid  # noqa: E402
-from rtree_cpp_spark.operators.spatial_join import (  # noqa: E402
-    _a_side,
-    _adaptive_candidates,
-    _b_side,
-    spatial_join,
-    spatial_join_adaptive,
-    spatial_join_salted,
+from rtree_cpp_spark.operators.cover import (  # noqa: E402
+    cell_candidates,
+    hot_census,
+    side_cover,
 )
+from rtree_cpp_spark.operators.spatial_join import spatial_join  # noqa: E402
 
 GRID = Grid(6)  # 64x64 cells of 16.0 over [0,1024)^2 (gate grid)
 CLUSTERS = ((200.0, 200.0), (600.0, 500.0), (850.0, 850.0))
@@ -115,17 +113,19 @@ def main() -> None:
 
     # candidate pairs pre-refine: the structural quantity subdivision
     # shrinks and salting cannot (salting re-keys the SAME pairs)
-    plain_cand = _a_side(a, GRID).join(_b_side(b, GRID), "cell").count()
-    adapt_cand = _adaptive_candidates(
-        a, b, GRID, hot_threshold=hot_threshold, levels_finer=levels_finer
-    ).count()
+    a_cov, b_cov = side_cover(a, GRID, "a_"), side_cover(b, GRID, "b_")
+    plain_cand = cell_candidates(a_cov, b_cov, GRID, None)[0].count()
+    census = hot_census(a, GRID, hot_threshold)
+    adapt_cand = cell_candidates(
+        a_cov, b_cov, GRID, census, levels_finer=levels_finer
+    )[0].count()
 
     ops = {
         "plain": lambda: spatial_join(a, b, GRID),
-        "salted": lambda: spatial_join_salted(
+        "salted": lambda: spatial_join(
             a, b, GRID, hot_threshold=hot_threshold, n_salt=16
         ),
-        "adaptive": lambda: spatial_join_adaptive(
+        "adaptive": lambda: spatial_join(
             a, b, GRID, hot_threshold=hot_threshold, levels_finer=levels_finer
         ),
     }

@@ -42,12 +42,15 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
 from rtree_cpp_spark.functions.cells import Grid  # noqa: E402
-from rtree_cpp_spark.operators.cover import with_cover_cells  # noqa: E402
+from rtree_cpp_spark.operators.cover import (  # noqa: E402
+    cell_candidates,
+    hot_census,
+    side_cover,
+)
 from rtree_cpp_spark.operators.pip_join import octagons_from_rects, polygon_join  # noqa: E402
-from rtree_cpp_spark.operators.spatial_join import adaptive_rekey  # noqa: E402
 
 from adaptive_scale_run import synth_rects_clustered  # noqa: E402
 
@@ -67,21 +70,6 @@ def cpu_control() -> float:
         a = np.sqrt(a * a + 1.0) - 1.0
     assert a is not None
     return round(time.perf_counter() - t0, 3)
-
-
-def prep_cov(df, p: str):
-    """Cover-explode one octagon side with the polygon join's column
-    prefixes (for candidate-count probes only — the timed runs go
-    through polygon_join itself)."""
-    return with_cover_cells(
-        df.select(
-            F.col("doc_id").alias(f"{p}doc_id"),
-            F.col("min_x").alias(f"{p}min_x"), F.col("min_y").alias(f"{p}min_y"),
-            F.col("max_x").alias(f"{p}max_x"), F.col("max_y").alias(f"{p}max_y"),
-        ),
-        GRID,
-        prefix=p,
-    )
 
 
 def main() -> None:
@@ -163,19 +151,13 @@ def main() -> None:
     set_skew_aqe(True)
 
     # --- candidate-count probes (the structural story, untimed) ---
-    pa, pb = prep_cov(oa, "a_"), prep_cov(ob, "b_")
-    raw_plain = pa.join(pb, "cell").count()
-    hot = (
-        pa.groupBy("cell").agg(F.count("*").alias("_n"))
-        .where(F.col("_n") > hot_threshold)
-        .select("cell", F.lit(True).alias("_hot"))
-    )
-    n_hot = hot.count()
-    raw_adaptive = (
-        adaptive_rekey(pa, "a_", GRID, hot, levels_finer)
-        .join(adaptive_rekey(pb, "b_", GRID, hot, levels_finer), "key")
-        .count()
-    )
+    pa, pb = side_cover(oa, GRID, "a_"), side_cover(ob, GRID, "b_")
+    raw_plain = cell_candidates(pa, pb, GRID, None)[0].count()
+    census = hot_census(oa, GRID, hot_threshold)
+    n_hot = 0 if census is None else census.count()
+    raw_adaptive = cell_candidates(
+        pa, pb, GRID, census, levels_finer=levels_finer
+    )[0].count()
 
     # --- identity gate: every variant returns the plain rows ---
     base = variants["plain_aqe"][0]().localCheckpoint()

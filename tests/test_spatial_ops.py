@@ -7,13 +7,11 @@ from pyspark.sql import functions as F
 
 from oracle import brute
 from rtree_cpp_spark.functions.cells import Grid
+from rtree_cpp_spark.operators.cover import cell_candidates, hot_census, side_cover
 from rtree_cpp_spark.operators.knn import knn
+from rtree_cpp_spark.operators.pip_join import octagons_from_rects, polygon_join
 from rtree_cpp_spark.operators.range_query import range_count, range_query
-from rtree_cpp_spark.operators.spatial_join import (
-    spatial_join,
-    spatial_join_adaptive,
-    spatial_join_salted,
-)
+from rtree_cpp_spark.operators.spatial_join import spatial_join, spatial_join_salted
 from rtree_cpp_spark.operators.tiles import cover_tiles, primary_tiles
 from rtree_cpp_spark.sources import synth
 
@@ -83,7 +81,7 @@ def test_adaptive_join_equals_plain(
 ):
     # low threshold on the clustered fixture → many coarse cells actually
     # subdivide; output must be bit-identical to the brute join anyway
-    got = spatial_join_adaptive(
+    got = spatial_join(
         rects_a_df, rects_b_df, grid, hot_threshold=3, levels_finer=levels_finer
     )
     exp = brute.join_brute(rects_a_pdf, rects_b_pdf)
@@ -96,18 +94,23 @@ def test_adaptive_join_sampled_census_and_keep_cell(
     spark, rects_a_df, rects_b_df, rects_a_pdf, rects_b_pdf
 ):
     grid = Grid(6)
-    got = spatial_join_adaptive(
-        rects_a_df, rects_b_df, grid, hot_threshold=4, sample_fraction=0.5, keep_cell=True
+    got = spatial_join(
+        rects_a_df, rects_b_df, grid, hot_threshold=4, levels_finer=2,
+        sample_fraction=0.5, keep_cell=True,
     )
     gp = got.toPandas()
     exp = brute.join_brute(rects_a_pdf, rects_b_pdf)
     assert_same_rows(got.drop("cell"), exp)
     # keep_cell returns the COARSE reference cell — same lineage contract
     # as the other variants: recompute it from the pair's rects
-    a = rects_a_pdf.set_index("doc_id")
-    b = rects_b_pdf.set_index("doc_id")
-    import numpy as np
+    assert_coarse_ref_cells(gp, rects_a_pdf, rects_b_pdf, grid)
 
+
+def assert_coarse_ref_cells(gp, a_pdf, b_pdf, grid):
+    """``cell`` of every output pair is the coarse cell of its reference
+    point, recomputed from the pair's rects."""
+    a = a_pdf.set_index("doc_id")
+    b = b_pdf.set_index("doc_id")
     rx = np.maximum(
         a.loc[gp["a_doc_id"], "min_x"].to_numpy(np.float64),
         b.loc[gp["b_doc_id"], "min_x"].to_numpy(np.float64),
@@ -117,6 +120,61 @@ def test_adaptive_join_sampled_census_and_keep_cell(
         b.loc[gp["b_doc_id"], "min_y"].to_numpy(np.float64),
     )
     assert (gp["cell"].to_numpy() == grid.cell_of_point(rx, ry)).all()
+
+
+def test_job_path_salted_keep_cell(spark, rects_a_df, rects_b_df, rects_a_pdf, rects_b_pdf):
+    # what jobs/run_join.py runs: census salting with hot cells present
+    # and keep_cell=True, for rects and for octagons with the Arrow kernel
+    grid = Grid(6)
+    assert hot_census(rects_a_df, grid, 5) is not None  # the fixture has hot cells
+    rect = spatial_join_salted(
+        rects_a_df, rects_b_df, grid, hot_threshold=5, n_salt=4, keep_cell=True
+    )
+    assert_same_rows(rect.drop("cell"), brute.join_brute(rects_a_pdf, rects_b_pdf))
+    assert_coarse_ref_cells(rect.toPandas(), rects_a_pdf, rects_b_pdf, grid)
+
+    oa, ob = octagons_from_rects(rects_a_df), octagons_from_rects(rects_b_df)
+    octagon = polygon_join(
+        oa, ob, grid, refine="kernel", hot_threshold=5, n_salt=4, keep_cell=True
+    )
+    assert_same_rows(octagon.drop("cell"), polygon_join(oa, ob, grid).toPandas())
+    gp = octagon.toPandas()
+    assert len(gp) > 0
+    assert_coarse_ref_cells(gp, rects_a_pdf, rects_b_pdf, grid)
+
+
+@pytest.mark.parametrize("geometry", ["rect", "octagon"])
+@pytest.mark.parametrize("mode", ["empty_census", "salted", "adaptive"])
+def test_candidate_generator_plan_shape(spark, rects_a_df, rects_b_df, geometry, mode):
+    # which branch of cell_candidates ran, read off the executed plan
+    import re
+
+    grid = Grid(6)
+    kw = {
+        "empty_census": {"hot_threshold": 10**9},
+        "salted": {"hot_threshold": 5, "n_salt": 4},
+        "adaptive": {"hot_threshold": 5, "levels_finer": 2},
+    }[mode]
+    if geometry == "rect":
+        df = spatial_join(rects_a_df, rects_b_df, grid, **kw)
+    else:
+        df = polygon_join(
+            octagons_from_rects(rects_a_df), octagons_from_rects(rects_b_df), grid, **kw
+        )
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    salt_join = re.search(r"Join \[cell#\d+L?, salt#\d+\], \[cell#\d+L?, salt#\d+\]", plan)
+    key_join = re.search(r"Join \[key#\d+L?\], \[key#\d+L?\]", plan)
+    if mode == "empty_census":
+        assert "salt#" not in plan and not key_join
+        assert "InMemoryTableScan" not in plan  # the census is never broadcast
+    elif mode == "salted":
+        assert salt_join and not key_join
+        assert "InMemoryTableScan" in plan
+    else:
+        assert key_join and "salt#" not in plan
+        assert "InMemoryTableScan" in plan
 
 
 def test_census_empty_fast_path_identity(
@@ -131,12 +189,10 @@ def test_census_empty_fast_path_identity(
         rects_a_df, rects_b_df, grid, hot_threshold=10**9, n_salt=4
     )
     assert_same_rows(salted, exp)
-    adaptive = spatial_join_adaptive(
+    adaptive = spatial_join(
         rects_a_df, rects_b_df, grid, hot_threshold=10**9, levels_finer=2, keep_cell=True
     )
     assert_same_rows(adaptive.drop("cell"), exp)
-
-    from rtree_cpp_spark.operators.pip_join import octagons_from_rects, polygon_join
 
     oa = octagons_from_rects(spark.createDataFrame(rects_a_pdf.iloc[:80]))
     ob = octagons_from_rects(spark.createDataFrame(rects_b_pdf.iloc[:80]))
@@ -152,14 +208,6 @@ def test_census_empty_fast_path_identity(
 def test_adaptive_join_reduces_hot_cell_candidates(spark):
     # one dense cluster inside a single coarse cell: subdivision must cut
     # the candidate (pre-refine) pair count, not merely re-shard it
-    import numpy as np
-
-    from rtree_cpp_spark.operators.spatial_join import (
-        _a_side,
-        _adaptive_candidates,
-        _b_side,
-    )
-
     rng = np.random.default_rng(7)
     grid = Grid(3)  # 8x8 cells of 128 over [0,1024)^2
     n = 400
@@ -177,16 +225,16 @@ def test_adaptive_join_reduces_hot_cell_candidates(spark):
 
     a_pdf, b_pdf = mk("a"), mk("b")
     a_df, b_df = spark.createDataFrame(a_pdf), spark.createDataFrame(b_pdf)
-    plain_cand = _a_side(a_df, grid).join(_b_side(b_df, grid), "cell").count()
+    a_cov, b_cov = side_cover(a_df, grid, "a_"), side_cover(b_df, grid, "b_")
+    plain_cand = cell_candidates(a_cov, b_cov, grid, None)[0].count()
     assert plain_cand == n * n  # the whole cluster lands in one coarse cell
-    adaptive_cand = _adaptive_candidates(
-        a_df, b_df, grid, hot_threshold=50, levels_finer=2
-    ).count()
+    census = hot_census(a_df, grid, hot_threshold=50)
+    adaptive_cand = cell_candidates(a_cov, b_cov, grid, census, levels_finer=2)[0].count()
     # 4^2 = 16-way subdivision of a locally-uniform cluster shrinks the
     # cross-product structurally (loose 4x bound to stay flake-free) —
     # salting would keep all n*n candidates and only re-shard them
     assert adaptive_cand < plain_cand / 4
-    got = spatial_join_adaptive(a_df, b_df, grid, hot_threshold=50, levels_finer=2)
+    got = spatial_join(a_df, b_df, grid, hot_threshold=50, levels_finer=2)
     exp = brute.join_brute(a_pdf, b_pdf)
     assert_same_rows(got, exp)
 
