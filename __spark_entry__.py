@@ -31,7 +31,7 @@ from rtree_cpp_spark.operators import (
     similarity,
     text_analysis,
 )
-from rtree_cpp_spark.operators.knn import idw_interpolate, knn, knn_join, knn_kernel
+from rtree_cpp_spark.operators.knn import idw_interpolate, knn, knn_join
 from rtree_cpp_spark.operators.pip_join import (
     octagons_from_rects,
     pip_join,
@@ -71,6 +71,7 @@ from rtree_cpp_spark.sources.rects import (
 )
 
 GRID = Grid(6)  # 64x64 cells of 16.0 over [0,1024)^2 (gate resolution)
+SHINGLE_N = 3  # text_shingle_dup's word n-gram length, entry and oracle
 
 # Process-lifetime scratch root for gate queries that need disk state
 # (layout copies, stream output, checkpoints).  One mkdtemp per process,
@@ -179,12 +180,12 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             hot_threshold=2000, levels_finer=2, sample_fraction=0.25,
         ),
         "spatial_knn": lambda s, d: knn(rects.rects_a(s, d), rects.queries_knn(s, d), GRID),
-        "spatial_knn_kernel": lambda s, d: knn_kernel(rects.rects_a(s, d), rects.queries_knn(s, d), GRID),
+        "spatial_knn_kernel": lambda s, d: knn(
+            rects.rects_a(s, d), rects.queries_knn(s, d), GRID, ranker="kernel"
+        ),
         "spatial_knn_join": lambda s, d: knn_join(
             rects.rects_a_subset(s, d), rects.rects_b(s, d), GRID, k=5
         ),
-        "spatial_knn_join_sharded": lambda s, d: _knn_join_sharded(s, d),
-        "spatial_knn_join_frontier": lambda s, d: _knn_join_frontier(s, d),
         "spatial_contains": lambda s, d: contains_query(
             rects.rects_a(s, d), rects.queries_range(s, d), GRID
         ),
@@ -258,7 +259,7 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_jaccard": lambda s, d: dedup.jaccard_pairs(_docs(s, d), threshold=0.5),
         "dedup_components": lambda s, d: dedup.duplicate_components(_docs(s, d)),
         "dedup_simhash_pairs": lambda s, d: dedup.simhash_pairs(_docs(s, d)),
-        "text_shingle_dup": lambda s, d: dedup.shingle_dup_stats(_docs(s, d)),
+        "text_shingle_dup": lambda s, d: dedup.shingle_dup_stats(_docs(s, d), n=SHINGLE_N),
         "pipeline_curation": lambda s, d: _curate(s, d),
         # --- similarity search ---
         "ann_cosine_topk": lambda s, d: similarity.cosine_topk(_embeddings(s, d), n_queries=20, k=5),
@@ -448,17 +449,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "agg_pricing_summary": f["agg_pricing_summary"],
         "agg_top_orders": f["agg_top_orders"],
         "spatial_knn": _merged(f, "spatial_knn", "spatial_knn_kernel", "variant", "window", "kernel"),
-        # three execution regimes, one rule: batched (driver-resident
-        # query batch), sharded (bounded per-shard batches), frontier
-        # (fully distributed — the 10^12-doc path, no driver residency)
-        "spatial_knn_join": _tagged_union(
-            f,
-            [
-                ("spatial_knn_join", "batched"),
-                ("spatial_knn_join_sharded", "sharded"),
-                ("spatial_knn_join_frontier", "frontier"),
-            ],
-        ),
+        "spatial_knn_join": f["spatial_knn_join"],
         # all three join strategies value-gated through one row: plain
         # (AQE-only skew defense), salted (explicit census salting), and
         # bucketed (zero-exchange SMJ over cover-bucketed tables)
@@ -586,28 +577,6 @@ def _interleaved_join_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pairs.join(sig_a, "a_doc_id").join(sig_b, "b_doc_id").select(
         "a_doc_id", "b_doc_id", "a_sig", "b_sig"
-    )
-
-
-def _knn_join_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics (and oracle) as spatial_knn_join, executed through
-    the A-sharded driver loop — proves sharding is result-invariant at
-    gate scale too."""
-    from rtree_cpp_spark.operators.knn import knn_join_sharded
-
-    return knn_join_sharded(
-        rects.rects_a_subset(spark, sf_dir), rects.rects_b(spark, sf_dir), GRID, k=5, n_shards=3
-    )
-
-
-def _knn_join_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics (and oracle) as spatial_knn_join, executed with the
-    query frontier kept distributed (no driver-resident batch) — proves
-    the 10^12-doc regime's execution shape is result-invariant too."""
-    from rtree_cpp_spark.operators.knn import knn_join_frontier
-
-    return knn_join_frontier(
-        rects.rects_a_subset(spark, sf_dir), rects.rects_b(spark, sf_dir), GRID, k=5
     )
 
 
@@ -1156,12 +1125,13 @@ def oracle_sql() -> dict[str, str]:
     )
     # cross-document duplicated-shingle stats (operators/dedup.py
     # shingle_dup_stats): distinct postings → min!=max cross-doc test →
-    # per-doc counts; same 3-gram construction as the MinHash CTEs
+    # per-doc counts; the MinHash CTEs' n-gram construction at SHINGLE_N
+    shingle_sql = " || ' ' || ".join(f"t[i+{j}]" for j in range(SHINGLE_N))
     shingle_dup_sql = (
         "WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents "
-        "WHERE len(string_split(text, ' ')) >= 3), "
-        "sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle "
-        "FROM (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks)), "
+        f"WHERE len(string_split(text, ' ')) >= {SHINGLE_N}), "
+        f"sh AS (SELECT DISTINCT doc_id, {shingle_sql} AS shingle "
+        f"FROM (SELECT doc_id, t, unnest(generate_series(1, len(t)-{SHINGLE_N - 1})) AS i FROM toks)), "
         "cross_dup AS (SELECT shingle, MIN(doc_id) <> MAX(doc_id) AS is_dup "
         "FROM sh GROUP BY shingle), "
         "per_doc AS (SELECT s.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles, "
@@ -1377,13 +1347,7 @@ def oracle_sql() -> dict[str, str]:
              (octagon_join_sql, "octagon_adaptive")]
         ),
         "spatial_knn": _tag2(knn_sql, "window", knn_sql, "kernel"),
-        "spatial_knn_join": _tagn(
-            [
-                (knn_join_sql, "batched"),
-                (knn_join_sql, "sharded"),
-                (knn_join_sql, "frontier"),
-            ]
-        ),
+        "spatial_knn_join": knn_join_sql,
         "spatial_idw": (
             f"WITH r AS ({RECTS_A_SQL}), q AS ({QUERIES_KNN_SQL}), "
             f"v AS ({rects.RECT_VALUES_SQL}), "

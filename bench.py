@@ -136,7 +136,6 @@ def main() -> None:
         "spatial_knn",
         "spatial_knn_kernel",
         "spatial_knn_join",
-        "spatial_knn_join_frontier",
         "spatial_contains",
         "spatial_idw",
         "spatial_pip",

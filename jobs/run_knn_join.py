@@ -4,17 +4,11 @@ composed with the K1 kernel, RTreeBulkLoad.cpp:238-302).
 
     spark-submit --py-files engine.zip jobs/run_knn_join.py \
         --input-a <docs_a> --input-b <docs_b> --k 5 \
-        --regime frontier \
         --output /data/out/knn_join --manifest /data/out/manifest
 
-``--regime`` picks the execution shape (results identical across all
-three — gate- and pytest-verified; BENCH/knn_scale.json measures them):
-
-- ``batched``   the whole A batch driver-resident (reference-style
-                query-file contract; |A| up to ~10^5),
-- ``sharded``   bounded per-shard driver batches (``--n-shards``),
-- ``frontier``  the frontier stays a DataFrame — no driver residency,
-                the 10^12-doc default.
+A is the query side and is never collected to the driver: its open
+queries stay a DataFrame through the shared disk-doubling rounds of
+``operators.knn.knn``.
 
 Output: (query_id=a_doc_id, doc_id=b_doc_id, sq_dist, rank),
 partitioned by the A centroid's coarse cell.
@@ -31,18 +25,14 @@ from jobs._common import base_parser, build_session, coarse_cell_col, finish, lo
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
-from rtree_cpp_spark.operators.knn import knn_join, knn_join_frontier, knn_join_sharded
+from rtree_cpp_spark.operators.knn import knn_join
 
 
 def main() -> None:
-    p = base_parser("kNN join (A centroids vs B rects, three execution regimes)")
+    p = base_parser("kNN join (A centroids vs B rects)")
     p.add_argument("--input-a", required=True, help="query-side rect table")
     p.add_argument("--input-b", required=True, help="data-side rect table")
     p.add_argument("--k", type=int, default=5)
-    p.add_argument("--regime", choices=["batched", "sharded", "frontier"],
-                   default="frontier")
-    p.add_argument("--n-shards", type=int, default=8,
-                   help="sharded regime only: bounds the per-shard driver batch")
     args = p.parse_args()
     if args.k <= 0:
         p.error("k must be > 0")  # mirrors src/Main.cpp:212-215
@@ -51,12 +41,7 @@ def main() -> None:
     grid = Grid(args.grid_level, args.extent)
     a = load_rects(spark, args.input_a, args.format)
     b = load_rects(spark, args.input_b, args.format)
-    if args.regime == "batched":
-        result = knn_join(a, b, grid, k=args.k)
-    elif args.regime == "sharded":
-        result = knn_join_sharded(a, b, grid, k=args.k, n_shards=args.n_shards)
-    else:
-        result = knn_join_frontier(a, b, grid, k=args.k)
+    result = knn_join(a, b, grid, k=args.k)
     qcell = a.select(
         F.col("doc_id").alias("query_id"),
         grid.cell_of_point_col(
@@ -64,9 +49,9 @@ def main() -> None:
             (F.col("min_y") + F.col("max_y")) / F.lit(2.0),
         ).alias("qcell"),
     )
-    # NO broadcast hint: qcell is O(|A|) — at the frontier regime's
-    # target scale it is a fact table, not a dim; AQE may still
-    # broadcast it when A is actually small
+    # NO broadcast hint: qcell is O(|A|) — at the target scale it is
+    # a fact table, not a dim; AQE may still broadcast it when A is
+    # actually small
     out = result.join(qcell, "query_id").withColumn(
         "part", coarse_cell_col(grid, args.coarse_level, F.col("qcell"))
     ).drop("qcell")

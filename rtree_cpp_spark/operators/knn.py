@@ -1,19 +1,21 @@
 """Exact k-nearest-neighbors — reference K1, best-first search at
 src/rtree/builders/RTreeBulkLoad.cpp:238-302.
 
-Distributed re-expression (SURVEY.md K1): **batched cell-disk doubling**.
-All queries advance together; the driver loop iterates over *rounds*
-(O(log grid)), never over queries or data rows:
+Distributed re-expression (SURVEY.md K1): **cell-disk doubling over a
+query frontier**.  The open queries are a DataFrame, never collected to
+the driver, and all of them advance together; the driver loop iterates
+over *rounds* (O(log grid)), never over queries or data rows:
 
     round(ρ): every open query explodes to its Chebyshev-disk cells
-              (radius ρ, JVM `sequence` explode) → broadcast-join against
-              the cover-exploded data → exact squared distance (double) →
-              window rank (sq_dist, doc_id) → per-query stats.
+              (radius ρ, JVM `sequence` explode) → join against the
+              cover-exploded data → dedup → exact squared distance
+              (double) → rank (sq_dist, doc_id) → stop rule as columns.
     stop(q):  k candidates found AND k-th sq_dist <= d_out², where d_out
               is the exact distance from the query point to the boundary
               of the gathered square (sides at the domain edge count as
               +inf — nothing lives beyond).  Any rect outside the square
-              is farther than d_out, so the top-k is provably exact.
+              is farther than d_out, so the top-k is provably exact.  A
+              query whose square covers the whole domain stops too.
 
 Ties at the k-th distance break deterministically by ``doc_id`` —
 documented deviation from the reference's heap-order ties (and its
@@ -24,18 +26,19 @@ float32; on the float32-exact fixture lattice the two agree).
 
 from __future__ import annotations
 
-import math
+from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from rtree_cpp_spark.functions.cells import Grid
 from rtree_cpp_spark.functions.geometry import sq_dist_col
 from rtree_cpp_spark.operators.cover import with_cover_cells
 
-KNN_SCHEMA = "query_id string, doc_id string, sq_dist double, rank int"
+KNN_COLS = ["query_id", "doc_id", "sq_dist", "rank"]
 
 
 def _topk_kernel(pdf):
@@ -46,21 +49,20 @@ def _topk_kernel(pdf):
     (RTreeBulkLoad.cpp:278-295) with the documented deterministic
     tie-break (sq_dist, doc_id) — a lexicographic partial sort keeps
     exactly the k best candidates and discards the rest, bounding
-    per-query memory to the candidate set of the gathered disk."""
-    import pandas as pd  # local: executors import lazily
+    per-query memory to the candidate set of the gathered disk.  The
+    query's own columns ride through for the stop rule."""
+    order = np.lexsort((pdf["doc_id"].to_numpy(), pdf["sq_dist"].to_numpy()))
+    top = pdf.iloc[order[: int(pdf["k"].iat[0])]]
+    return top.assign(rank=np.arange(1, len(top) + 1, dtype=np.int32))
 
-    k = int(pdf["k"].iat[0])
-    d = pdf["sq_dist"].to_numpy()
-    ids = pdf["doc_id"].to_numpy()
-    order = np.lexsort((ids, d))[:k]
-    return pd.DataFrame(
-        {
-            "query_id": pdf["query_id"].iat[0],
-            "doc_id": ids[order],
-            "sq_dist": d[order],
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-        }
-    )
+
+def _rank(scored: DataFrame, ranker: str) -> DataFrame:
+    """Top k rows per query by (sq_dist, doc_id), numbered 1..k."""
+    if ranker == "window":
+        w = Window.partitionBy("query_id").orderBy("sq_dist", "doc_id")
+        return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= F.col("k"))
+    schema = StructType(scored.schema.fields + [StructField("rank", IntegerType())])
+    return scored.groupBy("query_id").applyInPandas(_topk_kernel, schema)
 
 
 def _disk_cells_df(qdf: DataFrame, grid: Grid) -> DataFrame:
@@ -78,18 +80,41 @@ def _disk_cells_df(qdf: DataFrame, grid: Grid) -> DataFrame:
     )
 
 
+def _stop_rule(grid: Grid) -> tuple[Column, Column]:
+    """The one stop rule, as columns: ``(full, done)``.
+
+    ``full`` (the gathered square covers the domain) reads only the
+    query columns; ``done`` also reads the query's ranked rows — their
+    count and k-th distance, over a window on ``query_id``."""
+    n, s = grid.n, grid.cell_size
+    rho, qcx, qcy, x, y = (F.col(c) for c in ("rho", "qcx", "qcy", "x", "y"))
+    full = (qcx - rho <= 0) & (qcx + rho >= n - 1) & (qcy - rho <= 0) & (qcy + rho >= n - 1)
+    inf = F.lit(float("inf"))
+    d_out = F.least(
+        F.when(qcx - rho > 0, x - (qcx - rho).cast("double") * s).otherwise(inf),
+        F.when(qcx + rho < n - 1, (qcx + rho + 1).cast("double") * s - x).otherwise(inf),
+        F.when(qcy - rho > 0, y - (qcy - rho).cast("double") * s).otherwise(inf),
+        F.when(qcy + rho < n - 1, (qcy + rho + 1).cast("double") * s - y).otherwise(inf),
+    )
+    per_query = Window.partitionBy("query_id")
+    found = F.count("*").over(per_query) >= F.col("k")
+    return full, full | (found & (F.max("sq_dist").over(per_query) <= d_out * d_out))
+
+
 def knn(
     data_rects: DataFrame,
     queries: DataFrame,
     grid: Grid,
-    initial_radius: int = 1,
     ranker: str = "window",
 ) -> DataFrame:
     """data_rects(doc_id, min_x..max_y) x queries(query_id, x, y, k)
     → (query_id, doc_id, sq_dist, rank), exact, rank 1..k ascending.
 
-    The query batch (like the reference's query file, src/Main.cpp:216)
-    is driver-resident; the DATA side is never collected.
+    Neither side is collected: the open queries stay a DataFrame (the
+    frontier).  Each round's ranked rows are materialized once
+    (``localCheckpoint``); a finished query's rows are a filter of that
+    checkpoint, and the next frontier is the open queries that are not
+    finished and not yet domain-wide, at twice the radius.
 
     ``ranker`` picks the per-query top-k strategy — identical results:
     - ``'window'``: JVM ``row_number`` over (sq_dist, doc_id) — whole
@@ -99,94 +124,48 @@ def knn(
     """
     if ranker not in ("window", "kernel"):
         raise ValueError(f"ranker must be 'window' or 'kernel', got {ranker!r}")
-    import pandas as pd
-
-    spark = data_rects.sparkSession
+    full, done = _stop_rule(grid)
     d = with_cover_cells(data_rects, grid).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        qp = queries.select("query_id", "x", "y", "k").toPandas()
-        if len(qp) == 0:
-            return spark.createDataFrame([], KNN_SCHEMA)
-        qp["qcx"] = grid.cx_of(qp["x"].to_numpy())
-        qp["qcy"] = grid.cx_of(qp["y"].to_numpy())
-        qp["rho"] = initial_radius
-        open_mask = np.ones(len(qp), dtype=bool)
-        s, n = grid.cell_size, grid.n
-        # Finished queries' top-k rows come BACK TO THE DRIVER each round:
-        # they are <= k x |queries| rows (the query batch is driver-
-        # resident by design, like the reference's query file), so a
-        # round's candidate join executes exactly once — no lazy union
-        # that would replay every round's join at the final action.
-        parts: list[pd.DataFrame] = []
-
-        while open_mask.any():
-            sub = qp.loc[open_mask, ["query_id", "x", "y", "k", "qcx", "qcy", "rho"]]
-            qdf = spark.createDataFrame(sub)
-            cand = d.join(F.broadcast(_disk_cells_df(qdf, grid)), "cell").dropDuplicates(
-                ["query_id", "doc_id"]
+        frontier = (
+            queries.select(
+                "query_id",
+                F.col("x").cast("double").alias("x"),
+                F.col("y").cast("double").alias("y"),
+                "k",
             )
-            scored = cand.withColumn(
-                "sq_dist",
-                sq_dist_col(
-                    F.col("x").cast("double"), F.col("y").cast("double"),
-                    F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-                    F.col("max_x").cast("double"), F.col("max_y").cast("double"),
-                ),
+            .withColumn("qcx", grid.cx_col(F.col("x")))
+            .withColumn("qcy", grid.cx_col(F.col("y")))
+            .withColumn("rho", F.lit(1))
+            .localCheckpoint()
+        )
+        rect = [F.col(c).cast("double") for c in ("min_x", "min_y", "max_x", "max_y")]
+        parts: list[DataFrame] = []
+        while True:
+            # one exchange on query_id serves the dedup and the rank
+            scored = (
+                d.join(_disk_cells_df(frontier, grid), "cell")
+                .repartition("query_id")
+                .dropDuplicates(["query_id", "doc_id"])
+                .select(
+                    *frontier.columns, "doc_id", sq_dist_col(F.col("x"), F.col("y"), *rect).alias("sq_dist")
+                )
             )
-            if ranker == "window":
-                w = Window.partitionBy("query_id").orderBy("sq_dist", "doc_id")
-                ranked = (
-                    scored.withColumn("rank", F.row_number().over(w))
-                    .where(F.col("rank") <= F.col("k"))
-                    .select("query_id", "doc_id", "sq_dist", "rank")
-                )
-            else:
-                ranked = (
-                    scored.select("query_id", "doc_id", "sq_dist", "k")
-                    .groupBy("query_id")
-                    .applyInPandas(_topk_kernel, KNN_SCHEMA)
-                )
-            # ONE action per round: the ranked top-k is small, and both
-            # the stop-rule stats and the finished results come from it.
-            rank_pdf = ranked.toPandas()
-            grouped = rank_pdf.groupby("query_id")["sq_dist"]
-            cnts = grouped.size().to_dict()
-            kths = grouped.max().to_dict()
-            done_ids = []
-            for i in np.flatnonzero(open_mask):
-                qid = qp["query_id"].iat[i]
-                rho = int(qp["rho"].iat[i])
-                qcx, qcy = int(qp["qcx"].iat[i]), int(qp["qcy"].iat[i])
-                x, y, k = float(qp["x"].iat[i]), float(qp["y"].iat[i]), int(qp["k"].iat[i])
-                full = qcx - rho <= 0 and qcx + rho >= n - 1 and qcy - rho <= 0 and qcy + rho >= n - 1
-                cnt, kth = cnts.get(qid, 0), kths.get(qid, math.inf)
-                d_out = min(
-                    (x - (qcx - rho) * s) if qcx - rho > 0 else math.inf,
-                    (((qcx + rho + 1) * s) - x) if qcx + rho < n - 1 else math.inf,
-                    (y - (qcy - rho) * s) if qcy - rho > 0 else math.inf,
-                    (((qcy + rho + 1) * s) - y) if qcy + rho < n - 1 else math.inf,
-                )
-                if full or (cnt >= k and kth <= d_out * d_out):
-                    done_ids.append(qid)
-                    open_mask[i] = False
-                else:
-                    qp.loc[qp.index[i], "rho"] = rho * 2
-            if done_ids:
-                parts.append(rank_pdf[rank_pdf["query_id"].isin(done_ids)])
-
-        if not parts:
-            return spark.createDataFrame([], KNN_SCHEMA)
-        return spark.createDataFrame(pd.concat(parts, ignore_index=True), KNN_SCHEMA)
+            ranked = _rank(scored, ranker).select(*KNN_COLS, done.alias("_done")).localCheckpoint()
+            finished = ranked.where(F.col("_done"))
+            parts.append(finished.select(*KNN_COLS))
+            # a finished query has at least one ranked row: rank 1 is its id once
+            done_ids = finished.where(F.col("rank") == 1).select("query_id")
+            frontier = (
+                frontier.join(done_ids, "query_id", "left_anti")
+                .where(~full)
+                .withColumn("rho", F.col("rho") * 2)
+                .localCheckpoint()
+            )
+            if frontier.isEmpty():
+                return reduce(DataFrame.unionByName, parts)
     finally:
         d.unpersist(blocking=False)
-
-
-def knn_kernel(
-    data_rects: DataFrame, queries: DataFrame, grid: Grid, initial_radius: int = 1
-) -> DataFrame:
-    """kNN with the applyInPandas bounded-priority-queue ranker
-    (north_star shape); results identical to :func:`knn`."""
-    return knn(data_rects, queries, grid, initial_radius, ranker="kernel")
 
 
 def knn_join(
@@ -194,7 +173,6 @@ def knn_join(
     b_rects: DataFrame,
     grid: Grid,
     k: int,
-    initial_radius: int = 1,
     ranker: str = "window",
 ) -> DataFrame:
     """kNN JOIN: for each A doc, its k nearest B docs by squared
@@ -202,168 +180,19 @@ def knn_join(
     sq_dist, rank).
 
     Composes the reference's centroid rule (a query rect collapses to
-    its center, src/Main.cpp:126-129) with the batched disk-doubling
-    kernel — A plays the query file, B the dataset.  The A batch is
-    collected to the driver like any query batch; suitable for the
-    reference-style regimes (|A| up to ~10^5 driver-resident queries);
-    beyond that, shard A and run batches through the same kernel."""
+    its center, src/Main.cpp:126-129) with :func:`knn` — A plays the
+    query file, B the dataset; A is never collected."""
     centroids = a_rects.select(
         F.col("doc_id").alias("query_id"),
         ((F.col("min_x") + F.col("max_x")) / F.lit(2.0)).alias("x"),
         ((F.col("min_y") + F.col("max_y")) / F.lit(2.0)).alias("y"),
         F.lit(k).alias("k"),
     )
-    return knn(b_rects, centroids, grid, initial_radius, ranker)
+    return knn(b_rects, centroids, grid, ranker)
 
 
-def knn_join_sharded(
-    a_rects: DataFrame,
-    b_rects: DataFrame,
-    grid: Grid,
-    k: int,
-    n_shards: int = 4,
-    initial_radius: int = 1,
-    ranker: str = "window",
-) -> DataFrame:
-    """kNN join for A sets too large for one driver-resident query batch:
-    deterministic hash-sharding of A (pmod(xxhash64(doc_id), n_shards)),
-    each shard through the same disk-doubling kernel, results unioned.
-
-    kNN join is embarrassingly parallel in A — shards never interact —
-    so sharding changes scheduling only, never results (pytest asserts
-    shard-count invariance).  The per-shard driver residency is the same
-    contract as the reference's query file; n_shards bounds it."""
-    if n_shards <= 0:
-        raise ValueError(f"n_shards must be positive, got {n_shards}")
-    # materialize A once: the shard filter evaluates the plan once per
-    # shard, and a nondeterministic source (sample/unordered limit)
-    # would otherwise break the shards-partition-A invariant
-    a_rects = a_rects.localCheckpoint()
-    shard = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_shards))
-    out = None
-    for s in range(n_shards):
-        part = knn_join(
-            a_rects.where(shard == s), b_rects, grid, k, initial_radius, ranker
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def knn_join_frontier(
-    a_rects: DataFrame,
-    b_rects: DataFrame,
-    grid: Grid,
-    k: int,
-    initial_radius: int = 1,
-) -> DataFrame:
-    """kNN join with the query FRONTIER kept distributed — the 100 TB
-    path past both driver residency and the sequential shard loop.
-
-    :func:`knn` (and the per-shard loop of :func:`knn_join_sharded`)
-    holds the query batch in driver pandas, so wall grows linearly in
-    n_shards: shard i's disk-doubling rounds finish before shard i+1
-    starts, even on an idle cluster.  Here ALL queries advance through
-    the SAME O(log grid) rounds as one DataFrame:
-
-        round(ρ): open frontier explodes to its disk cells (JVM
-                  ``sequence``) → ONE join against the cover-exploded
-                  data → window top-k (materialized once per round via
-                  localCheckpoint) → per-query (count, k-th distance)
-                  aggregate joined back to the frontier;
-        stop(q):  the exact same rule as :func:`knn` — full-domain
-                  coverage OR (k found AND k-th sq_dist <= d_out²) —
-                  evaluated as COLUMNS, never on the driver.
-
-    The only driver-side value per round is the open-query count; the
-    arithmetic (float64 sq_dist, (sq_dist, doc_id) ties, d_out from the
-    gathered-square boundary with domain edges at +inf) is identical to
-    :func:`knn`, so results equal :func:`knn_join` row-for-row
-    (pytest-asserted).  Finished queries' top-k rows are checkpointed
-    per round (each small: <= k rows/query) and unioned at the end —
-    no round's candidate join is ever replayed."""
-    spark = a_rects.sparkSession
-    n, s = grid.n, grid.cell_size
-    d = with_cover_cells(b_rects, grid).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        frontier = (
-            a_rects.select(
-                F.col("doc_id").alias("query_id"),
-                ((F.col("min_x") + F.col("max_x")) / F.lit(2.0)).cast("double").alias("x"),
-                ((F.col("min_y") + F.col("max_y")) / F.lit(2.0)).cast("double").alias("y"),
-                F.lit(k).alias("k"),
-            )
-            .withColumn("qcx", grid.cx_col(F.col("x")))
-            .withColumn("qcy", grid.cx_col(F.col("y")))
-            .withColumn("rho", F.lit(initial_radius))
-            .localCheckpoint()
-        )
-        frontier_cols = ["query_id", "x", "y", "k", "qcx", "qcy", "rho"]
-        parts: list[DataFrame] = []
-        while frontier.count() > 0:
-            cand = d.join(_disk_cells_df(frontier, grid), "cell").dropDuplicates(
-                ["query_id", "doc_id"]
-            )
-            scored = cand.withColumn(
-                "sq_dist",
-                sq_dist_col(
-                    F.col("x"), F.col("y"),
-                    F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-                    F.col("max_x").cast("double"), F.col("max_y").cast("double"),
-                ),
-            )
-            w = Window.partitionBy("query_id").orderBy("sq_dist", "doc_id")
-            # materialize the round's top-k ONCE: the stop-rule stats and
-            # the finished-query results both read this checkpoint
-            ranked = (
-                scored.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= F.col("k"))
-                .select("query_id", "doc_id", "sq_dist", "rank")
-                .localCheckpoint()
-            )
-            stats = ranked.groupBy("query_id").agg(
-                F.count("*").alias("_cnt"), F.max("sq_dist").alias("_kth")
-            )
-            rho, qcx, qcy = F.col("rho"), F.col("qcx"), F.col("qcy")
-            full = (
-                (qcx - rho <= 0) & (qcx + rho >= n - 1)
-                & (qcy - rho <= 0) & (qcy + rho >= n - 1)
-            )
-            inf = F.lit(float("inf"))
-            d_out = F.least(
-                F.when(qcx - rho > 0, F.col("x") - (qcx - rho).cast("double") * s).otherwise(inf),
-                F.when(qcx + rho < n - 1, (qcx + rho + 1).cast("double") * s - F.col("x")).otherwise(inf),
-                F.when(qcy - rho > 0, F.col("y") - (qcy - rho).cast("double") * s).otherwise(inf),
-                F.when(qcy + rho < n - 1, (qcy + rho + 1).cast("double") * s - F.col("y")).otherwise(inf),
-            )
-            # coalesce: a query with NO stats row (empty disk) must land
-            # in exactly one branch — NULL done would drop it from both
-            done = F.coalesce(
-                full | ((F.col("_cnt") >= F.col("k")) & (F.col("_kth") <= d_out * d_out)),
-                F.lit(False),
-            )
-            fr = (
-                frontier.join(stats, "query_id", "left")
-                .withColumn("_done", done)
-                .localCheckpoint()
-            )
-            parts.append(
-                ranked.join(fr.where(F.col("_done")).select("query_id"), "query_id")
-                .localCheckpoint()
-            )
-            frontier = (
-                fr.where(~F.col("_done"))
-                .withColumn("rho", F.col("rho") * 2)
-                .select(*frontier_cols)
-                .localCheckpoint()
-            )
-        if not parts:
-            return spark.createDataFrame([], KNN_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    finally:
-        d.unpersist(blocking=False)
+# the name the job benchmark imports
+knn_join_frontier = knn_join
 
 
 def idw_interpolate(

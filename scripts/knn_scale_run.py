@@ -1,33 +1,17 @@
 #!/usr/bin/env python
-"""kNN-join execution-regime scale evidence (VERDICT r3 task: the
-sequential per-shard loop's wall cost had to be measured, or the shard
-frontier batched — this script does both).
-
-Runs the SAME kNN join (|A| = 100k query rects, |B| = 1M data rects,
-k = 5) through the three execution regimes and reports wall + result
-checksums:
-
-- ``batched``   — knn_join: the whole A batch driver-resident (the
-                  reference-style query-file contract);
-- ``sharded-N`` — knn_join_sharded at n_shards in {2, 4, 8}: bounded
-                  per-shard driver batches, shards run SEQUENTIALLY —
-                  this is the wall-vs-shards curve;
-- ``frontier``  — knn_join_frontier: the frontier stays a DataFrame,
-                  every query advances through shared rounds, no
-                  driver residency.
+"""kNN-join scale evidence: the wall of one kNN join (|A| = 100k query
+rects, |B| = 1M data rects, k = 5) through ``operators.knn.knn_join``,
+with a result checksum.
 
 Inputs are deterministic functions of the row index on the 0.25
 lattice over [0,1024)^2 (parallelism-independent; same conventions as
-the gate's rect sources).  All regimes must produce IDENTICAL rows —
-the script fails loudly on any count/checksum divergence, so the perf
-numbers are only ever published for verified-equal outputs.
+the gate's rect sources), so the row count and checksum are comparable
+across runs and code changes.
 
-Prints one JSON line; curated results live in BENCH/BASELINE.md.
+Prints one JSON line and writes it to BENCH/knn_scale.json; curated
+results live in BENCH/BASELINE.md.
 Env: KNN_SCALE_A (default 100000), KNN_SCALE_B (default 1000000),
-     SPARK_GRAFT_CPUS (default 16),
-     KNN_SCALE_REGIMES (comma list to run a subset, e.g. "batched,frontier"
-     — partial runs skip the identity gate and the JSON artifact merges
-     into any existing BENCH/knn_scale.json walls).
+     SPARK_GRAFT_CPUS (default 16).
 """
 
 from __future__ import annotations
@@ -43,11 +27,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from rtree_cpp_spark.functions.cells import Grid  # noqa: E402
-from rtree_cpp_spark.operators.knn import (  # noqa: E402
-    knn_join,
-    knn_join_frontier,
-    knn_join_sharded,
-)
+from rtree_cpp_spark.operators.knn import knn_join  # noqa: E402
 
 GRID = Grid(6)  # 64x64 cells of 16.0 over [0,1024)^2 — the gate grid
 
@@ -70,8 +50,8 @@ def synth_rects(spark: SparkSession, n: int, prefix: str, spread: int):
 
 def checksum(df) -> tuple[int, int]:
     """(row_count, order-independent value checksum) over ALL output
-    columns — sq_dist included: every regime runs the same float64
-    arithmetic, so even the doubles must agree bit-for-bit."""
+    columns — sq_dist included: the float64 arithmetic is fixed, so
+    even the doubles must agree bit-for-bit across runs."""
     joined = F.concat_ws(
         "|",
         F.col("query_id"),
@@ -104,58 +84,19 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # materialize inputs once so every regime times the JOIN, not the gen
+    # materialize inputs once so the wall times the JOIN, not the gen
     a = synth_rects(spark, n_a, "qa", 11).localCheckpoint()
     b = synth_rects(spark, n_b, "db", 97).localCheckpoint()
 
-    regimes: list[tuple[str, object]] = [
-        ("batched", lambda: knn_join(a, b, GRID, k=5)),
-        ("sharded-2", lambda: knn_join_sharded(a, b, GRID, k=5, n_shards=2)),
-        ("sharded-4", lambda: knn_join_sharded(a, b, GRID, k=5, n_shards=4)),
-        ("sharded-8", lambda: knn_join_sharded(a, b, GRID, k=5, n_shards=8)),
-        ("frontier", lambda: knn_join_frontier(a, b, GRID, k=5)),
-    ]
-    subset = os.environ.get("KNN_SCALE_REGIMES")
-    if subset:
-        want = {s.strip() for s in subset.split(",")}
-        regimes = [r for r in regimes if r[0] in want]
-    walls: dict[str, float] = {}
-    sums: dict[str, tuple[int, int]] = {}
-    for name, make in regimes:
-        t0 = time.perf_counter()
-        sums[name] = checksum(make())
-        walls[name] = round(time.perf_counter() - t0, 2)
-        print(f"{name:<10} wall={walls[name]:>7.2f}s rows={sums[name][0]} "
-              f"checksum={sums[name][1]}", flush=True)
-
-    base = next(iter(sums.values()))
-    mismatches = [n for n, s in sums.items() if s != base]
-    outp = Path(__file__).resolve().parent.parent / "BENCH" / "knn_scale.json"
-    out = {
-        "n_a": n_a,
-        "n_b": n_b,
-        "k": 5,
-        "cpus": cpus,
-        "rows": base[0],
-        "walls_sec": walls,
-        "checksums": {n: s[1] for n, s in sums.items()},
-        "all_regimes_identical": not mismatches,
-        "mismatches": mismatches,
-    }
-    if subset and outp.exists():
-        prev = json.loads(outp.read_text())
-        if (prev.get("n_a"), prev.get("n_b"), prev.get("cpus")) == (n_a, n_b, cpus):
-            out["walls_sec"] = {**prev.get("walls_sec", {}), **walls}
-            out["checksums"] = {**prev.get("checksums", {}), **out["checksums"]}
-            allsums = out["checksums"]
-            first = next(iter(allsums.values()))
-            out["mismatches"] = [n for n, c in allsums.items() if c != first]
-            out["all_regimes_identical"] = not out["mismatches"]
+    t0 = time.perf_counter()
+    rows, check = checksum(knn_join(a, b, GRID, k=5))
+    wall = round(time.perf_counter() - t0, 2)
+    out = {"n_a": n_a, "n_b": n_b, "k": 5, "cpus": cpus, "rows": rows,
+           "wall_sec": wall, "checksum": check}
     print(json.dumps(out), flush=True)
+    outp = Path(__file__).resolve().parent.parent / "BENCH" / "knn_scale.json"
     outp.write_text(json.dumps(out) + "\n")
     spark.stop()
-    if mismatches:
-        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -78,7 +78,7 @@ def test_gate_surface_is_bounded_and_fully_oracled(spark):
     fine = entrymod.bench_queries()
     # every merged-away fine variant still exists for bench + tests
     for k in (
-        "spatial_knn_kernel", "spatial_knn_join_sharded", "spatial_join_salted",
+        "spatial_knn_kernel", "spatial_join_salted",
         "spatial_pip_strict", "tiles_primary", "tiles_cover", "ann_lsh_buckets",
         "spatial_join_bucketed",
     ):

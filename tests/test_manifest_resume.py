@@ -124,7 +124,7 @@ def test_run_dedup_job_end_to_end(spark, tmp_path, monkeypatch):
 
 
 def test_run_knn_join_job_frontier(spark, tmp_path, monkeypatch):
-    """run_knn_join wiring end-to-end (frontier regime): loaders, argv,
+    """run_knn_join wiring end-to-end: loaders, argv,
     partitioned write + manifest — output rows equal the direct
     operator's."""
     import sys as _sys
@@ -147,7 +147,7 @@ def test_run_knn_join_job_frontier(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         _sys, "argv",
         ["run_knn_join.py", "--input-a", src_a, "--input-b", src_b,
-         "--k", "3", "--regime", "frontier", "--output", out, "--manifest", man],
+         "--k", "3", "--output", out, "--manifest", man],
     )
     rkj.main()
     got = sorted(

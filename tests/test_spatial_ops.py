@@ -1,5 +1,7 @@
 """End-to-end golden tests: engine vs brute-force oracle (SURVEY.md §5)."""
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -326,12 +328,9 @@ def test_zonal_stats_vs_brute(spark, rects_a_df, rects_a_pdf):
     assert got["max_value"].tolist() == exp["max_value"].tolist()
 
 
-def test_knn_many_rounds_far_queries(spark, rects_a_pdf):
-    """Far-from-data query points force many disk-doubling rounds (the
-    data sits in a corner 1/32 the domain, queries in the opposite
-    corner).  Exactness must hold across all rounds — the regression
-    guard for the per-round driver-collect design (no round replay)."""
-    grid = Grid(6)
+def _far_from_data(rects_a_pdf):
+    """The data sits in a corner 1/32 of the domain, the queries in the
+    opposite corner: many disk-doubling rounds before any candidate."""
     pdf = rects_a_pdf.copy()
     for c in ("min_x", "min_y", "max_x", "max_y"):
         pdf[c] = pdf[c] / 32.0  # exact binary scaling; data now in [0, 33)^2
@@ -343,9 +342,44 @@ def test_knn_many_rounds_far_queries(spark, rects_a_pdf):
             "k": [3, 5, 1, 7, 64],
         }
     )
+    return Grid(6), pdf, qpdf
+
+
+def test_knn_many_rounds_far_queries(spark, rects_a_pdf):
+    """Far-from-data query points force many disk-doubling rounds.
+    Exactness must hold across all rounds — the regression guard for
+    the per-round checkpoint design (no round replay)."""
+    grid, pdf, qpdf = _far_from_data(rects_a_pdf)
     got = knn(spark.createDataFrame(pdf), spark.createDataFrame(qpdf), grid)
     exp = brute.knn_brute(pdf, qpdf, dtype=np.float64)
     assert_same_rows(got, exp)
+
+
+def test_knn_round_shape(spark, rects_a_pdf):
+    """Each round is one plan and 3 SQL executions (the ranked-rows
+    checkpoint, the next-frontier checkpoint and its emptiness check),
+    after one checkpoint of the query table; the rows are checked by
+    test_knn_many_rounds_far_queries."""
+    grid, pdf, qpdf = _far_from_data(rects_a_pdf)
+    # round r gathers radius 2**(r-1); no query has a candidate until
+    # its disk reaches the data's highest cell, and the first radius
+    # that does (64) already covers the whole 64-cell domain, so every
+    # query stops in that round
+    data_hi = int(grid.cx_of(pdf[["max_x", "max_y"]].to_numpy()).max())
+    reach = max(
+        max(int(grid.cx_of(x)), int(grid.cx_of(y))) - data_hi for x, y in zip(qpdf["x"], qpdf["y"])
+    )
+    rounds = 1 + math.ceil(math.log2(reach))
+    assert rounds == 7 and 2 ** (rounds - 1) >= grid.n - 1
+    data, queries = spark.createDataFrame(pdf), spark.createDataFrame(qpdf)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = int(store.executionsCount())
+    knn(data, queries, grid)  # the rounds run inside the call
+    bus.waitUntilEmpty()
+    # exact, so the count pins the round count as well as the shape
+    assert int(store.executionsCount()) - before == 1 + 3 * rounds
 
 
 def test_knn_k_larger_than_dataset(spark, rects_a_df, rects_a_pdf):
@@ -403,13 +437,15 @@ def test_rasterize_vs_brute(spark, rects_a_df, rects_a_pdf):
 
 @pytest.mark.parametrize("grid", GRIDS, ids=lambda g: f"level{g.level}")
 def test_knn_kernel_equals_window(spark, rects_a_df, rects_a_pdf, grid):
-    from rtree_cpp_spark.operators.knn import knn_kernel
-
     qpdf = synth.synth_knn_queries_pdf(8, seed=44)
     qdf = spark.createDataFrame(qpdf)
-    got_kernel = knn_kernel(rects_a_df, qdf, grid)
+    got_kernel = knn(rects_a_df, qdf, grid, ranker="kernel")
     exp = brute.knn_brute(rects_a_pdf, qpdf, dtype=np.float64)
     assert_same_rows(got_kernel, exp)
+    # the multi-round layout through the kernel ranker too
+    far_grid, pdf, fqpdf = _far_from_data(rects_a_pdf)
+    got_far = knn(spark.createDataFrame(pdf), spark.createDataFrame(fqpdf), far_grid, ranker="kernel")
+    assert_same_rows(got_far, brute.knn_brute(pdf, fqpdf, dtype=np.float64))
 
 
 @pytest.mark.parametrize("boundary", ["closed", "open"])
@@ -948,42 +984,17 @@ def test_hot_cells_smoothing_vs_brute(spark, rects_a_df, rects_a_pdf):
         assert r.n_docs == counts[r.cell // grid.n][r.cell % grid.n]
 
 
-def test_knn_join_sharded_invariant(spark, rects_a_df, rects_b_df):
-    from rtree_cpp_spark.operators.knn import knn_join, knn_join_sharded
-
+@pytest.mark.parametrize("ranker", ["window", "kernel"])
+def test_knn_empty_sides(spark, rects_a_df, ranker):
+    # zero queries, or zero data rects: the round loop must terminate
+    # (no open query, or every query's disk grows to the whole domain)
+    # with no rows and the canonical kNN columns
     grid = Grid(6)
-    a = rects_a_df.limit(40)
-    base = sorted(map(tuple, knn_join(a, rects_b_df, grid, k=3).collect()))
-    for n_shards in (1, 3):
-        sharded = sorted(
-            map(tuple, knn_join_sharded(a, rects_b_df, grid, k=3, n_shards=n_shards).collect())
-        )
-        assert sharded == base
-    with pytest.raises(ValueError):
-        knn_join_sharded(a, rects_b_df, grid, k=3, n_shards=0)
-
-
-def test_knn_join_frontier_matches_batched(spark, rects_a_df, rects_b_df):
-    # the distributed-frontier regime (no driver-resident query batch)
-    # must be row-for-row identical to the batched kernel — same
-    # float64 arithmetic, same (sq_dist, doc_id) ties, same stop rule
-    from rtree_cpp_spark.operators.knn import knn_join, knn_join_frontier
-
-    grid = Grid(6)
-    a = rects_a_df.limit(40)
-    base = sorted(map(tuple, knn_join(a, rects_b_df, grid, k=3).collect()))
-    got = sorted(map(tuple, knn_join_frontier(a, rects_b_df, grid, k=3).collect()))
-    assert got == base and len(got) > 0
-
-
-def test_knn_join_frontier_empty_a(spark, rects_a_df, rects_b_df):
-    # zero open queries: the round loop must not spin, result is empty
-    # with the canonical kNN schema
-    from rtree_cpp_spark.operators.knn import knn_join_frontier
-
-    got = knn_join_frontier(rects_a_df.limit(0), rects_b_df, Grid(6), k=3)
-    assert got.count() == 0
-    assert got.columns == ["query_id", "doc_id", "sq_dist", "rank"]
+    queries = spark.createDataFrame(synth.synth_knn_queries_pdf(4, seed=44))
+    for data, q in ((rects_a_df, queries.limit(0)), (rects_a_df.limit(0), queries)):
+        got = knn(data, q, grid, ranker=ranker)
+        assert got.count() == 0
+        assert got.columns == ["query_id", "doc_id", "sq_dist", "rank"]
 
 
 def test_anti_range_query_complements_range_query(spark):
