@@ -172,13 +172,6 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             rects.rects_a(s, d), rects.rects_b(s, d), GRID,
             hot_threshold=2000, n_salt=8, sample_fraction=0.25,
         ),
-        # mixed-resolution adaptive cells: hot coarse cells subdivide
-        # 2 levels finer (STR's density-adaptive leaf extent, structural
-        # skew defense — candidate pairs SHRINK instead of re-sharding)
-        "spatial_join_adaptive": lambda s, d: spatial_join(
-            rects.rects_a(s, d), rects.rects_b(s, d), GRID,
-            hot_threshold=2000, levels_finer=2, sample_fraction=0.25,
-        ),
         "spatial_knn": lambda s, d: knn(rects.rects_a(s, d), rects.queries_knn(s, d), GRID),
         "spatial_knn_kernel": lambda s, d: knn(
             rects.rects_a(s, d), rects.queries_knn(s, d), GRID, ranker="kernel"
@@ -221,10 +214,10 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             refine="kernel",
             validate=False,
         ),
-        # polygon join with mixed-resolution adaptive cells — hot coarse
-        # cells subdivide 2 finer and the SAT refine sees the SHRUNKEN
-        # candidate set (the skew defense that pays when each candidate
-        # costs a polygon test; BENCH/polygon_skew.json)
+        # polygon join through the skew path — hot coarse cells
+        # subdivide and salt, and the SAT refine sees the SHRUNKEN
+        # candidate set (the defense that pays when each candidate
+        # costs a polygon test; scripts/polygon_skew_run.py)
         "spatial_join_octagon_adaptive": lambda s, d: polygon_join(
             octagons_from_rects(rects.rects_a(s, d)),
             octagons_from_rects(rects.rects_b(s, d)),
@@ -232,7 +225,6 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             refine="kernel",
             validate=False,
             hot_threshold=2000,
-            levels_finer=2,
             sample_fraction=0.25,
         ),
         "layout_occupancy": lambda s, d: occupancy_stats(rects.rects_a(s, d)),
@@ -450,15 +442,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "agg_top_orders": f["agg_top_orders"],
         "spatial_knn": _merged(f, "spatial_knn", "spatial_knn_kernel", "variant", "window", "kernel"),
         "spatial_knn_join": f["spatial_knn_join"],
-        # all three join strategies value-gated through one row: plain
-        # (AQE-only skew defense), salted (explicit census salting), and
-        # bucketed (zero-exchange SMJ over cover-bucketed tables)
+        # every join strategy value-gated through one row: plain (AQE-only
+        # skew defense), salted (the census skew path: hot cells subdivide
+        # and salt), bucketed (zero-exchange SMJ over cover-bucketed
+        # tables), and the octagon join on the plain and skew paths
         "spatial_join": _tagged_union(
             f,
             [
                 ("spatial_join", "plain"),
                 ("spatial_join_salted", "salted"),
-                ("spatial_join_adaptive", "adaptive"),
                 ("spatial_join_bucketed", "bucketed"),
                 ("spatial_join_octagon", "octagon"),
                 ("spatial_join_octagon_adaptive", "octagon_adaptive"),
@@ -1342,7 +1334,7 @@ def oracle_sql() -> dict[str, str]:
             "SELECT q.query_id, COALESCE(hits.c, 0) AS n_hits FROM q LEFT JOIN hits USING (query_id)"
         ),
         "spatial_join": _tagn(
-            [(join_sql, "plain"), (join_sql, "salted"), (join_sql, "adaptive"),
+            [(join_sql, "plain"), (join_sql, "salted"),
              (join_sql, "bucketed"), (octagon_join_sql, "octagon"),
              (octagon_join_sql, "octagon_adaptive")]
         ),

@@ -128,7 +128,6 @@ def main() -> None:
     qmap = entrymod.bench_queries()
     headline = [
         "spatial_join_salted",
-        "spatial_join_adaptive",
         "spatial_join_bucketed",
         "spatial_join_octagon",
         "spatial_join_octagon_adaptive",

@@ -10,9 +10,14 @@ Output: (a_doc_id, b_doc_id) partitioned by the reference-point coarse
 cell (`part`) with per-partition lineage rows in the manifest; re-running
 with the same --run-id skips completed partitions.
 
+Grid cells whose A-side cover count exceeds --hot-threshold take the
+join's one skew path: they subdivide two levels finer, and inside them
+A rows hash into --n-salt buckets while B rows fan out over all of them.
+Output rows are the same as the plain join's.
+
 ``--geometry octagon`` runs the convex-polygon SAT join (Arrow-kernel
-refine + the same census salting) on corner-cut octagons derived from
-the doc rects, with the same reference-cell output partitioning.
+refine + the same skew path) on corner-cut octagons derived from the
+doc rects, with the same reference-cell output partitioning.
 """
 
 from __future__ import annotations

@@ -10,8 +10,10 @@ Python in the hot path.
 The rect and polygon intersection joins share one candidate path:
 :func:`side_cover` explodes each side, :func:`hot_census` finds the
 cells dense enough to need a skew defense, and :func:`cell_candidates`
-meets the two sides by cell — plainly, salted, or at mixed resolution —
-and hands back the exactly-once rule the caller's refine must apply.
+meets the two sides by cell — plainly, or with hot cells subdivided and
+salted — and hands back the exactly-once rule the caller's refine must
+apply.  :func:`disk_cells` is the point-side explode of the kNN gather
+and the distance join.
 """
 
 from __future__ import annotations
@@ -20,6 +22,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
+
+FINE_LEVELS = 2  # hot coarse cells subdivide into 4^2 = 16 children
+
+
+def _explode_cells(
+    df: DataFrame, n: int, gx0: Column, gx1: Column, gy0: Column, gy1: Column
+) -> DataFrame:
+    """One row per cell of the inclusive index box [gx0, gx1] x [gy0, gy1]
+    of an ``n`` x ``n`` grid (column ``cell``)."""
+    return (
+        df.withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
+        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
+        .withColumn("cell", F.col("_gx") * F.lit(n) + F.col("_gy"))
+        .drop("_gx", "_gy")
+    )
 
 
 def with_cover_cells(df: DataFrame, grid: Grid, prefix: str = "") -> DataFrame:
@@ -30,15 +47,22 @@ def with_cover_cells(df: DataFrame, grid: Grid, prefix: str = "") -> DataFrame:
     they touch (closed-interval intersection, RTreeBulkLoad.h:159-163).
     """
     p = prefix
-    gx0 = grid.cx_col(F.col(f"{p}min_x"))
-    gx1 = grid.cx_col(F.col(f"{p}max_x"))
-    gy0 = grid.cx_col(F.col(f"{p}min_y"))
-    gy1 = grid.cx_col(F.col(f"{p}max_y"))
-    return (
-        df.withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .withColumn("cell", F.col("_gx") * F.lit(grid.n) + F.col("_gy"))
-        .drop("_gx", "_gy")
+    return _explode_cells(
+        df, grid.n,
+        grid.cx_col(F.col(f"{p}min_x")), grid.cx_col(F.col(f"{p}max_x")),
+        grid.cx_col(F.col(f"{p}min_y")), grid.cx_col(F.col(f"{p}max_y")),
+    )
+
+
+def disk_cells(df: DataFrame, grid: Grid) -> DataFrame:
+    """Explode each row to its Chebyshev disk: the cells within ``rho``
+    of cell (``qcx``, ``qcy``), clipped to the grid (column ``cell``)."""
+    n = grid.n
+    qcx, qcy, rho = F.col("qcx"), F.col("qcy"), F.col("rho")
+    return _explode_cells(
+        df, n,
+        F.greatest(F.lit(0), qcx - rho), F.least(F.lit(n - 1), qcx + rho),
+        F.greatest(F.lit(0), qcy - rho), F.least(F.lit(n - 1), qcy + rho),
     )
 
 
@@ -80,7 +104,7 @@ def hot_census(
     threshold scaled by the fraction instead of a second full
     cover-explode — sampling error only shifts which cells get the skew
     defense, never which pairs come out.  Persisted because the hot set
-    feeds BOTH sides' broadcast joins and Spark does not reuse the
+    feeds BOTH sides' broadcast rekeys and Spark does not reuse the
     exchange across them (measured: the census explode+agg executed
     twice, ~33% of the salted wall at sf0.1).  Tiny by construction, so
     never unpersisted.  The emptiness probe is a bounded planning action
@@ -103,76 +127,51 @@ def cell_candidates(
     grid: Grid,
     census: DataFrame | None,
     n_salt: int = 16,
-    levels_finer: int | None = None,
 ) -> tuple[DataFrame, Column]:
     """Meet two :func:`side_cover` sides by cell → ``(candidates, keep)``.
 
     ``keep`` is the exactly-once rule the refine must apply: the pair's
-    key is the cell of its reference point.  Three shapes:
+    key is the cell of its reference point.  Two shapes:
 
     - ``census is None``: the plain ``cell`` equi-join (AQE skew-join is
       the only skew defense) — no broadcast, no salt, no rekey;
-    - ``levels_finer=None``: explicit SALTING — in hot cells A rows hash
-      into ``n_salt`` buckets and B rows fan out over all of them, join
-      key ``(cell, salt)``.  Re-partitions the same candidate pairs;
-    - ``levels_finer=k``: MIXED-RESOLUTION cells — hot coarse cells
-      subdivide ``k`` levels finer (:func:`adaptive_rekey`, join key
-      ``key``) and ``keep`` is :func:`adaptive_keep_col`.  Pairs that
-      never share a fine cell are never generated, so the candidate
-      cross-product SHRINKS instead of being re-sharded — the
-      structural skew defense STR packing gets by construction (leaf
-      extent adapts to density, RTreeBulkLoad.cpp:29-60).
+    - otherwise the one skew path.  Hot coarse cells subdivide
+      ``FINE_LEVELS`` finer (:func:`adaptive_rekey`), so pairs that never
+      share a fine cell are never generated: the hot cross-product
+      SHRINKS, as STR packing's leaf extent adapts to density
+      (RTreeBulkLoad.cpp:29-60).  Inside hot cells A rows then hash into
+      ``n_salt`` buckets and B rows fan out over all of them (cold rows:
+      salt 0), so what subdivision cannot split — coincident rects —
+      still spreads over ``n_salt`` tasks, for B's hot rows x ``n_salt``.
+      Join key ``(key, salt)``; ``keep`` is :func:`adaptive_keep_col`.
     """
-    if census is not None and levels_finer is not None:
-        hot = census.select("cell", F.lit(True).alias("_hot"))
-        joined = adaptive_rekey(a, "a_", grid, hot, levels_finer).join(
-            adaptive_rekey(b, "b_", grid, hot, levels_finer), "key"
-        )
-        rx = F.greatest(F.col("a_min_x"), F.col("b_min_x"))
-        ry = F.greatest(F.col("a_min_y"), F.col("b_min_y"))
-        return joined, adaptive_keep_col(grid, levels_finer, rx, ry)
-    keep = F.col("cell") == ref_point_cell_col(
-        grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
-    )
     if census is None:
-        return a.join(b, "cell"), keep
-    hot = census.select("cell", F.lit(n_salt).alias("_n_salt"))
-    sa = a.join(F.broadcast(hot), "cell", "left").withColumn(
-        "salt",
-        F.when(F.col("_n_salt").isNull(), F.lit(0)).otherwise(
-            F.pmod(F.xxhash64("a_doc_id"), F.col("_n_salt")).cast("int")
-        ),
-    ).drop("_n_salt")
-    sb = (
-        b.join(F.broadcast(hot), "cell", "left")
-        .withColumn(
-            "salt",
-            F.explode(
-                F.when(F.col("_n_salt").isNull(), F.array(F.lit(0))).otherwise(
-                    F.sequence(F.lit(0), F.col("_n_salt") - 1)
-                )
-            ),
+        keep = F.col("cell") == ref_point_cell_col(
+            grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
         )
-        .drop("_n_salt")
+        return a.join(b, "cell"), keep
+    hot = census.select("cell", F.lit(True).alias("_hot"))
+    a_salt = F.array(F.pmod(F.xxhash64("a_doc_id"), F.lit(n_salt)).cast("int"))
+    b_salt = F.sequence(F.lit(0), F.lit(n_salt - 1))
+    joined = adaptive_rekey(a, "a_", grid, hot, a_salt).join(
+        adaptive_rekey(b, "b_", grid, hot, b_salt), ["key", "salt"]
     )
-    return sa.join(sb, ["cell", "salt"]), keep
+    rx = F.greatest(F.col("a_min_x"), F.col("b_min_x"))
+    ry = F.greatest(F.col("a_min_y"), F.col("b_min_y"))
+    return joined, adaptive_keep_col(grid, rx, ry)
 
 
-def adaptive_rekey(
-    df: DataFrame, p: str, grid: Grid, hot: DataFrame, levels_finer: int
-) -> DataFrame:
+def adaptive_rekey(df: DataFrame, p: str, grid: Grid, hot: DataFrame, salts: Column) -> DataFrame:
     """Mixed-resolution rekey: rows whose coarse ``cell`` is in the
     broadcast ``hot`` set (columns ``cell, _hot=true``) REPLACE it with
     the fine cells of their bbox cover CLIPPED to that coarse cell's
     children (cell-prefix arithmetic: children of (cx, cy) at +k levels
-    are [cx<<k, (cx<<k)+2^k-1] x same for y); every other row keeps the
-    coarse key.  Fine keys live at ``n^2 + fine_cell`` so the two key
-    spaces never collide.  ``p`` is the bbox column prefix
-    (``a_``/``b_``)."""
-    if levels_finer < 1:
-        raise ValueError(f"levels_finer must be >= 1, got {levels_finer}")
-    fine = Grid(grid.level + levels_finer, grid.extent)
-    m = 1 << levels_finer  # fine cells per coarse cell per axis
+    are [cx<<k, (cx<<k)+2^k-1] x same for y) and explode over the array
+    ``salts``; every other row keeps the coarse key and salt 0.  Fine
+    keys live at ``n^2 + fine_cell`` so the two key spaces never
+    collide.  ``p`` is the bbox column prefix (``a_``/``b_``)."""
+    fine = Grid(grid.level + FINE_LEVELS, grid.extent)
+    m = 1 << FINE_LEVELS  # fine cells per coarse cell per axis
     offset = grid.n * grid.n  # fine keys start above every coarse id
     ccy = F.pmod(F.col("cell"), F.lit(grid.n))
     ccx = ((F.col("cell") - ccy) / F.lit(grid.n)).cast("long")
@@ -198,17 +197,18 @@ def adaptive_rekey(
                 F.lit(offset) + F.col("_fx") * F.lit(fine.n) + F.col("_fy"),
             ).otherwise(F.col("cell")),
         )
+        .withColumn("salt", F.explode(F.when(hot_flag, salts).otherwise(F.array(F.lit(0)))))
         .drop("cell", "_hot", "_fx", "_fy")
     )
 
 
-def adaptive_keep_col(grid: Grid, levels_finer: int, rx, ry):
+def adaptive_keep_col(grid: Grid, rx: Column, ry: Column) -> Column:
     """Exactly-once rule for mixed-resolution candidates: a pair
     survives iff its key is the cell of its reference point (rx, ry)
     evaluated AT THE ROW'S OWN RESOLUTION.  A true pair's reference
     cell is hot or not — exactly one branch can ever match, so no pair
     is emitted twice across resolutions."""
-    fine = Grid(grid.level + levels_finer, grid.extent)
+    fine = Grid(grid.level + FINE_LEVELS, grid.extent)
     offset = grid.n * grid.n
     return F.when(
         F.col("key") >= offset,

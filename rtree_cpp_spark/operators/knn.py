@@ -36,7 +36,7 @@ from pyspark.storagelevel import StorageLevel
 
 from rtree_cpp_spark.functions.cells import Grid
 from rtree_cpp_spark.functions.geometry import sq_dist_col
-from rtree_cpp_spark.operators.cover import with_cover_cells
+from rtree_cpp_spark.operators.cover import disk_cells, with_cover_cells
 
 KNN_COLS = ["query_id", "doc_id", "sq_dist", "rank"]
 
@@ -63,21 +63,6 @@ def _rank(scored: DataFrame, ranker: str) -> DataFrame:
         return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= F.col("k"))
     schema = StructType(scored.schema.fields + [StructField("rank", IntegerType())])
     return scored.groupBy("query_id").applyInPandas(_topk_kernel, schema)
-
-
-def _disk_cells_df(qdf: DataFrame, grid: Grid) -> DataFrame:
-    """Explode (query_id, x, y, k, qcx, qcy, rho) to its disk cells."""
-    n = grid.n
-    gx0 = F.greatest(F.lit(0), F.col("qcx") - F.col("rho"))
-    gx1 = F.least(F.lit(n - 1), F.col("qcx") + F.col("rho"))
-    gy0 = F.greatest(F.lit(0), F.col("qcy") - F.col("rho"))
-    gy1 = F.least(F.lit(n - 1), F.col("qcy") + F.col("rho"))
-    return (
-        qdf.withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .withColumn("cell", F.col("_gx") * F.lit(n) + F.col("_gy"))
-        .drop("_gx", "_gy")
-    )
 
 
 def _stop_rule(grid: Grid) -> tuple[Column, Column]:
@@ -144,7 +129,7 @@ def knn(
         while True:
             # one exchange on query_id serves the dedup and the rank
             scored = (
-                d.join(_disk_cells_df(frontier, grid), "cell")
+                d.join(disk_cells(frontier, grid), "cell")
                 .repartition("query_id")
                 .dropDuplicates(["query_id", "doc_id"])
                 .select(

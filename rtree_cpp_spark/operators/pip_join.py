@@ -15,8 +15,8 @@ their cells; candidates meet by cell equi-join and the exact predicate
 refines.  Because the point's cell is unique, every true (point, rect)
 pair meets in exactly one cell — **no dedup pass at all** (cheaper than
 the rect-rect join's reference-point filter).  At 10^12 docs the join is
-a salted SMJ on ``cell`` with the same hot-cell defenses as the spatial
-join; a small point set broadcasts instead.
+an SMJ on ``cell`` with AQE skew-join as the backstop; a small point
+set broadcasts instead.
 """
 
 from __future__ import annotations
@@ -155,7 +155,7 @@ def polygon_pip_join(
     Plan (identical scale shape to pip_join):
       1. candidate generation — polygons cover-explode on their BBOX to
          grid cells; each point hashes to its ONE cell; candidates meet
-         by cell equi-join (salted SMJ at scale, exactly-once with no
+         by cell equi-join (SMJ at scale, exactly-once with no
          dedup because the point cell is unique);
       2. exact refine — every edge's cross product
          ``(x_j-x_i)*(py-y_i) - (y_j-y_i)*(px-x_i) >= 0`` must hold for
@@ -413,7 +413,6 @@ def polygon_join(
     refine: str = "expr",
     hot_threshold: int | None = None,
     n_salt: int = 16,
-    levels_finer: int | None = None,
     sample_fraction: float = 1.0,
     keep_cell: bool = False,
     validate: bool = True,
@@ -428,7 +427,7 @@ def polygon_join(
 
     Plan (same scale shape as the rect join):
       1. both sides cover-explode on their BBOX → cell equi-join
-         (salted SMJ at scale, AQE skew backstop);
+         (SMJ at scale, AQE skew backstop);
       2. exactly-once via the bbox reference-point rule fused into the
          filter — intersecting polygons have overlapping bboxes, so
          every true pair survives in exactly one cell, no distinct;
@@ -444,15 +443,11 @@ def polygon_join(
     join for 'expr' at 10^6 rows; scripts/polygon_scale_run.py tracks
     both).
 
-    ``hot_threshold`` enables the rect join's hot-cell skew defenses
-    from the shared generator (``operators.cover.cell_candidates``,
-    census over a seeded ``sample_fraction``): ``levels_finer=None``
-    salts hot cells ``n_salt`` ways, re-partitioning the same candidate
-    pairs; ``levels_finer=k`` subdivides them ``k`` levels finer, so the
-    candidate cross-product SHRINKS — the defense that actually pays for
-    polygons, where each surviving candidate costs a SAT refine.  Output
-    rows are identical either way (pytest-asserted on skewed fixtures;
-    measured at 10^6-row clustered scale in BENCH/polygon_skew.json).
+    ``hot_threshold``, ``n_salt`` and ``sample_fraction`` are the rect
+    join's skew defense (``operators.cover.cell_candidates``): hot cells
+    subdivide, so fewer candidates reach the SAT refine, and salt
+    inside.  Output rows are identical to the plain join (pytest; at
+    10^6-row clustered scale, scripts/polygon_skew_run.py).
 
     Precondition: rings have >= 3 vertices and ``len(xs) == len(ys)``.
     With ``validate=True`` (default) the check rides the ring-payload
@@ -466,8 +461,6 @@ def polygon_join(
     rings can never produce silent wrong answers in kernel mode."""
     if refine not in ("expr", "kernel"):
         raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
-    if levels_finer is not None and hot_threshold is None:
-        raise ValueError("levels_finer requires hot_threshold (the hot-cell census)")
     # ring validation attaches to the verts branch below (the only
     # branch that consumes ring payloads); the slim cell join never
     # touches the arrays
@@ -477,9 +470,9 @@ def polygon_join(
     census = hot_census(box_a, grid, hot_threshold, sample_fraction)
     # fan_out only on the plain path (no threshold, or an empty census):
     # there the cell join typically broadcasts and the whole explode→
-    # join→kernel pipeline would inherit a 1-split scan; the salted and
-    # adaptive modes shuffle on their key anyway, where an extra
-    # repartition is pure overhead.  SLIM: the cell join carries ids +
+    # join→kernel pipeline would inherit a 1-split scan; the skew path
+    # shuffles on its key anyway, where an extra repartition is pure
+    # overhead.  SLIM: the cell join carries ids +
     # bboxes only; vertex arrays are re-attached by id AFTER the bbox
     # filter, so the join's candidate blow-up (~40x the inputs at bench
     # scale) never copies ring payloads.
@@ -487,7 +480,7 @@ def polygon_join(
         box_a, box_b = fan_out(box_a), fan_out(box_b)
     joined, keep = cell_candidates(
         side_cover(box_a, grid, "a_"), side_cover(box_b, grid, "b_"),
-        grid, census, n_salt, levels_finer,
+        grid, census, n_salt,
     )
     bbox_hit = (
         (F.col("a_min_x") <= F.col("b_max_x")) & (F.col("b_min_x") <= F.col("a_max_x"))
@@ -495,7 +488,7 @@ def polygon_join(
     )
     cand = joined.where(keep & bbox_hit)
     if keep_cell:
-        # the COARSE reference cell in every mode — the adaptive path's
+        # the COARSE reference cell on both paths — the skew path's
         # mixed "key" is an internal join artifact, not a lineage key
         cand = cand.withColumn("cell", ref_point_cell_col(
             grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")

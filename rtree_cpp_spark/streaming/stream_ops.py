@@ -51,12 +51,12 @@ def stream_spatial_join(docs_stream: DataFrame, static_rects: DataFrame, grid: G
     stateless, so no state store grows with the stream.  Semantics match
     the batch ``spatial_join`` exactly (same refine + reference-point
     dedup), asserted by the availableNow test."""
-    from rtree_cpp_spark.operators.cover import side_cover
+    from rtree_cpp_spark.operators.cover import cell_candidates, side_cover
     from rtree_cpp_spark.operators.spatial_join import _refine
 
     a = side_cover(rects_only(docs_stream), grid, "a_")
     b = side_cover(static_rects, grid, "b_")
-    return _refine(a.join(b, "cell"), grid)
+    return _refine(*cell_candidates(a, b, grid, None), grid)
 
 
 def stream_range_monitor(

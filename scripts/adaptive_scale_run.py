@@ -1,28 +1,27 @@
 #!/usr/bin/env python
-"""Skewed-data scale evidence for the MIXED-RESOLUTION adaptive join
-(round 5; VERDICT r4 'Next round' #1).
+"""Skewed-data scale evidence for the join's skew path: the plain cell
+join (AQE skew-join only) against ``spatial_join(hot_threshold=...)``,
+where hot cells subdivide ``cover.FINE_LEVELS`` finer and salt inside.
 
-Salting re-shards a hot cell's nA x nB candidate cross-product over more
-tasks but cannot shrink it; subdividing hot cells ``levels_finer``
-deeper makes candidates meet at a finer resolution, so pairs that never
-share a fine cell are never generated.  This run measures exactly that
-on clustered data:
+Subdivision makes candidates meet at a finer resolution, so pairs that
+never share a fine cell are never generated; salting alone would only
+re-shard the hot cells' nA x nB cross-product.  This run measures, on
+clustered data:
 
-- candidate pairs BEFORE the exact refine, plain/salted key (identical
-  counts — salting only re-keys) vs adaptive mixed keys;
-- end-to-end walls for spatial_join plain (AQE only), salted and
-  adaptive on the same input;
-- identity: all three variants' outputs are verified equal (counts +
-  anti-joins) before any wall is published.
+- candidate pairs BEFORE the exact refine, plain cell key vs the skew
+  path's (fine key, salt) — salting does not change the count;
+- end-to-end walls of the two on the same input;
+- identity: both outputs are verified equal (counts + anti-join)
+  before any wall is published.
 
 Input: deterministic lattice rects, ``CLUSTER_FRAC`` of them packed
 into 3 hot spots of diameter ``CLUSTER_DIAM`` (dense-urban-tile skew,
 north_star), the rest uniform over [0,1024)^2 — Spark-native exprs of
 the row id, identical at any parallelism.
 
-Prints one JSON line; curated results go to BENCH/adaptive_scale.json
-and BENCH/BASELINE.md.  Env: ADAPT_SCALE_A (default 1000000),
-ADAPT_SCALE_B (500000), CLUSTER_FRAC (0.2), CLUSTER_DIAM (24.0),
+Prints one JSON line and writes it to BENCH/adaptive_scale.json.  Env:
+ADAPT_SCALE_A (default 1000000), ADAPT_SCALE_B (500000), CLUSTER_FRAC
+(0.2), CLUSTER_DIAM (24.0), ADAPT_HOT_THRESHOLD (5000),
 SPARK_GRAFT_CPUS (16).
 """
 
@@ -40,6 +39,7 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from rtree_cpp_spark.functions.cells import Grid  # noqa: E402
 from rtree_cpp_spark.operators.cover import (  # noqa: E402
+    FINE_LEVELS,
     cell_candidates,
     hot_census,
     side_cover,
@@ -93,7 +93,6 @@ def main() -> None:
     cluster_diam = float(os.environ.get("CLUSTER_DIAM", "24.0"))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     hot_threshold = int(os.environ.get("ADAPT_HOT_THRESHOLD", "5000"))
-    levels_finer = int(os.environ.get("ADAPT_LEVELS_FINER", "3"))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("adaptive-scale-run")
@@ -116,18 +115,11 @@ def main() -> None:
     a_cov, b_cov = side_cover(a, GRID, "a_"), side_cover(b, GRID, "b_")
     plain_cand = cell_candidates(a_cov, b_cov, GRID, None)[0].count()
     census = hot_census(a, GRID, hot_threshold)
-    adapt_cand = cell_candidates(
-        a_cov, b_cov, GRID, census, levels_finer=levels_finer
-    )[0].count()
+    skew_cand = cell_candidates(a_cov, b_cov, GRID, census)[0].count()
 
     ops = {
         "plain": lambda: spatial_join(a, b, GRID),
-        "salted": lambda: spatial_join(
-            a, b, GRID, hot_threshold=hot_threshold, n_salt=16
-        ),
-        "adaptive": lambda: spatial_join(
-            a, b, GRID, hot_threshold=hot_threshold, levels_finer=levels_finer
-        ),
+        "skew": lambda: spatial_join(a, b, GRID, hot_threshold=hot_threshold),
     }
     walls: dict[str, float] = {}
     counts: dict[str, int] = {}
@@ -140,24 +132,21 @@ def main() -> None:
             counts[name] = n
         walls[name] = best
 
-    # identity gate: every variant emits the same pair set
+    # identity gate: both emit the same pair set
     base = ops["plain"]().localCheckpoint()
-    diffs = {
-        name: ops[name]().join(base, ["a_doc_id", "b_doc_id"], "left_anti").count()
-        for name in ("salted", "adaptive")
-    }
-    same_counts = len(set(counts.values())) == 1
-    if any(diffs.values()) or not same_counts:
-        print(json.dumps({"error": "identity gate FAILED", "diffs": diffs, "counts": counts}))
+    diff = ops["skew"]().join(base, ["a_doc_id", "b_doc_id"], "left_anti").count()
+    if diff or counts["plain"] != counts["skew"]:
+        print(json.dumps({"error": "identity gate FAILED", "diff": diff, "counts": counts}))
         sys.exit(1)
 
     out = {
         "n_a": n_a, "n_b": n_b, "cpus": cpus,
         "cluster_frac": cluster_frac, "cluster_diam": cluster_diam,
-        "hot_threshold": hot_threshold, "levels_finer": levels_finer,
-        "candidate_pairs_plain_or_salted": plain_cand,
-        "candidate_pairs_adaptive": adapt_cand,
-        "candidate_reduction_x": round(plain_cand / max(adapt_cand, 1), 2),
+        "hot_threshold": hot_threshold, "fine_levels": FINE_LEVELS, "n_salt": 16,
+        "hot_cells": 0 if census is None else census.count(),
+        "candidate_pairs_plain": plain_cand,
+        "candidate_pairs_skew": skew_cand,
+        "candidate_reduction_x": round(plain_cand / max(skew_cand, 1), 2),
         "walls_sec": walls, "output_rows": counts["plain"],
         "identity": "ok",
     }

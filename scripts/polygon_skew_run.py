@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Skewed polygon-join scale study: salting vs mixed-resolution
-ADAPTIVE cells (round 5; VERDICT r4 'Next round' #3 + the polygon
-extension of #1).
+"""Skewed polygon-join scale study: the plain cell join against the
+join's skew path (hot cells subdivide ``cover.FINE_LEVELS`` finer and
+salt inside).
 
 Input: corner-cut octagons derived from clustered lattice rects
 (CLUSTER_FRAC packed into 3 hot spots of diameter CLUSTER_DIAM — the
@@ -10,15 +10,11 @@ measurements instead of guesses:
 
 1. does the hot-cell straggler actually bind at this config?
    ``plain`` is run with AQE skew-join ON and OFF;
-2. does explicit salting re-balance it?  ``salted`` under both AQE
-   settings (salting re-shards the SAME candidate pairs);
-3. does SUBDIVISION beat re-sharding?  ``adaptive`` replaces hot coarse
-   cells with cells ``levels_finer`` deeper, so the raw equi-join pair
-   count itself SHRINKS — counted and published alongside the walls
-   (``raw_candidates``: plain/salted process the identical pair set by
-   construction, adaptive's is structurally smaller; ``refine_input`` —
-   exactly-once bbox survivors — is identical for every variant, so the
-   SAT kernel work is constant and the delta isolates the join stage).
+2. does the skew path beat it?  ``skew`` under both AQE settings.
+   Subdivision makes the raw equi-join pair count itself SHRINK —
+   counted and published alongside the walls (``raw_candidates``); the
+   exactly-once bbox survivors are the same for both, so the SAT kernel
+   work is constant and the delta isolates the join stage.
 
 All variants' OUTPUTS are verified identical (counts + anti-joins)
 before any wall is published.  Timing protocol per BENCH/BASELINE.md:
@@ -28,8 +24,7 @@ walls with per-pass detail in the artifact.
 Prints one JSON line -> BENCH/polygon_skew.json (+ curated table in
 BENCH/BASELINE.md).  Env: POLY_SKEW_A (default 600000), POLY_SKEW_B
 (300000), CLUSTER_FRAC (0.25), CLUSTER_DIAM (32.0), POLY_HOT_THRESHOLD
-(5000), POLY_LEVELS_FINER (2), POLY_SKEW_PASSES (3),
-SPARK_GRAFT_CPUS (16).
+(5000), POLY_SKEW_PASSES (3), SPARK_GRAFT_CPUS (16).
 """
 
 from __future__ import annotations
@@ -46,6 +41,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from rtree_cpp_spark.functions.cells import Grid  # noqa: E402
 from rtree_cpp_spark.operators.cover import (  # noqa: E402
+    FINE_LEVELS,
     cell_candidates,
     hot_census,
     side_cover,
@@ -78,7 +74,6 @@ def main() -> None:
     cluster_frac = float(os.environ.get("CLUSTER_FRAC", "0.25"))
     cluster_diam = float(os.environ.get("CLUSTER_DIAM", "32.0"))
     hot_threshold = int(os.environ.get("POLY_HOT_THRESHOLD", "5000"))
-    levels_finer = int(os.environ.get("POLY_LEVELS_FINER", "2"))
     n_passes = max(2, int(os.environ.get("POLY_SKEW_PASSES", "3")))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     spark = (
@@ -96,7 +91,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # wider rects than the adaptive run (octagons need area to intersect)
+    # wider rects than adaptive_scale_run.py (octagons need area to intersect)
     a = synth_rects_clustered(
         spark, n_a, "pa", 23, cluster_frac, cluster_diam, max_dim=2.0
     ).localCheckpoint()
@@ -108,29 +103,17 @@ def main() -> None:
     def set_skew_aqe(on: bool):
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true" if on else "false")
 
-    variants = {
-        # (builder, aqe_skew_on)
-        "plain_aqe": (lambda: polygon_join(oa, ob, GRID, refine="kernel"), True),
-        "plain_noaqe": (lambda: polygon_join(oa, ob, GRID, refine="kernel"), False),
-        "salted_aqe": (
-            lambda: polygon_join(
-                oa, ob, GRID, refine="kernel", hot_threshold=hot_threshold, n_salt=16
-            ),
-            True,
-        ),
-        "salted_noaqe": (
-            lambda: polygon_join(
-                oa, ob, GRID, refine="kernel", hot_threshold=hot_threshold, n_salt=16
-            ),
-            False,
-        ),
-        "adaptive_aqe": (
-            lambda: polygon_join(
-                oa, ob, GRID, refine="kernel",
-                hot_threshold=hot_threshold, levels_finer=levels_finer,
-            ),
-            True,
-        ),
+    def plain():
+        return polygon_join(oa, ob, GRID, refine="kernel")
+
+    def skew():
+        return polygon_join(oa, ob, GRID, refine="kernel", hot_threshold=hot_threshold)
+
+    variants = {  # name: (make, aqe_skew_on)
+        "plain_aqe": (plain, True),
+        "plain_noaqe": (plain, False),
+        "skew_aqe": (skew, True),
+        "skew_noaqe": (skew, False),
     }
 
     walls: dict[str, float] = {}
@@ -155,9 +138,7 @@ def main() -> None:
     raw_plain = cell_candidates(pa, pb, GRID, None)[0].count()
     census = hot_census(oa, GRID, hot_threshold)
     n_hot = 0 if census is None else census.count()
-    raw_adaptive = cell_candidates(
-        pa, pb, GRID, census, levels_finer=levels_finer
-    )[0].count()
+    raw_skew = cell_candidates(pa, pb, GRID, census)[0].count()
 
     # --- identity gate: every variant returns the plain rows ---
     base = variants["plain_aqe"][0]().localCheckpoint()
@@ -175,16 +156,15 @@ def main() -> None:
     out = {
         "n_a": n_a, "n_b": n_b, "cpus": cpus,
         "cluster_frac": cluster_frac, "cluster_diam": cluster_diam,
-        "hot_threshold": hot_threshold, "n_salt": 16,
-        "levels_finer": levels_finer,
+        "hot_threshold": hot_threshold, "n_salt": 16, "fine_levels": FINE_LEVELS,
         "walls_sec": walls, "walls_all_passes": passes,
         "cpu_controls_sec": controls,
         "output_rows": counts["plain_aqe"],
         "hot_cells": n_hot,
-        "raw_candidates": {"plain_or_salted": raw_plain, "adaptive": raw_adaptive},
-        "candidate_reduction_x": round(raw_plain / max(raw_adaptive, 1), 2),
-        "salting_speedup_x": round(walls["plain_noaqe"] / walls["salted_noaqe"], 2),
-        "adaptive_speedup_x": round(walls["plain_aqe"] / walls["adaptive_aqe"], 2),
+        "raw_candidates": {"plain": raw_plain, "skew": raw_skew},
+        "candidate_reduction_x": round(raw_plain / max(raw_skew, 1), 2),
+        "skew_speedup_x": round(walls["plain_aqe"] / walls["skew_aqe"], 2),
+        "skew_speedup_noaqe_x": round(walls["plain_noaqe"] / walls["skew_noaqe"], 2),
         "identity": "ok",
     }
     line = json.dumps(out)

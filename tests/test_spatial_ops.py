@@ -77,15 +77,14 @@ def test_salted_join_equals_unsalted(spark, rects_a_df, rects_b_df, rects_a_pdf,
 
 
 @pytest.mark.parametrize("grid", GRIDS, ids=lambda g: f"level{g.level}")
-@pytest.mark.parametrize("levels_finer", [1, 2])
+@pytest.mark.parametrize("n_salt", [1, 2])
 def test_adaptive_join_equals_plain(
-    spark, rects_a_df, rects_b_df, rects_a_pdf, rects_b_pdf, grid, levels_finer
+    spark, rects_a_df, rects_b_df, rects_a_pdf, rects_b_pdf, grid, n_salt
 ):
     # low threshold on the clustered fixture → many coarse cells actually
-    # subdivide; output must be bit-identical to the brute join anyway
-    got = spatial_join(
-        rects_a_df, rects_b_df, grid, hot_threshold=3, levels_finer=levels_finer
-    )
+    # subdivide (and, for n_salt > 1, salt); output must be bit-identical to
+    # the brute join anyway
+    got = spatial_join(rects_a_df, rects_b_df, grid, hot_threshold=3, n_salt=n_salt)
     exp = brute.join_brute(rects_a_pdf, rects_b_pdf)
     assert_same_rows(got, exp)
     gp = got.toPandas()
@@ -97,7 +96,7 @@ def test_adaptive_join_sampled_census_and_keep_cell(
 ):
     grid = Grid(6)
     got = spatial_join(
-        rects_a_df, rects_b_df, grid, hot_threshold=4, levels_finer=2,
+        rects_a_df, rects_b_df, grid, hot_threshold=4,
         sample_fraction=0.5, keep_cell=True,
     )
     gp = got.toPandas()
@@ -154,8 +153,10 @@ def test_candidate_generator_plan_shape(spark, rects_a_df, rects_b_df, geometry,
     grid = Grid(6)
     kw = {
         "empty_census": {"hot_threshold": 10**9},
+        # both hot modes run the one skew path: with salt fan-out, and with
+        # n_salt=1 (subdivision only, every row salt 0)
         "salted": {"hot_threshold": 5, "n_salt": 4},
-        "adaptive": {"hot_threshold": 5, "levels_finer": 2},
+        "adaptive": {"hot_threshold": 5, "n_salt": 1},
     }[mode]
     if geometry == "rect":
         df = spatial_join(rects_a_df, rects_b_df, grid, **kw)
@@ -166,16 +167,11 @@ def test_candidate_generator_plan_shape(spark, rects_a_df, rects_b_df, geometry,
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
-    salt_join = re.search(r"Join \[cell#\d+L?, salt#\d+\], \[cell#\d+L?, salt#\d+\]", plan)
-    key_join = re.search(r"Join \[key#\d+L?\], \[key#\d+L?\]", plan)
     if mode == "empty_census":
-        assert "salt#" not in plan and not key_join
+        assert "salt#" not in plan and "key#" not in plan
         assert "InMemoryTableScan" not in plan  # the census is never broadcast
-    elif mode == "salted":
-        assert salt_join and not key_join
-        assert "InMemoryTableScan" in plan
-    else:
-        assert key_join and "salt#" not in plan
+    else:  # subdivided and salted: one (key, salt) join over the cached census
+        assert re.search(r"Join \[key#\d+L?, salt#\d+\], \[key#\d+L?, salt#\d+\]", plan)
         assert "InMemoryTableScan" in plan
 
 
@@ -183,18 +179,18 @@ def test_census_empty_fast_path_identity(
     spark, rects_a_df, rects_b_df, rects_a_pdf, rects_b_pdf
 ):
     # hot_threshold far above any cell's count → the census is empty and
-    # the salted/adaptive variants take the fast path (plain cell join,
-    # no broadcast/rekey machinery); outputs must still be identical
+    # the join takes the fast path (plain cell join, no broadcast, rekey
+    # or salt); outputs must still be identical
     grid = Grid(6)
     exp = brute.join_brute(rects_a_pdf, rects_b_pdf)
     salted = spatial_join_salted(
         rects_a_df, rects_b_df, grid, hot_threshold=10**9, n_salt=4
     )
     assert_same_rows(salted, exp)
-    adaptive = spatial_join(
-        rects_a_df, rects_b_df, grid, hot_threshold=10**9, levels_finer=2, keep_cell=True
+    with_cell = spatial_join(
+        rects_a_df, rects_b_df, grid, hot_threshold=10**9, keep_cell=True
     )
-    assert_same_rows(adaptive.drop("cell"), exp)
+    assert_same_rows(with_cell.drop("cell"), exp)
 
     oa = octagons_from_rects(spark.createDataFrame(rects_a_pdf.iloc[:80]))
     ob = octagons_from_rects(spark.createDataFrame(rects_b_pdf.iloc[:80]))
@@ -202,7 +198,7 @@ def test_census_empty_fast_path_identity(
     assert len(plain) > 0
     for kw in (
         {"hot_threshold": 10**9},
-        {"hot_threshold": 10**9, "levels_finer": 2},
+        {"hot_threshold": 10**9, "n_salt": 4},
     ):
         assert_same_rows(polygon_join(oa, ob, grid, **kw), plain)
 
@@ -231,14 +227,41 @@ def test_adaptive_join_reduces_hot_cell_candidates(spark):
     plain_cand = cell_candidates(a_cov, b_cov, grid, None)[0].count()
     assert plain_cand == n * n  # the whole cluster lands in one coarse cell
     census = hot_census(a_df, grid, hot_threshold=50)
-    adaptive_cand = cell_candidates(a_cov, b_cov, grid, census, levels_finer=2)[0].count()
+    adaptive_cand = cell_candidates(a_cov, b_cov, grid, census)[0].count()
     # 4^2 = 16-way subdivision of a locally-uniform cluster shrinks the
     # cross-product structurally (loose 4x bound to stay flake-free) —
-    # salting would keep all n*n candidates and only re-shard them
+    # salting alone would keep all n*n candidates and only re-shard them
     assert adaptive_cand < plain_cand / 4
-    got = spatial_join(a_df, b_df, grid, hot_threshold=50, levels_finer=2)
+    got = spatial_join(a_df, b_df, grid, hot_threshold=50)
     exp = brute.join_brute(a_pdf, b_pdf)
     assert_same_rows(got, exp)
+
+
+def test_coincident_rects_salt_inside_hot_cell(spark):
+    # the case salting is kept for: identical rects share every fine
+    # cell, so subdivision cannot split the hot cell's cross-product and
+    # only the salt spreads it
+    grid = Grid(3)
+    n, n_salt = 60, 8
+
+    def mk(prefix):
+        return pd.DataFrame({
+            "doc_id": [f"{prefix}{i}" for i in range(n)],
+            "min_x": 300.0, "min_y": 300.0, "max_x": 301.0, "max_y": 301.0,
+        })
+
+    a_pdf, b_pdf = mk("a"), mk("b")
+    a_df, b_df = spark.createDataFrame(a_pdf), spark.createDataFrame(b_pdf)
+    got = spatial_join(a_df, b_df, grid, hot_threshold=10, n_salt=n_salt)
+    assert_same_rows(got, brute.join_brute(a_pdf, b_pdf))
+    assert not got.toPandas().duplicated(["a_doc_id", "b_doc_id"]).any()
+
+    census = hot_census(a_df, grid, hot_threshold=10)
+    cand = cell_candidates(
+        side_cover(a_df, grid, "a_"), side_cover(b_df, grid, "b_"), grid, census, n_salt
+    )[0]
+    assert cand.select("salt").distinct().count() == n_salt
+    assert cand.count() == n * n  # one fine cell, every pair meets once
 
 
 @pytest.mark.parametrize("grid", GRIDS, ids=lambda g: f"level{g.level}")
@@ -796,9 +819,9 @@ def test_polygon_kernel_accepts_nonstring_ids(spark):
 
 
 def test_polygon_join_salted_equals_unsalted(spark):
-    """Hot-cell salting on the polygon join only re-partitions the same
-    candidate pairs: identical rows with an aggressive threshold that
-    salts essentially every populated cell."""
+    """The skew path on the polygon join only changes which candidates
+    meet where: identical rows with an aggressive threshold that
+    subdivides and salts essentially every populated cell."""
     from rtree_cpp_spark.operators.pip_join import polygon_join
 
     apdf = _random_convex_polys(60, seed=31, id_prefix="SA")
@@ -817,10 +840,11 @@ def test_polygon_join_salted_equals_unsalted(spark):
 
 def test_polygon_join_adaptive_equals_plain(spark):
     """Mixed-resolution adaptive cells on the polygon join: an
-    aggressive threshold subdivides essentially every populated cell,
-    yet rows are identical to the plain join in BOTH refine modes
-    (exactly-once at the row's own resolution), and keep_cell returns
-    the same coarse reference cell as the plain variant."""
+    aggressive threshold subdivides and salts essentially every
+    populated cell, yet rows are identical to the plain join in BOTH
+    refine modes (exactly-once at the row's own resolution), and
+    keep_cell returns the same coarse reference cell as the plain
+    variant."""
     from rtree_cpp_spark.operators.pip_join import polygon_join
 
     apdf = _random_convex_polys(60, seed=41, id_prefix="DA")
@@ -830,24 +854,15 @@ def test_polygon_join_adaptive_equals_plain(spark):
     key = ["a_doc_id", "b_doc_id"]
     plain = polygon_join(a_df, b_df, grid, keep_cell=True).toPandas()
     assert len(plain) > 0
-    for refine, lf in (("expr", 1), ("kernel", 2)):
+    for refine, n_salt in (("expr", 4), ("kernel", 16)):
         adapt = polygon_join(
             a_df, b_df, grid, refine=refine,
-            hot_threshold=1, levels_finer=lf, keep_cell=True,
+            hot_threshold=1, n_salt=n_salt, keep_cell=True,
         ).toPandas()
         pd.testing.assert_frame_equal(
             plain.sort_values(key).reset_index(drop=True),
             adapt.sort_values(key).reset_index(drop=True),
         )
-
-
-def test_polygon_join_adaptive_requires_threshold(spark):
-    from rtree_cpp_spark.operators.pip_join import polygon_join
-
-    apdf = _random_convex_polys(5, seed=41, id_prefix="DA")
-    a_df = spark.createDataFrame(apdf)
-    with pytest.raises(ValueError, match="hot_threshold"):
-        polygon_join(a_df, a_df, Grid(5), levels_finer=2)
 
 
 def test_polygon_refine_kernel_equals_expr(spark):
