@@ -21,8 +21,11 @@ import time
 import uuid
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 @contextmanager
@@ -48,17 +51,40 @@ MANIFEST_SCHEMA = (
 )
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop FileSystem existence check: a driver-side metadata call,
+    no Spark job."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+
+
+def _manifest_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Manifest rows as a DataFrame built from a ``pyarrow.Table``: the
+    rows cross to the JVM as one Arrow stream, so no Python worker
+    starts (a list or pandas input would re-serialize through a Python
+    RDD)."""
+    struct = StructType.fromDDL(MANIFEST_SCHEMA)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
-    try:
-        return spark.read.parquet(manifest_path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    """The manifest, or an empty frame with its schema when the path does
+    not exist.  A manifest that exists but cannot be read raises (at the
+    first action): treating it as empty would silently rewrite every key."""
+    if not _exists(spark, manifest_path):
+        return _manifest_df(spark, [])
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
 
 
 def done_keys(spark: SparkSession, manifest_path: str, run_id: str, stage: str) -> list[int]:
-    m = read_manifest(spark, manifest_path)
+    if not _exists(spark, manifest_path):
+        return []
     rows = (
-        m.where((F.col("run_id") == run_id) & (F.col("stage") == stage) & (F.col("status") == "done"))
+        read_manifest(spark, manifest_path)
+        .where((F.col("run_id") == run_id) & (F.col("stage") == stage) & (F.col("status") == "done"))
         .select("partition_key")
         .distinct()
         .collect()
@@ -67,7 +93,8 @@ def done_keys(spark: SparkSession, manifest_path: str, run_id: str, stage: str) 
 
 
 def append_manifest(spark: SparkSession, manifest_path: str, rows: list[tuple]) -> None:
-    spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(manifest_path)
+    """Append ``rows`` as one parquet file."""
+    _manifest_df(spark, rows).coalesce(1).write.mode("append").parquet(manifest_path)
 
 
 def resumable_write(
@@ -98,6 +125,15 @@ def resumable_write(
     would multiply the dominant stage by the batch count).  The key list
     is driver-resident by design: keys are coarse lineage cells, bounded
     by the coarse grid (≤ 4^coarse_level ≤ 4096), never data rows.
+
+    The counts also set the file layout.  With N rows in total and P =
+    ``defaultParallelism`` tasks, key k is split over ⌈n_k / ⌈N/P⌉⌉
+    tasks by a hash of the whole row, so a key that fits in one task is
+    one file and a hot key is spread evenly instead of being one
+    straggler task: at most keys + P files per call, at any upstream
+    partition count.  The manifest is probed with a filesystem
+    existence check (an absent manifest costs no Spark job; one that
+    exists but cannot be read raises) and each batch appends one file.
     """
     spark = df.sparkSession
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -107,15 +143,23 @@ def resumable_write(
         done = set(done_keys(spark, manifest_path, run_id, stage))
         pending = [k for k in all_keys if k not in done]
         written, out_rows = [], 0
+        n_tasks = spark.sparkContext.defaultParallelism
+        rows_per_task = max(1, -(-sum(counts.values()) // n_tasks))
+        n_splits = {k: -(-n // rows_per_task) for k, n in counts.items()}
+        key_type = df.schema[key_col].dataType
+        row_hash = F.xxhash64(*[F.col(c) for c in df.columns])
         batches = [pending[i : i + keys_per_batch] for i in range(0, len(pending), keys_per_batch)]
         for bi, batch in enumerate(batches):
             if fail_after_batches is not None and bi >= fail_after_batches:
                 raise RuntimeError(f"injected failure before batch {bi} (resume test)")
             t0 = time.perf_counter()
+            splits = F.create_map(
+                *[c for k in batch for c in (F.lit(k).cast(key_type), F.lit(n_splits[k]))]
+            )
             with dynamic_overwrite(spark):
-                df.where(F.col(key_col).isin(batch)).write.mode("overwrite").partitionBy(
-                    key_col
-                ).parquet(out_path)
+                df.where(F.col(key_col).isin(batch)).repartition(
+                    n_tasks, F.col(key_col), F.pmod(row_hash, splits[F.col(key_col)])
+                ).write.mode("overwrite").partitionBy(key_col).parquet(out_path)
             wall = int((time.perf_counter() - t0) * 1000)
             now = time.time()
             append_manifest(

@@ -1,3 +1,7 @@
+import re
+from collections import Counter
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -72,6 +76,101 @@ def test_upstream_executes_once(spark, tmp_path):
     # exactly one evaluation per row: the count agg materialized the cache
     # and every batch write scanned it (no per-batch upstream replay)
     assert acc.value == n
+
+
+def _parquet_files(path):
+    return sorted(str(f) for f in Path(path).rglob("*.parquet"))
+
+
+def test_layout_one_file_per_key(spark, tiles_df, tmp_path):
+    """No key holds more than one task's share of the rows, so each key is
+    written by one task as one file (not one file per upstream task)."""
+    out = str(tmp_path / "out")
+    manifest.resumable_write(tiles_df, out, "cell", str(tmp_path / "man"), "r", "tiles")
+    keys = {r.cell for r in tiles_df.select("cell").distinct().collect()}
+    per_key = Counter(Path(f).parent.name for f in _parquet_files(out))
+    assert per_key == Counter({f"cell={k}": 1 for k in keys})
+
+
+def test_layout_hot_key_split(spark, tmp_path):
+    """A key holding >= 90% of the rows is spread over several tasks and
+    files; the rows and the manifest counts are unchanged."""
+    import pandas as pd
+
+    from conftest import assert_same_rows
+
+    n = 2000
+    pdf = pd.DataFrame({"doc_id": range(n)})
+    pdf["cell"] = [0 if i < 1900 else 1 + i % 5 for i in range(n)]
+    pdf["v"] = pdf["doc_id"] * 0.5
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    res = manifest.resumable_write(spark.createDataFrame(pdf), out, "cell", man, "r", "hot")
+    assert len(_parquet_files(Path(out) / "cell=0")) > 1
+    assert_same_rows(spark.read.parquet(out), pdf)
+    m = manifest.read_manifest(spark, man)
+    assert m.agg(F.sum("output_rows")).first()[0] == res["output_rows"] == n
+
+
+def test_manifest_one_file_per_batch(spark, tiles_df, tmp_path):
+    man = str(tmp_path / "man")
+    manifest.resumable_write(tiles_df, str(tmp_path / "out"), "cell", man, "r", "t", keys_per_batch=8)
+    keys = tiles_df.select("cell").distinct().count()
+    assert len(_parquet_files(man)) == -(-keys // 8)
+
+
+def test_done_keys_absent_manifest_runs_no_job(spark, tmp_path):
+    sc = spark.sparkContext
+    group = "absent-manifest-probe"
+    sc.setJobGroup(group, "done_keys on an absent manifest")
+    try:
+        assert manifest.done_keys(spark, str(tmp_path / "none"), "r", "s") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_bad_manifest_raises(spark, tmp_path):
+    """A manifest that exists but cannot be read is an error, not 'no keys
+    done' (which would silently rewrite every key)."""
+    man = tmp_path / "man"
+    man.mkdir()
+    (man / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        manifest.done_keys(spark, str(man), "r", "s")
+
+
+def test_manifest_dir_without_files_reads_empty(spark, tmp_path):
+    """A crash during the first append leaves only the committer's
+    ``_temporary`` directory: nothing is done yet, which is not an error."""
+    man = tmp_path / "man"
+    (man / "_temporary" / "0").mkdir(parents=True)
+    assert manifest.done_keys(spark, str(man), "r", "s") == []
+
+
+def test_append_manifest_types_without_arrow_conf(spark, tmp_path):
+    from pyspark.sql.types import StructType
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        man = str(tmp_path / "man")
+        rows = [("r", "s", 7, "done", 12, 34, 1, 5.5), ("r", "s", 8, "done", 0, 34, 1, 5.5)]
+        manifest.append_manifest(spark, man, rows)
+    finally:
+        spark.conf.set(key, prev)
+    got = spark.read.parquet(man)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in StructType.fromDDL(manifest.MANIFEST_SCHEMA)
+    ]
+    assert sorted(map(tuple, got.collect())) == rows
+
+
+def test_manifest_rows_never_cross_as_python_list():
+    """Manifest rows reach the JVM as a pyarrow.Table, never as a list
+    (which would start Python workers to re-serialize a Python RDD)."""
+    src = Path(manifest.__file__).read_text()
+    assert not re.search(r"createDataFrame\((\[\]|rows)", src)
 
 
 def test_rerun_is_noop(spark, tiles_df, tmp_path):
