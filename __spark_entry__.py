@@ -192,26 +192,18 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_pip_strict": lambda s, d: pip_join(_knn_points(s, d), rects.rects_a(s, d), GRID, "open"),
         # validate=False: octagons_from_rects rings are plan-computed
         # with statically valid arity; the Arrow kernels still assert
-        # ring arity from the list offsets (operators/pip_join.py)
+        # ring arity from the list offsets (operators/pip_join.py).
+        # Both polygon predicates refine in their one Arrow kernel
+        # (_pip_kernel / _sat_kernel), value-gated through the
+        # spatial_pip and spatial_join rows
         "spatial_pip_polygon": lambda s, d: polygon_pip_join(
             _knn_points(s, d), octagons_from_rects(rects.rects_a(s, d)), GRID,
             validate=False,
         ),
-        # the Arrow-kernel refine is the declared scale path
-        # (BENCH/polygon_scale.json) — gated as its own mode so BOTH fold
-        # implementations are value-verified by the driver
-        "spatial_pip_polygon_kernel": lambda s, d: polygon_pip_join(
-            _knn_points(s, d), octagons_from_rects(rects.rects_a(s, d)), GRID,
-            refine="kernel", validate=False,
-        ),
-        # kernel refine = the scale path (BENCH/polygon_scale.json: 2.1x
-        # the expr form at 10^6 rows); expr is value-identical
-        # (pytest + the scale script's identity gate)
         "spatial_join_octagon": lambda s, d: polygon_join(
             octagons_from_rects(rects.rects_a(s, d)),
             octagons_from_rects(rects.rects_b(s, d)),
             GRID,
-            refine="kernel",
             validate=False,
         ),
         # polygon join through the skew path — hot coarse cells
@@ -222,7 +214,6 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             octagons_from_rects(rects.rects_a(s, d)),
             octagons_from_rects(rects.rects_b(s, d)),
             GRID,
-            refine="kernel",
             validate=False,
             hot_threshold=2000,
             sample_fraction=0.25,
@@ -459,8 +450,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_pip": _tagged_union(
             f,
             [("spatial_pip", "closed"), ("spatial_pip_strict", "open"),
-             ("spatial_pip_polygon", "polygon"),
-             ("spatial_pip_polygon_kernel", "polygon_kernel")],
+             ("spatial_pip_polygon", "polygon")],
             tagcol="mode",
         ),
         "tiles_assign": _tagged_union(
@@ -1364,7 +1354,6 @@ def oracle_sql() -> dict[str, str]:
                 (pip_sql_tpl.format(gt=">=", lt="<="), "closed"),
                 (pip_sql_tpl.format(gt=">", lt="<"), "open"),
                 (pip_polygon_sql, "polygon"),
-                (pip_polygon_sql, "polygon_kernel"),
             ],
             tagcol="mode",
         ),

@@ -54,7 +54,7 @@ def main() -> None:
 
         pairs = polygon_join(
             octagons_from_rects(a), octagons_from_rects(b), grid,
-            refine="kernel", hot_threshold=args.hot_threshold,
+            hot_threshold=args.hot_threshold,
             n_salt=args.n_salt, keep_cell=True,
         )
     else:

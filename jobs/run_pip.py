@@ -9,7 +9,8 @@ Rectangle.cpp:29-33) as a cluster job.
 Points table: (point_id, x, y).  Output: (point_id, doc_id) partitioned
 by the point's coarse cell.  ``--boundary polygon`` runs the TRUE
 convex-polygon PIP against corner-cut octagons derived from the doc
-rects (operators/pip_join.polygon_pip_join).
+rects (operators/pip_join.polygon_pip_join), refined in its Arrow
+kernel.
 """
 
 from __future__ import annotations

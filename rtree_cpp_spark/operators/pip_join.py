@@ -37,13 +37,12 @@ from rtree_cpp_spark.plans.parallelism import fan_out
 
 def _with_ring_check(df: DataFrame, xs: str = "xs", ys: str = "ys") -> DataFrame:
     """Fail fast on degenerate rings: every polygon needs >= 3 vertices
-    and equal-length coordinate arrays.  With an empty ring the expr
-    fold's ``F.sequence(0, n-1)`` would produce a DESCENDING [0, -1] and
-    ``element_at(xs, 0)`` raises a cryptic 1-based-index error at an
-    arbitrary point of the plan; 1-2-vertex rings would silently
-    evaluate degenerate edges.  ``assert_true`` is NULL when the
-    precondition holds, so the coalesce keeps every valid row and the
-    check rides the existing scan (no extra pass)."""
+    and equal-length coordinate arrays.  The Arrow kernels assert the
+    same from the list offsets (``_check_lens``), but only for rings
+    that reach them as bbox survivors; this check covers every ring the
+    scan reads.  ``assert_true`` is NULL when the precondition holds, so
+    the coalesce keeps every valid row and the check rides the existing
+    scan (no extra pass)."""
     ok = (F.size(F.col(xs)) >= 3) & (F.size(F.col(xs)) == F.size(F.col(ys)))
     msg = F.concat(
         F.lit("polygon ring needs >= 3 vertices and len(xs) == len(ys); got len(xs)="),
@@ -68,9 +67,9 @@ def _with_bbox(polygons: DataFrame) -> DataFrame:
 
 def _id_schema(df: DataFrame, pairs: list[tuple[str, str]], extra: str = "") -> str:
     """mapInArrow output schema with id column TYPES taken from the
-    input plan (not hardcoded strings), so refine='kernel' accepts
-    exactly the same inputs as refine='expr' — non-string doc ids
-    included.  ``pairs`` maps (input_col, output_col)."""
+    input plan (not hardcoded strings), so the kernels accept any id
+    type — non-string doc ids included.  ``pairs`` maps
+    (input_col, output_col)."""
     by_name = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     cols = ", ".join(f"{out} {by_name[src]}" for src, out in pairs)
     return cols + extra
@@ -140,7 +139,6 @@ def polygon_pip_join(
     polygons: DataFrame,
     grid: Grid,
     id_col: str = "doc_id",
-    refine: str = "expr",
     validate: bool = True,
 ) -> DataFrame:
     """TRUE point-in-polygon join (north_star: "point-in-polygon joins")
@@ -159,35 +157,25 @@ def polygon_pip_join(
          dedup because the point cell is unique);
       2. exact refine — every edge's cross product
          ``(x_j-x_i)*(py-y_i) - (y_j-y_i)*(px-x_i) >= 0`` must hold for
-         a CCW convex ring, gated behind a codegen-cheap bbox test.
+         a CCW convex ring, gated behind a codegen-cheap bbox test.  The
+         refine is an Arrow-native numpy kernel (``mapInArrow``,
+         :func:`_pip_kernel`) that vectorizes the cross products across
+         the candidate batch, gathering ragged vertex lists straight
+         from the Arrow list buffers.  Output id types are derived from
+         the input plan.
 
-    ``refine`` picks the fold implementation (results IDENTICAL, the
-    per-edge IEEE expression is the same — pytest-asserted):
-
-    - ``'expr'`` (default): ``F.aggregate`` over the vertex arrays —
-      zero Python, but Spark interprets higher-order functions per
-      row, so the fold costs ~µs per bbox-surviving candidate;
-    - ``'kernel'``: Arrow-native numpy (``mapInArrow``) — vectorizes
-      the cross products across the whole candidate batch, gathering
-      ragged vertex lists straight from the Arrow list buffers (no
-      pandas object materialization); the scale path when bbox
-      survivors are a large share of candidates.  Output id types are
-      derived from the input plan, so both refine modes accept the
-      same inputs.
-
-    Precondition (both modes, checked in-plan): every ring has >= 3
-    vertices and ``len(xs) == len(ys)`` — degenerate rings fail fast
-    with a clear error instead of evaluating nonsense edges.
+    Precondition: every ring has >= 3 vertices and ``len(xs) ==
+    len(ys)``.  With ``validate=True`` (default) every scanned ring is
+    checked in-plan (see :func:`polygon_join` for when to pass
+    ``validate=False``); the kernel asserts ring arity for the rings it
+    refines either way.
     """
-    if refine not in ("expr", "kernel"):
-        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
     polygons = _with_bbox(polygons)
     # ring validation attaches to the verts branch (the only branch
-    # that consumes ring payloads); see polygon_join's docstring for
-    # the validate tradeoff on plan-computed rings
+    # that consumes ring payloads)
     vg = _with_ring_check(polygons) if validate else polygons
-    # fan_out: PIP refine (expr fold or Arrow kernel) runs pre-shuffle
-    # on a broadcast-join pipeline — don't inherit a 1-split scan.
+    # fan_out: the Arrow refine runs pre-shuffle on a broadcast-join
+    # pipeline — don't inherit a 1-split scan.
     # SLIM: the cell join carries the polygon id + bbox only; ring
     # payloads are re-attached by id for bbox survivors
     p = fan_out(points).select(
@@ -199,38 +187,20 @@ def polygon_pip_join(
         fan_out(polygons).select(id_col, "min_x", "min_y", "max_x", "max_y"),
         grid,
     )
-    n = F.size(F.col("xs"))
-    xs, ys = F.col("xs"), F.col("ys")
     px, py = F.col("x"), F.col("y")
-
-    def edge_ok(i):
-        j = F.pmod(i + F.lit(1), n) + F.lit(1)  # element_at is 1-based
-        xi, yi = F.element_at(xs, i + F.lit(1)), F.element_at(ys, i + F.lit(1))
-        xj, yj = F.element_at(xs, j), F.element_at(ys, j)
-        return ((xj - xi) * (py - yi) - (yj - yi) * (px - xi)) >= F.lit(0.0)
-
-    inside = F.aggregate(
-        F.sequence(F.lit(0), n - F.lit(1)),
-        F.lit(True),
-        lambda acc, i: acc & edge_ok(i),
-    )
-    # bbox prefilter FIRST: the codegen-cheap rect test short-circuits
-    # the expensive exact fold for the ~98% of cell candidates whose
-    # bbox the point misses (measured, scripts/polygon_scale_run.py)
+    # bbox prefilter FIRST: the codegen-cheap rect test keeps the ~98%
+    # of cell candidates whose bbox the point misses out of the kernel
+    # (measured, scripts/polygon_scale_run.py)
     bbox_hit = (
         (px >= F.col("min_x")) & (px <= F.col("max_x"))
         & (py >= F.col("min_y")) & (py <= F.col("max_y"))
     )
-    cand = (
+    out = (
         p.join(g, "cell")
         .where(bbox_hit)
         .select("point_id", "x", "y", id_col)
         .join(vg.select(id_col, "xs", "ys"), id_col)
-    )
-    if refine == "expr":
-        return cand.where(inside).select("point_id", id_col)
-    out = cand.select(
-        "point_id", "x", "y", F.col(id_col).alias("_id"), "xs", "ys"
+        .select("point_id", "x", "y", F.col(id_col).alias("_id"), "xs", "ys")
     )
     out = out.mapInArrow(
         _pip_kernel,
@@ -281,8 +251,7 @@ def _pip_kernel(batches):
     cross products over candidate rows (point_id, x, y, _id, xs, ys)
     → survivors.  Vertex lists are gathered straight from the Arrow
     list buffers (offsets + flat float64), grouped per distinct vertex
-    count.  Same IEEE expression per edge as the expr variant —
-    results identical."""
+    count."""
     import numpy as np
     import pyarrow as pa
 
@@ -322,8 +291,9 @@ def _sat_separated(avx, avy, bvx, bvy):
     the first one or two axes, so the typical cost is O(k x nQ) instead
     of the full k x nA x nB cross tensor (which the first version
     materialized before reducing — VERDICT r4 'what's wrong' #3).
-    Per-element IEEE expression identical to the expr fold
-    (_separated_by), so results are bit-equal."""
+    Touching boundaries give cross == 0 → NOT separated (closed
+    semantics, consistent with the engine's closed-interval rect
+    predicate P1)."""
     import numpy as np
 
     k = len(avx)
@@ -383,34 +353,11 @@ def _sat_kernel(batches):
             [col[n].filter(mask) for n in out_names], names=out_names)
 
 
-def _separated_by(xs_p, ys_p, xs_q, ys_q):
-    """True iff some edge of CCW convex polygon P is a separating axis
-    for polygon Q: all Q vertices strictly outside (cross < 0).  Touching
-    boundaries give cross == 0 → NOT separated (closed semantics,
-    consistent with the engine's closed-interval rect predicate P1)."""
-    n_p = F.size(xs_p)
-
-    def cross(i, j):
-        xi, yi = F.element_at(xs_p, i + F.lit(1)), F.element_at(ys_p, i + F.lit(1))
-        k = F.pmod(i + F.lit(1), n_p) + F.lit(1)
-        xj, yj = F.element_at(xs_p, k), F.element_at(ys_p, k)
-        qx, qy = F.element_at(xs_q, j), F.element_at(ys_q, j)
-        return (xj - xi) * (qy - yi) - (yj - yi) * (qx - xi)
-
-    return F.exists(
-        F.sequence(F.lit(0), n_p - F.lit(1)),
-        lambda i: F.forall(
-            F.sequence(F.lit(1), F.size(xs_q)),
-            lambda j: cross(i, j) < F.lit(0.0),
-        ),
-    )
-
-
 def polygon_join(
     polys_a: DataFrame,
     polys_b: DataFrame,
     grid: Grid,
-    refine: str = "expr",
+    refine: str = "kernel",
     hot_threshold: int | None = None,
     n_salt: int = 16,
     sample_fraction: float = 1.0,
@@ -434,14 +381,10 @@ def polygon_join(
       3. cheap bbox overlap pre-filter prunes most candidates before
          the exact SAT refine.
 
-    ``refine='expr'`` (default) evaluates the separating-axis test as
-    nested exists/forall over the vertex arrays — JVM, no Python, but
-    interpreted per candidate; ``refine='kernel'`` runs the identical
-    per-edge IEEE cross products as an Arrow-native numpy kernel
-    (mapInArrow over the raw list buffers) — the scale path when
-    bbox-overlapping candidates dominate (measured 8.6x vs the rect
-    join for 'expr' at 10^6 rows; scripts/polygon_scale_run.py tracks
-    both).
+    The SAT refine is an Arrow-native numpy kernel (``mapInArrow``,
+    :func:`_sat_kernel`) over the raw list buffers, with a per-axis
+    short circuit.  ``refine`` accepts only ``'kernel'``: it is kept so
+    that callers still passing ``refine='kernel'`` keep working.
 
     ``hot_threshold``, ``n_salt`` and ``sample_fraction`` are the rect
     join's skew defense (``operators.cover.cell_candidates``): hot cells
@@ -458,9 +401,9 @@ def polygon_join(
     expensive; pass ``validate=False`` for rings a plan constructs
     with statically valid arity.  The Arrow kernel independently
     asserts ring arity from the list offsets (free), so degenerate
-    rings can never produce silent wrong answers in kernel mode."""
-    if refine not in ("expr", "kernel"):
-        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
+    rings can never produce silent wrong answers."""
+    if refine != "kernel":
+        raise ValueError(f"refine must be 'kernel', got {refine!r}")
     # ring validation attaches to the verts branch below (the only
     # branch that consumes ring payloads); the slim cell join never
     # touches the arrays
@@ -497,7 +440,7 @@ def polygon_join(
     # re-attach ring payloads by id for the bbox SURVIVORS only — two
     # key joins over the (much smaller) surviving candidate set instead
     # of copying both rings through every cell-join candidate
-    cand = (
+    kin = (
         cand.select(*out_cols)
         .join(
             va.select(
@@ -513,13 +456,8 @@ def polygon_join(
             ),
             "b_doc_id",
         )
+        .select(*out_cols, "a_xs", "a_ys", "b_xs", "b_ys")
     )
-    if refine == "expr":
-        sep = _separated_by(
-            F.col("a_xs"), F.col("a_ys"), F.col("b_xs"), F.col("b_ys")
-        ) | _separated_by(F.col("b_xs"), F.col("b_ys"), F.col("a_xs"), F.col("a_ys"))
-        return cand.where(~sep).select(*out_cols)
-    kin = cand.select(*out_cols, "a_xs", "a_ys", "b_xs", "b_ys")
     schema = _id_schema(
         kin,
         [("a_doc_id", "a_doc_id"), ("b_doc_id", "b_doc_id")],

@@ -22,7 +22,7 @@ the row id, identical at any parallelism.
 Prints one JSON line and writes it to BENCH/adaptive_scale.json.  Env:
 ADAPT_SCALE_A (default 1000000), ADAPT_SCALE_B (500000), CLUSTER_FRAC
 (0.2), CLUSTER_DIAM (24.0), ADAPT_HOT_THRESHOLD (5000),
-SPARK_GRAFT_CPUS (16).
+SPARK_GRAFT_CPUS (os.cpu_count()).
 """
 
 from __future__ import annotations
@@ -91,7 +91,7 @@ def main() -> None:
     n_b = int(os.environ.get("ADAPT_SCALE_B", "500000"))
     cluster_frac = float(os.environ.get("CLUSTER_FRAC", "0.2"))
     cluster_diam = float(os.environ.get("CLUSTER_DIAM", "24.0"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     hot_threshold = int(os.environ.get("ADAPT_HOT_THRESHOLD", "5000"))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")

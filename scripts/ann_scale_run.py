@@ -8,7 +8,8 @@ Vectors are a deterministic function of vec_id (parallelism-independent):
 32-dim, values from integer hashing, plus a planted cluster structure
 (vec_id % 64 picks one of 64 directions) so IVF lists are meaningful.
 
-Prints one JSON line with walls and recalls.
+Prints one JSON line with walls and recalls.  Env: SPARK_GRAFT_CPUS
+(default os.cpu_count()).
 """
 
 from __future__ import annotations
@@ -51,7 +52,7 @@ def main() -> None:
     n = int(os.environ.get("ANN_SCALE_N", "200000"))
     n_queries = int(os.environ.get("ANN_SCALE_Q", "100"))
     k = 10
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus * 2))

@@ -9,6 +9,7 @@ earlier doc) and 10% near-duplicates (one word changed) so both the exact
 and near-dup machinery do real work.
 
 Prints one JSON line: {docs, lsh_pairs, n_components, wall_sec, docs_per_sec}.
+Env: SPARK_GRAFT_CPUS (default os.cpu_count()).
 """
 
 from __future__ import annotations
@@ -51,7 +52,7 @@ def synth_corpus(spark: SparkSession, n: int):
 
 def main() -> None:
     n = int(os.environ.get("DEDUP_SCALE_N", "300000"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus * 2))

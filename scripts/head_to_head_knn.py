@@ -22,7 +22,8 @@ Protocol (same as the r4 join head-to-head):
   bound bug, RTreeBulkLoad.cpp:284-295) — all three counted.
 
 Env: H2H_N (default 3000000), H2H_Q (300000), H2H_K (5),
-SPARK_GRAFT_CPUS (32).  Prints one JSON line -> BENCH/knn_h2h.json.
+SPARK_GRAFT_CPUS (os.cpu_count()).
+Prints one JSON line -> BENCH/knn_h2h.json.
 """
 
 from __future__ import annotations
@@ -139,7 +140,7 @@ def main() -> None:
     n = int(os.environ.get("H2H_N", "3000000"))
     m = int(os.environ.get("H2H_Q", "300000"))
     k = int(os.environ.get("H2H_K", "5"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     work = Path(os.environ.get("H2H_DIR") or tempfile.mkdtemp(prefix="knn_h2h_"))
     work.mkdir(parents=True, exist_ok=True)
 

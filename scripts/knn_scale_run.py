@@ -11,7 +11,7 @@ across runs and code changes.
 Prints one JSON line and writes it to BENCH/knn_scale.json; curated
 results live in BENCH/BASELINE.md.
 Env: KNN_SCALE_A (default 100000), KNN_SCALE_B (default 1000000),
-     SPARK_GRAFT_CPUS (default 16).
+     SPARK_GRAFT_CPUS (default os.cpu_count()).
 """
 
 from __future__ import annotations
@@ -70,7 +70,7 @@ def checksum(df) -> tuple[int, int]:
 def main() -> None:
     n_a = int(os.environ.get("KNN_SCALE_A", "100000"))
     n_b = int(os.environ.get("KNN_SCALE_B", "1000000"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("knn-scale-run")

@@ -1,27 +1,31 @@
 #!/usr/bin/env python
-"""Polygon-family scale evidence (round 4).
+"""Polygon-family scale evidence.
 
-Measures the two new polygon kernels at ~10^6-row inputs against their
+Measures the two polygon joins at ~10^6-row inputs against their
 rect-based baselines on the SAME data, so the marginal cost of the
 exact polygon refine (the separating-axis test / all-edges
-cross-product fold) is isolated from the shared candidate-generation
-plan (cover explode -> cell equi-join -> bbox prefilter):
+cross-product test, each an Arrow kernel) is isolated from the shared
+candidate-generation plan (cover explode -> cell equi-join -> bbox
+prefilter):
 
 - ``rect_join``     — spatial_join (closed rect-rect), the baseline;
 - ``octagon_join``  — polygon_join on corner-cut octagons derived from
-                      the same rects (SAT refine, 8x8 cross products);
+                      the same rects (SAT kernel, 8x8 cross products);
 - ``rect_pip``      — pip_join of N points vs the rect corpus;
 - ``polygon_pip``   — polygon_pip_join of the same points vs the
-                      octagons (F.aggregate cross-product fold).
+                      octagons (PIP kernel, 8 cross products).
 
 Correctness gates ride along (octagons are inscribed in their rects):
 octagon pairs must be a SUBSET of rect pairs, polygon PIP hits a SUBSET
 of rect PIP hits — verified with anti-joins that must return 0 rows;
-walls are only published for gated outputs.
+walls are only published for gated outputs.  ``POLY_SCALE_OPS=a,b``
+runs only the named ops and prints their walls, with no gates and no
+artifact.
 
 Prints one JSON line; curated results live in BENCH/BASELINE.md.
 Env: POLY_SCALE_A (default 1000000), POLY_SCALE_B (default 500000),
-     POLY_SCALE_PTS (default 1000000), SPARK_GRAFT_CPUS (default 16).
+     POLY_SCALE_PTS (default 1000000), SPARK_GRAFT_CPUS (default
+     os.cpu_count(), this machine's core count).
 """
 
 from __future__ import annotations
@@ -83,7 +87,7 @@ def main() -> None:
     n_a = int(os.environ.get("POLY_SCALE_A", "1000000"))
     n_b = int(os.environ.get("POLY_SCALE_B", "500000"))
     n_pts = int(os.environ.get("POLY_SCALE_PTS", "1000000"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("polygon-scale-run")
@@ -108,10 +112,8 @@ def main() -> None:
     ops = {
         "rect_join": lambda: spatial_join(a, b, GRID),
         "octagon_join": lambda: polygon_join(oa, ob, GRID),
-        "octagon_join_kernel": lambda: polygon_join(oa, ob, GRID, refine="kernel"),
         "rect_pip": lambda: pip_join(pts, a, GRID, "closed"),
         "polygon_pip": lambda: polygon_pip_join(pts, oa, GRID),
-        "polygon_pip_kernel": lambda: polygon_pip_join(pts, oa, GRID, refine="kernel"),
     }
     only = os.environ.get("POLY_SCALE_OPS")
     if only:
@@ -125,6 +127,15 @@ def main() -> None:
             counts[name] = n
         walls[name] = best
 
+    if only:
+        # subset probe (e.g. a parallelism-scaling datapoint): publish
+        # walls only, skip the gates and the JSON artifact
+        print(json.dumps({"n_a": n_a, "n_b": n_b, "n_pts": n_pts,
+                          "cpus": cpus, "walls_sec": walls,
+                          "output_rows": counts, "subset": only}))
+        spark.stop()
+        return
+
     # correctness gates: inscribed-subset invariants must hold exactly
     extra_join = (
         polygon_join(oa, ob, GRID)
@@ -136,49 +147,17 @@ def main() -> None:
         .join(pip_join(pts, a, GRID, "closed"), ["point_id", "doc_id"], "left_anti")
         .count()
     )
-    if only:
-        # subset probe (e.g. a parallelism-scaling datapoint): publish
-        # walls only, skip the full gate battery and the JSON artifact
-        print(json.dumps({"n_a": n_a, "n_b": n_b, "n_pts": n_pts,
-                          "cpus": cpus, "walls_sec": walls,
-                          "output_rows": counts, "subset": only}))
-        spark.stop()
-        return
-
-    # expr ↔ kernel identity: same counts + empty symmetric differences
-    kj_extra = (
-        polygon_join(oa, ob, GRID, refine="kernel")
-        .join(polygon_join(oa, ob, GRID), ["a_doc_id", "b_doc_id"], "left_anti")
-        .count()
-    )
-    kp_extra = (
-        polygon_pip_join(pts, oa, GRID, refine="kernel")
-        .join(polygon_pip_join(pts, oa, GRID), ["point_id", "doc_id"], "left_anti")
-        .count()
-    )
-    variant_gate_ok = (
-        kj_extra == 0 and kp_extra == 0
-        and counts["octagon_join"] == counts["octagon_join_kernel"]
-        and counts["polygon_pip"] == counts["polygon_pip_kernel"]
-    )
-    if extra_join or extra_pip or not variant_gate_ok:
+    if extra_join or extra_pip:
         print(json.dumps({"error": "gate FAILED",
-                          "extra_join": extra_join, "extra_pip": extra_pip,
-                          "kernel_extra": [kj_extra, kp_extra]}))
+                          "extra_join": extra_join, "extra_pip": extra_pip}))
         sys.exit(1)
 
     out = {
         "n_a": n_a, "n_b": n_b, "n_pts": n_pts, "cpus": cpus,
         "walls_sec": walls, "output_rows": counts,
         "sat_overhead_vs_rect_join": round(walls["octagon_join"] / walls["rect_join"], 2),
-        "sat_kernel_overhead_vs_rect_join": round(
-            walls["octagon_join_kernel"] / walls["rect_join"], 2
-        ),
         "pip_overhead_vs_rect": round(walls["polygon_pip"] / walls["rect_pip"], 2),
-        "pip_kernel_overhead_vs_rect": round(
-            walls["polygon_pip_kernel"] / walls["rect_pip"], 2
-        ),
-        "subset_gates": "ok", "variant_identity": "ok",
+        "subset_gates": "ok",
     }
     line = json.dumps(out)
     with open(Path(__file__).resolve().parent.parent / "BENCH" / "polygon_scale.json", "w") as f:

@@ -24,7 +24,7 @@ walls with per-pass detail in the artifact.
 Prints one JSON line -> BENCH/polygon_skew.json (+ curated table in
 BENCH/BASELINE.md).  Env: POLY_SKEW_A (default 600000), POLY_SKEW_B
 (300000), CLUSTER_FRAC (0.25), CLUSTER_DIAM (32.0), POLY_HOT_THRESHOLD
-(5000), POLY_SKEW_PASSES (3), SPARK_GRAFT_CPUS (16).
+(5000), POLY_SKEW_PASSES (3), SPARK_GRAFT_CPUS (os.cpu_count()).
 """
 
 from __future__ import annotations
@@ -75,7 +75,7 @@ def main() -> None:
     cluster_diam = float(os.environ.get("CLUSTER_DIAM", "32.0"))
     hot_threshold = int(os.environ.get("POLY_HOT_THRESHOLD", "5000"))
     n_passes = max(2, int(os.environ.get("POLY_SKEW_PASSES", "3")))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("polygon-skew-run")
@@ -104,10 +104,10 @@ def main() -> None:
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true" if on else "false")
 
     def plain():
-        return polygon_join(oa, ob, GRID, refine="kernel")
+        return polygon_join(oa, ob, GRID)
 
     def skew():
-        return polygon_join(oa, ob, GRID, refine="kernel", hot_threshold=hot_threshold)
+        return polygon_join(oa, ob, GRID, hot_threshold=hot_threshold)
 
     variants = {  # name: (make, aqe_skew_on)
         "plain_aqe": (plain, True),

@@ -1,15 +1,18 @@
-"""Every engine import in the untested entry points resolves.
+"""Every engine import in the untested entry points resolves, and every
+call of an imported engine function binds its keyword arguments.
 
-No test runs ``jobs/*.py``, ``scripts/*.py`` or ``__spark_entry__.py``
-end to end, so a renamed or deleted engine name would break them
-silently.  This parses each file with ``ast`` (nothing is executed, no
-Spark session starts) and resolves every ``from rtree_cpp_spark... import
-name`` against the engine modules."""
+No test runs ``jobs/*.py``, ``scripts/*.py``, ``__spark_entry__.py`` or
+``perfbench/*.py`` end to end, so a renamed or deleted engine name or
+parameter would break them silently.  This parses each file with
+``ast`` (nothing is executed, no Spark session starts), resolves every
+``from rtree_cpp_spark... import name`` against the engine modules and
+checks each call's keyword names against ``inspect.signature``."""
 
 from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 from pathlib import Path
 
 import pytest
@@ -18,13 +21,14 @@ ROOT = Path(__file__).resolve().parent.parent
 ENTRY_POINTS = sorted(
     [*ROOT.glob("jobs/*.py"), *ROOT.glob("scripts/*.py"), ROOT / "__spark_entry__.py"]
 )
+CALLERS = ENTRY_POINTS + sorted(ROOT.glob("perfbench/*.py"))
 
 
-def _engine_imports(path: Path) -> list[tuple[int, str, str]]:
-    """(line, module, name) of every ``from rtree_cpp_spark... import``,
-    nested and in-function imports included."""
+def _engine_imports(path: Path) -> list[tuple[int, str, str, str]]:
+    """(line, module, name, local name) of every ``from rtree_cpp_spark...
+    import``, nested and in-function imports included."""
     return [
-        (node.lineno, node.module, alias.name)
+        (node.lineno, node.module, alias.name, alias.asname or alias.name)
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
         if isinstance(node, ast.ImportFrom) and node.level == 0
         and node.module and node.module.split(".")[0] == "rtree_cpp_spark"
@@ -32,12 +36,17 @@ def _engine_imports(path: Path) -> list[tuple[int, str, str]]:
     ]
 
 
-def _resolves(module: str, name: str) -> bool:
+def _engine_object(module: str, name: str):
+    """``from module import name``: an attribute, else a submodule."""
     mod = importlib.import_module(module)
     if hasattr(mod, name):
-        return True
-    try:  # ``from package import submodule``
-        importlib.import_module(f"{module}.{name}")
+        return getattr(mod, name)
+    return importlib.import_module(f"{module}.{name}")
+
+
+def _resolves(module: str, name: str) -> bool:
+    try:
+        _engine_object(module, name)
     except ModuleNotFoundError:
         return False
     return True
@@ -52,7 +61,72 @@ def test_entry_points_import_engine_names():
 def test_engine_imports_resolve(path):
     missing = [
         f"{path.name}:{line}: from {module} import {name}"
-        for line, module, name in _engine_imports(path)
+        for line, module, name, _ in _engine_imports(path)
         if not _resolves(module, name)
     ]
     assert not missing, missing
+
+
+def _unbound_keywords(callee, keywords: list[str]) -> list[str]:
+    """Keyword names ``callee`` does not accept (none if it takes
+    ``**kwargs`` or has no inspectable signature)."""
+    try:
+        params = inspect.signature(callee).parameters.values()
+    except (TypeError, ValueError):
+        return []
+    if any(p.kind is p.VAR_KEYWORD for p in params):
+        return []
+    names = {p.name for p in params if p.kind is not p.POSITIONAL_ONLY}
+    return [k for k in keywords if k not in names]
+
+
+def _engine_calls(path: Path):
+    """(line, callee name, callee, keyword names) of every call of an
+    imported engine callable: ``f(...)``, ``module.f(...)``, and a call
+    that passes ``f`` positionally and forwards its keywords to it
+    (perfbench's ``_span(name, fn, *args, **kw)``)."""
+    imported = {
+        local: _engine_object(module, name)
+        for _, module, name, local in _engine_imports(path)
+    }
+
+    def resolve(node):
+        if isinstance(node, ast.Name):
+            return imported.get(node.id)
+        if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+            mod = imported.get(node.value.id)
+            if inspect.ismodule(mod):
+                return getattr(mod, node.attr, None)
+        return None
+
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if not isinstance(node, ast.Call):
+            continue
+        keywords = [k.arg for k in node.keywords if k.arg is not None]
+        callee = resolve(node.func)
+        if callee is None:
+            callee = next((c for c in map(resolve, node.args) if callable(c)), None)
+        if callable(callee) and keywords:
+            name = getattr(callee, "__name__", ast.unparse(node.func))
+            yield node.lineno, name, callee, keywords
+
+
+def test_engine_calls_found():
+    # the walk sees the keyword calls that must keep binding, the
+    # forwarded one in perfbench included
+    calls: dict[tuple[str, str], set[str]] = {}
+    for path in CALLERS:
+        for _, name, _, keywords in _engine_calls(path):
+            calls.setdefault((path.name, name), set()).update(keywords)
+    assert "refine" in calls[("workloads.py", "polygon_join")]
+    assert "hot_threshold" in calls[("run_join.py", "polygon_join")]
+
+
+@pytest.mark.parametrize("path", CALLERS, ids=lambda p: str(p.relative_to(ROOT)))
+def test_engine_call_keywords_bind(path):
+    unbound = [
+        f"{path.name}:{line}: {name}(... {k}=...)"
+        for line, name, callee, keywords in _engine_calls(path)
+        for k in _unbound_keywords(callee, keywords)
+    ]
+    assert not unbound, unbound

@@ -136,7 +136,7 @@ def test_job_path_salted_keep_cell(spark, rects_a_df, rects_b_df, rects_a_pdf, r
 
     oa, ob = octagons_from_rects(rects_a_df), octagons_from_rects(rects_b_df)
     octagon = polygon_join(
-        oa, ob, grid, refine="kernel", hot_threshold=5, n_salt=4, keep_cell=True
+        oa, ob, grid, hot_threshold=5, n_salt=4, keep_cell=True
     )
     assert_same_rows(octagon.drop("cell"), polygon_join(oa, ob, grid).toPandas())
     gp = octagon.toPandas()
@@ -511,8 +511,10 @@ def test_polygon_pip_join_vs_brute(spark, rects_a_df, rects_a_pdf):
     got_df = polygon_pip_join(
         spark.createDataFrame(pts), octagons_from_rects(rects_a_df), grid
     )
-    # hot path must stay JVM-side (whole-stage codegen, no Python UDF)
-    assert "BatchEvalPython" not in got_df._jdf.queryExecution().executedPlan().toString()
+    # the refine is the Arrow kernel, never a row-at-a-time Python UDF
+    plan = got_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow _pip_kernel(" in plan
+    assert "BatchEvalPython" not in plan
 
     mnx = rects_a_pdf["min_x"].to_numpy(dtype=np.float64)
     mny = rects_a_pdf["min_y"].to_numpy(dtype=np.float64)
@@ -614,7 +616,10 @@ def test_polygon_join_vs_brute_sat(spark, rects_a_df, rects_b_df, rects_a_pdf, r
         octagons_from_rects(a_df), octagons_from_rects(b_df), grid
     )
     got = got_df.toPandas()
-    assert "BatchEvalPython" not in got_df._jdf.queryExecution().executedPlan().toString()
+    # the refine is the Arrow kernel, never a row-at-a-time Python UDF
+    plan = got_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow _sat_kernel(" in plan
+    assert "BatchEvalPython" not in plan
 
     avx, avy = _octagon_verts_np(apdf)  # (8, NA)
     bvx, bvy = _octagon_verts_np(bpdf)  # (8, NB)
@@ -681,6 +686,32 @@ def _sat_intersects_np(ax, ay, bx, by) -> bool:
     return not separated(ax, ay, bx, by) and not separated(bx, by, ax, ay)
 
 
+def _sat_pairs_np(apdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
+    """All-pairs SAT brute: (a_doc_id, b_doc_id) of intersecting rings."""
+    rows = [
+        (ra.doc_id, rb.doc_id)
+        for ra in apdf.itertuples()
+        for rb in bpdf.itertuples()
+        if _sat_intersects_np(np.asarray(ra.xs), np.asarray(ra.ys),
+                              np.asarray(rb.xs), np.asarray(rb.ys))
+    ]
+    return pd.DataFrame(rows, columns=["a_doc_id", "b_doc_id"])
+
+
+def _pip_hits_np(gpdf: pd.DataFrame, pts: pd.DataFrame) -> pd.DataFrame:
+    """All-pairs PIP brute: (point_id, doc_id) where every edge's cross
+    product is >= 0 (inside or on a CCW convex ring)."""
+    rows = []
+    for rg in gpdf.itertuples():
+        gx, gy = np.asarray(rg.xs), np.asarray(rg.ys)
+        gxj, gyj = np.roll(gx, -1), np.roll(gy, -1)
+        for pid, px, py in zip(pts["point_id"], pts["x"], pts["y"]):
+            cross = (gxj - gx) * (py - gy) - (gyj - gy) * (px - gx)
+            if np.all(cross >= 0):
+                rows.append((pid, rg.doc_id))
+    return pd.DataFrame(rows, columns=["point_id", "doc_id"])
+
+
 def test_polygon_join_general_convex(spark):
     """SAT join on GENERAL random convex polygons (3-10 verts, rotated)
     vs the all-pairs numpy brute — proves the kernel is not
@@ -693,14 +724,7 @@ def test_polygon_join_general_convex(spark):
     got_df = polygon_join(
         spark.createDataFrame(apdf), spark.createDataFrame(bpdf), grid
     )
-    exp_rows = []
-    for _, ra in apdf.iterrows():
-        ax, ay = np.asarray(ra["xs"]), np.asarray(ra["ys"])
-        for _, rb in bpdf.iterrows():
-            bx, by = np.asarray(rb["xs"]), np.asarray(rb["ys"])
-            if _sat_intersects_np(ax, ay, bx, by):
-                exp_rows.append((ra["doc_id"], rb["doc_id"]))
-    exp = pd.DataFrame(exp_rows, columns=["a_doc_id", "b_doc_id"])
+    exp = _sat_pairs_np(apdf, bpdf)
     assert len(exp) > 0
     assert_same_rows(got_df, exp)
 
@@ -721,21 +745,13 @@ def test_polygon_pip_general_convex(spark):
     got_df = polygon_pip_join(
         spark.createDataFrame(pts), spark.createDataFrame(gpdf), grid
     )
-    exp_rows = []
-    for _, rg in gpdf.iterrows():
-        gx, gy = np.asarray(rg["xs"]), np.asarray(rg["ys"])
-        gxj, gyj = np.roll(gx, -1), np.roll(gy, -1)
-        for pid, px, py in zip(pts["point_id"], pts["x"], pts["y"]):
-            cross = (gxj - gx) * (py - gy) - (gyj - gy) * (px - gx)
-            if np.all(cross >= 0):
-                exp_rows.append((pid, rg["doc_id"]))
-    exp = pd.DataFrame(exp_rows, columns=["point_id", "doc_id"])
+    exp = _pip_hits_np(gpdf, pts)
     assert len(exp) > 0
     assert_same_rows(got_df, exp)
 
 
 def test_polygon_kernels_empty_and_disjoint(spark):
-    """Kernel refine paths survive zero-size Arrow batches: disjoint
+    """The Arrow refines survive zero-size Arrow batches: disjoint
     corpora (zero candidates) and an empty point set both return empty
     results without touching the numpy stacking path."""
     from rtree_cpp_spark.operators.pip_join import polygon_join, polygon_pip_join
@@ -746,19 +762,21 @@ def test_polygon_kernels_empty_and_disjoint(spark):
     bpdf["xs"] = bpdf["xs"].map(lambda v: [x + 5000.0 for x in v])
     grid = Grid(5)
     a_df, b_df = spark.createDataFrame(apdf), spark.createDataFrame(bpdf)
-    assert polygon_join(a_df, b_df, grid, refine="kernel").count() == 0
+    assert polygon_join(a_df, b_df, grid).count() == 0
     empty_pts = spark.createDataFrame(
         pd.DataFrame({"point_id": pd.Series(dtype=str),
                       "x": pd.Series(dtype=float), "y": pd.Series(dtype=float)}),
         schema="point_id string, x double, y double",
     )
-    assert polygon_pip_join(empty_pts, a_df, grid, refine="kernel").count() == 0
+    assert polygon_pip_join(empty_pts, a_df, grid).count() == 0
 
 
 def test_polygon_degenerate_rings_fail_fast(spark):
     """Rings with < 3 vertices (or mismatched xs/ys lengths) raise a
     clear precondition error instead of a cryptic element_at failure
-    mid-plan (ADVICE r4)."""
+    mid-plan (ADVICE r4).  With ``validate=False`` no in-plan check runs,
+    so a bad ring whose bbox meets a point or a good polygon reaches the
+    Arrow kernel, whose own arity check (``_check_lens``) must raise."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PythonException
 
@@ -768,6 +786,10 @@ def test_polygon_degenerate_rings_fail_fast(spark):
         pd.DataFrame({"doc_id": ["D0"], "xs": [[100.0, 200.0]], "ys": [[100.0, 100.0]]})
     )
     good = spark.createDataFrame(_random_convex_polys(5, seed=3, id_prefix="GG"))
+    # a CCW triangle straddling the bad ring's segment
+    tri = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": ["T0"], "xs": [[120.0, 180.0, 150.0]], "ys": [[80.0, 80.0, 130.0]]}
+    ))
     pts = spark.createDataFrame(
         pd.DataFrame({"point_id": ["P0"], "x": [150.0], "y": [100.0]})
     )
@@ -775,17 +797,35 @@ def test_polygon_degenerate_rings_fail_fast(spark):
     for broken in (
         lambda: polygon_pip_join(pts, bad, grid).count(),
         lambda: polygon_join(bad, good, grid).count(),
-        lambda: polygon_join(good, bad, grid, refine="kernel").count(),
+        lambda: polygon_join(good, bad, grid).count(),
     ):
         with pytest.raises((Py4JJavaError, PythonException, Exception)) as ei:
             broken()
         assert "3 vertices" in str(ei.value)
+    for broken in (
+        lambda: polygon_pip_join(pts, bad, grid, validate=False).count(),
+        lambda: polygon_join(tri, bad, grid, validate=False).count(),
+        lambda: polygon_join(bad, tri, grid, validate=False).count(),
+    ):
+        with pytest.raises(PythonException) as ei:
+            broken()
+        assert "3 vertices" in str(ei.value)
+
+
+def test_polygon_join_refine_only_kernel(spark):
+    """``refine`` names the one SAT refine; any other value is rejected."""
+    from rtree_cpp_spark.operators.pip_join import polygon_join
+
+    polys = spark.createDataFrame(_random_convex_polys(3, seed=5, id_prefix="R"))
+    with pytest.raises(ValueError, match="refine"):
+        polygon_join(polys, polys, Grid(5), refine="expr")
 
 
 def test_polygon_kernel_accepts_nonstring_ids(spark):
-    """refine='kernel' derives its output schema from the input plan, so
-    integer doc ids work identically in both refine modes (ADVICE r4:
-    the old hardcoded string schema made the modes asymmetric)."""
+    """Both Arrow kernels derive their output schema from the input
+    plan, so integer doc and point ids come back as int64 with the
+    brute-force rows (ADVICE r4: a hardcoded string schema would reject
+    them)."""
     from rtree_cpp_spark.operators.pip_join import polygon_join, polygon_pip_join
 
     apdf = _random_convex_polys(30, seed=51, id_prefix="X")
@@ -794,14 +834,14 @@ def test_polygon_kernel_accepts_nonstring_ids(spark):
     bpdf["doc_id"] = np.arange(len(bpdf), dtype=np.int64)
     grid = Grid(5)
     a_df, b_df = spark.createDataFrame(apdf), spark.createDataFrame(bpdf)
-    expr = polygon_join(a_df, b_df, grid).toPandas()
-    kern = polygon_join(a_df, b_df, grid, refine="kernel").toPandas()
+    kern = polygon_join(a_df, b_df, grid).toPandas()
+    exp = _sat_pairs_np(apdf, bpdf)
     key = ["a_doc_id", "b_doc_id"]
     pd.testing.assert_frame_equal(
-        expr.sort_values(key).reset_index(drop=True),
+        exp.sort_values(key).reset_index(drop=True),
         kern.sort_values(key).reset_index(drop=True),
     )
-    assert len(expr) > 0
+    assert len(kern) > 0
     rng = np.random.RandomState(57)
     pts = pd.DataFrame({
         "point_id": rng.permutation(np.arange(100, dtype=np.int64)),
@@ -809,13 +849,14 @@ def test_polygon_kernel_accepts_nonstring_ids(spark):
         "y": rng.uniform(50, 950, size=100),
     })
     pts_df = spark.createDataFrame(pts)
-    pexpr = polygon_pip_join(pts_df, a_df, grid).toPandas()
-    pkern = polygon_pip_join(pts_df, a_df, grid, refine="kernel").toPandas()
+    pkern = polygon_pip_join(pts_df, a_df, grid).toPandas()
+    pexp = _pip_hits_np(apdf, pts)
     pkey = ["point_id", "doc_id"]
     pd.testing.assert_frame_equal(
-        pexpr.sort_values(pkey).reset_index(drop=True),
+        pexp.sort_values(pkey).reset_index(drop=True),
         pkern.sort_values(pkey).reset_index(drop=True),
     )
+    assert len(pkern) > 0
 
 
 def test_polygon_join_salted_equals_unsalted(spark):
@@ -841,8 +882,8 @@ def test_polygon_join_salted_equals_unsalted(spark):
 def test_polygon_join_adaptive_equals_plain(spark):
     """Mixed-resolution adaptive cells on the polygon join: an
     aggressive threshold subdivides and salts essentially every
-    populated cell, yet rows are identical to the plain join in BOTH
-    refine modes (exactly-once at the row's own resolution), and
+    populated cell, yet rows are identical to the plain join at any
+    salt fan-out (exactly-once at the row's own resolution), and
     keep_cell returns the same coarse reference cell as the plain
     variant."""
     from rtree_cpp_spark.operators.pip_join import polygon_join
@@ -854,10 +895,9 @@ def test_polygon_join_adaptive_equals_plain(spark):
     key = ["a_doc_id", "b_doc_id"]
     plain = polygon_join(a_df, b_df, grid, keep_cell=True).toPandas()
     assert len(plain) > 0
-    for refine, n_salt in (("expr", 4), ("kernel", 16)):
+    for n_salt in (4, 16):
         adapt = polygon_join(
-            a_df, b_df, grid, refine=refine,
-            hot_threshold=1, n_salt=n_salt, keep_cell=True,
+            a_df, b_df, grid, hot_threshold=1, n_salt=n_salt, keep_cell=True,
         ).toPandas()
         pd.testing.assert_frame_equal(
             plain.sort_values(key).reset_index(drop=True),
@@ -865,21 +905,22 @@ def test_polygon_join_adaptive_equals_plain(spark):
         )
 
 
-def test_polygon_refine_kernel_equals_expr(spark):
-    """The Arrow-kernel refine returns EXACTLY the expr variant's rows
-    (same IEEE cross products, different execution), on general convex
-    polygons with mixed vertex counts."""
+def test_polygon_refine_mixed_vertex_counts_vs_brute(spark):
+    """Both Arrow refines group candidates per vertex count; on general
+    convex polygons with mixed counts they return exactly the numpy
+    brute-force rows."""
     from rtree_cpp_spark.operators.pip_join import polygon_join, polygon_pip_join
 
     apdf = _random_convex_polys(50, seed=19, id_prefix="KA")
     bpdf = _random_convex_polys(40, seed=23, id_prefix="KB")
+    assert apdf["xs"].map(len).nunique() > 1 and bpdf["xs"].map(len).nunique() > 1
     grid = Grid(5)
     a_df, b_df = spark.createDataFrame(apdf), spark.createDataFrame(bpdf)
-    expr = polygon_join(a_df, b_df, grid).toPandas()
-    kern = polygon_join(a_df, b_df, grid, refine="kernel").toPandas()
+    kern = polygon_join(a_df, b_df, grid).toPandas()
+    exp = _sat_pairs_np(apdf, bpdf)
     key = ["a_doc_id", "b_doc_id"]
     pd.testing.assert_frame_equal(
-        expr.sort_values(key).reset_index(drop=True),
+        exp.sort_values(key).reset_index(drop=True),
         kern.sort_values(key).reset_index(drop=True),
     )
     rng = np.random.RandomState(29)
@@ -888,15 +929,14 @@ def test_polygon_refine_kernel_equals_expr(spark):
         "x": rng.uniform(50, 950, size=200),
         "y": rng.uniform(50, 950, size=200),
     })
-    p_df = spark.createDataFrame(pts)
-    expr_p = polygon_pip_join(p_df, a_df, grid).toPandas()
-    kern_p = polygon_pip_join(p_df, a_df, grid, refine="kernel").toPandas()
+    kern_p = polygon_pip_join(spark.createDataFrame(pts), a_df, grid).toPandas()
+    exp_p = _pip_hits_np(apdf, pts)
     key = ["point_id", "doc_id"]
     pd.testing.assert_frame_equal(
-        expr_p.sort_values(key).reset_index(drop=True),
+        exp_p.sort_values(key).reset_index(drop=True),
         kern_p.sort_values(key).reset_index(drop=True),
     )
-    assert len(expr) > 0 and len(expr_p) > 0
+    assert len(kern) > 0 and len(kern_p) > 0
 
 
 def test_tile_pyramid_rollup(spark, rects_a_df, rects_a_pdf):
