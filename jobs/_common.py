@@ -18,7 +18,6 @@ from __future__ import annotations
 import argparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
 from rtree_cpp_spark.plans.manifest import new_run_id, resumable_write
@@ -92,14 +91,9 @@ def load_query_points(spark: SparkSession, ref: str) -> DataFrame:
 
 
 def coarse_cell_col(grid: Grid, coarse_level: int, cell: Column) -> Column:
-    """Parent of ``cell`` at ``coarse_level`` — the lineage partition key."""
-    up = grid.level - coarse_level
-    cx = F.floor(cell / F.lit(grid.n)).cast("long")
-    cy = (cell % F.lit(grid.n)).cast("long")
-    return (
-        F.shiftrightunsigned(cx, up) * F.lit(1 << coarse_level)
-        + F.shiftrightunsigned(cy, up)
-    ).alias("part")
+    """Parent of ``cell`` at ``coarse_level`` — the lineage partition key.
+    A coarse level finer than the grid keys by the grid's own cell."""
+    return grid.parent_col(cell, max(grid.level - coarse_level, 0)).alias("part")
 
 
 def finish(

@@ -25,7 +25,13 @@ Design notes
   candidate cell.
 
 All kernels are vectorized numpy (used inside Arrow/pandas UDFs) with
-Column-expression twins for the pure-JVM fast path.
+Column-expression twins for the pure-JVM fast path.  The Column codec
+(:meth:`Grid.xy_cols`, :meth:`Grid.cell_col`, :meth:`Grid.parent_col`,
+:meth:`Grid.morton_col`, :meth:`Grid.cell_box_cols`) is the one place
+plan code learns the cell-id format — the single ``encode/parent/cover/
+ring/bounds`` interface SURVEY.md section 7.3 fixes, so an ``h3``/``s2``
+backend can slot in here alone.  Each Column twin equals its numpy
+method, which is the reference the property tests compare against.
 """
 
 from __future__ import annotations
@@ -159,7 +165,34 @@ class Grid:
         return F.greatest(F.lit(0), F.least(F.lit(self.n - 1), c))
 
     def cell_of_point_col(self, x: Column, y: Column) -> Column:
-        return self.cx_col(x) * F.lit(self.n) + self.cx_col(y)
+        return self.cell_col(self.cx_col(x), self.cx_col(y))
+
+    def xy_cols(self, cell: Column) -> tuple[Column, Column]:
+        """Twin of :meth:`cxcy`: exact integer decode at any level."""
+        return F.shiftrightunsigned(cell, self.level), cell.bitwiseAND(F.lit(self.n - 1))
+
+    def cell_col(self, cx: Column, cy: Column) -> Column:
+        """Twin of :meth:`encode` (``cx * 2^r + cy`` — the SQL form)."""
+        return cx * F.lit(self.n) + cy
+
+    def parent_col(self, cell: Column, levels_up: int) -> Column:
+        """Twin of :meth:`parent`: the cell's ancestor ``levels_up`` up."""
+        if not 0 <= levels_up <= self.level:
+            raise ValueError(f"levels_up must be in [0, {self.level}], got {levels_up}")
+        cx, cy = self.xy_cols(cell)
+        up = Grid(self.level - levels_up, self.extent)
+        return up.cell_col(F.shiftrightunsigned(cx, levels_up), F.shiftrightunsigned(cy, levels_up))
+
+    def morton_col(self, cell: Column) -> Column:
+        """Twin of :meth:`morton`: unrolled bit interleave, a layout sort key."""
+        cx, cy = self.xy_cols(cell)
+        z = F.lit(0).cast("long")
+        for i in range(self.level):
+            z = (
+                z.bitwiseOR(F.shiftleft(F.shiftrightunsigned(cx, i).bitwiseAND(F.lit(1)), 2 * i))
+                .bitwiseOR(F.shiftleft(F.shiftrightunsigned(cy, i).bitwiseAND(F.lit(1)), 2 * i + 1))
+            )
+        return z
 
     def cell_of_point_sql(self, x: str, y: str) -> str:
         """Dialect-neutral SQL for cell_of_point — runs in Spark AND DuckDB."""
@@ -169,11 +202,9 @@ class Grid:
         return f"({cx} * {n} + {cy})"
 
     def cell_box_cols(self, cell: Column) -> tuple[Column, Column, Column, Column]:
-        """(min_x, min_y, max_x, max_y) Column exprs of a cell's closed
-        box — the single Column twin of :meth:`cell_bounds`/:meth:`cxcy`
-        so plan code never hand-rolls the row-major decode."""
-        cy = F.pmod(cell, F.lit(self.n))
-        cx = ((cell - cy) / F.lit(self.n)).cast("long")
+        """Twin of :meth:`cell_bounds`: (min_x, min_y, max_x, max_y) of a
+        cell's closed box."""
+        cx, cy = self.xy_cols(cell)
         s = F.lit(self.cell_size)
         return cx * s, cy * s, (cx + 1) * s, (cy + 1) * s
 

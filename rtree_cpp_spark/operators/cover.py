@@ -27,14 +27,14 @@ FINE_LEVELS = 2  # hot coarse cells subdivide into 4^2 = 16 children
 
 
 def _explode_cells(
-    df: DataFrame, n: int, gx0: Column, gx1: Column, gy0: Column, gy1: Column
+    df: DataFrame, grid: Grid, gx0: Column, gx1: Column, gy0: Column, gy1: Column
 ) -> DataFrame:
     """One row per cell of the inclusive index box [gx0, gx1] x [gy0, gy1]
-    of an ``n`` x ``n`` grid (column ``cell``)."""
+    of ``grid`` (column ``cell``)."""
     return (
         df.withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
         .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .withColumn("cell", F.col("_gx") * F.lit(n) + F.col("_gy"))
+        .withColumn("cell", grid.cell_col(F.col("_gx"), F.col("_gy")))
         .drop("_gx", "_gy")
     )
 
@@ -48,7 +48,7 @@ def with_cover_cells(df: DataFrame, grid: Grid, prefix: str = "") -> DataFrame:
     """
     p = prefix
     return _explode_cells(
-        df, grid.n,
+        df, grid,
         grid.cx_col(F.col(f"{p}min_x")), grid.cx_col(F.col(f"{p}max_x")),
         grid.cx_col(F.col(f"{p}min_y")), grid.cx_col(F.col(f"{p}max_y")),
     )
@@ -60,7 +60,7 @@ def disk_cells(df: DataFrame, grid: Grid) -> DataFrame:
     n = grid.n
     qcx, qcy, rho = F.col("qcx"), F.col("qcy"), F.col("rho")
     return _explode_cells(
-        df, n,
+        df, grid,
         F.greatest(F.lit(0), qcx - rho), F.least(F.lit(n - 1), qcx + rho),
         F.greatest(F.lit(0), qcy - rho), F.least(F.lit(n - 1), qcy + rho),
     )
@@ -173,8 +173,7 @@ def adaptive_rekey(df: DataFrame, p: str, grid: Grid, hot: DataFrame, salts: Col
     fine = Grid(grid.level + FINE_LEVELS, grid.extent)
     m = 1 << FINE_LEVELS  # fine cells per coarse cell per axis
     offset = grid.n * grid.n  # fine keys start above every coarse id
-    ccy = F.pmod(F.col("cell"), F.lit(grid.n))
-    ccx = ((F.col("cell") - ccy) / F.lit(grid.n)).cast("long")
+    ccx, ccy = grid.xy_cols(F.col("cell"))
     fx0, fx1 = fine.cx_col(F.col(f"{p}min_x")), fine.cx_col(F.col(f"{p}max_x"))
     fy0, fy1 = fine.cx_col(F.col(f"{p}min_y")), fine.cx_col(F.col(f"{p}max_y"))
     # fine cover clipped to this coarse cell's children — non-empty
@@ -193,8 +192,7 @@ def adaptive_rekey(df: DataFrame, p: str, grid: Grid, hot: DataFrame, salts: Col
         .withColumn(
             "key",
             F.when(
-                hot_flag,
-                F.lit(offset) + F.col("_fx") * F.lit(fine.n) + F.col("_fy"),
+                hot_flag, F.lit(offset) + fine.cell_col(F.col("_fx"), F.col("_fy"))
             ).otherwise(F.col("cell")),
         )
         .withColumn("salt", F.explode(F.when(hot_flag, salts).otherwise(F.array(F.lit(0)))))

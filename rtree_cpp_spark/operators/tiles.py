@@ -15,21 +15,25 @@ all for primary tiles — it's a projection).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
-from rtree_cpp_spark.functions.geometry import center_cols
 from rtree_cpp_spark.operators.cover import with_cover_cells
+
+
+def primary_cell_col(grid: Grid) -> Column:
+    """The primary-tile rule: the cell of the rect's centroid, taken in
+    double over the ``min_x..max_y`` columns (Main.cpp:126-129)."""
+    min_x, min_y, max_x, max_y = (
+        F.col(c).cast("double") for c in ("min_x", "min_y", "max_x", "max_y")
+    )
+    return grid.cell_of_point_col((min_x + max_x) / 2.0, (min_y + max_y) / 2.0)
 
 
 def primary_tiles(data_rects: DataFrame, grid: Grid) -> DataFrame:
     """(cell, doc_id): exactly one row per doc — a partition of the table."""
-    cx, cy = center_cols(
-        F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-        F.col("max_x").cast("double"), F.col("max_y").cast("double"),
-    )
-    return data_rects.select(grid.cell_of_point_col(cx, cy).alias("cell"), "doc_id")
+    return data_rects.select(primary_cell_col(grid).alias("cell"), "doc_id")
 
 
 def cover_tiles(data_rects: DataFrame, grid: Grid) -> DataFrame:
@@ -44,7 +48,7 @@ def tile_stats(data_rects: DataFrame, grid: Grid) -> DataFrame:
     maintenance (reference Node.cpp:20-38; SURVEY.md B5).  Feeds both
     pruning stats and the adaptive-resolution heuristic."""
     return (
-        cover_tiles_with_rect(data_rects, grid)
+        with_cover_cells(data_rects, grid)
         .groupBy("cell")
         .agg(
             F.count("*").alias("n_docs"),
@@ -54,10 +58,6 @@ def tile_stats(data_rects: DataFrame, grid: Grid) -> DataFrame:
             F.max("max_y").alias("mbr_max_y"),
         )
     )
-
-
-def cover_tiles_with_rect(data_rects: DataFrame, grid: Grid) -> DataFrame:
-    return with_cover_cells(data_rects.select("doc_id", "min_x", "min_y", "max_x", "max_y"), grid)
 
 
 def tile_pyramid(data_rects: DataFrame, grid: Grid) -> DataFrame:
@@ -83,21 +83,14 @@ def tile_pyramid(data_rects: DataFrame, grid: Grid) -> DataFrame:
 def _pyramid_rollup(per_cell: DataFrame, grid: Grid, value_col: str) -> DataFrame:
     """Roll an O(cells) per-cell integer aggregate up the level chain:
     (level, cell, value) for every level from ``grid.level`` to 0.
-    Exact integer decode (cy first, then the remainder division — the
-    same form as Grid.cell_box_cols): no float rounding at any grid
-    size; parent cells are prefix arithmetic (reference upper-level STR
-    build, RTreeBulkLoad.cpp:62-97)."""
-    n = F.lit(grid.n)
-    cy = F.col("cell") % n
-    cx = ((F.col("cell") - cy) / n).cast("long")
+    Parent cells are :meth:`Grid.parent_col` — exact integer prefix
+    arithmetic at any grid size (reference upper-level STR build,
+    RTreeBulkLoad.cpp:62-97)."""
     chain = F.array(
         *[
             F.struct(
                 F.lit(lvl).alias("level"),
-                (
-                    F.shiftrightunsigned(cx, grid.level - lvl) * F.lit(1 << lvl)
-                    + F.shiftrightunsigned(cy, grid.level - lvl)
-                ).alias("pcell"),
+                grid.parent_col(F.col("cell"), grid.level - lvl).alias("pcell"),
             )
             for lvl in range(grid.level, -1, -1)
         ]
@@ -137,13 +130,12 @@ def hot_cells(data_rects: DataFrame, grid: Grid, k: int = 20) -> DataFrame:
         .agg(F.count("*").alias("n_docs"))
     )
     n = grid.n
-    cy = F.col("cell") % F.lit(n)
-    cx = ((F.col("cell") - cy) / F.lit(n)).cast("long")
+    cx, cy = grid.xy_cols(F.col("cell"))
     spread = F.array(
         *[
             F.when(
                 (cx + dx >= 0) & (cx + dx < n) & (cy + dy >= 0) & (cy + dy < n),
-                (cx + dx) * F.lit(n) + (cy + dy),
+                grid.cell_col(cx + dx, cy + dy),
             )
             for dx in (-1, 0, 1)
             for dy in (-1, 0, 1)
@@ -155,8 +147,6 @@ def hot_cells(data_rects: DataFrame, grid: Grid, k: int = 20) -> DataFrame:
         .groupBy("cell")
         .agg(F.sum("n_docs").alias("smoothed"))
     )
-    from pyspark.sql import Window
-
     # Global top-k via orderBy+limit -> TakeOrderedAndProject: each
     # partition keeps k rows, the driver merges — no single-partition
     # sort of the whole cell table (a global row_number window would
@@ -188,8 +178,6 @@ def tile_topk(
     partition keeps at most k rows per cell before the exchange —
     O(k x cells) survives, not O(docs).  ``values`` is (doc_id, value),
     broadcast when small."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("cell").orderBy(F.col("value").desc(), F.col("doc_id"))
     return (
         primary_tiles(data_rects, grid)
@@ -218,27 +206,15 @@ def rasterize(data_rects: DataFrame, grid: Grid, scale: int = 1_000_000) -> Data
     with map-side partials on O(covered-cells) rows; output is O(cells).
     Zero Python, zero joins."""
     s = F.lit(grid.cell_size)
-    d = (
-        data_rects.select("doc_id", "min_x", "min_y", "max_x", "max_y")
-        .withColumn(
-            "_gx", F.explode(F.sequence(grid.cx_col(F.col("min_x")), grid.cx_col(F.col("max_x"))))
-        )
-        .withColumn(
-            "_gy", F.explode(F.sequence(grid.cx_col(F.col("min_y")), grid.cx_col(F.col("max_y"))))
-        )
-    )
-    x0, x1 = F.col("_gx") * s, (F.col("_gx") + F.lit(1)) * s
-    y0, y1 = F.col("_gy") * s, (F.col("_gy") + F.lit(1)) * s
+    x0, y0, x1, y1 = grid.cell_box_cols(F.col("cell"))
     # GREATEST(..., 0): boundary-touch cover cells (closed-interval
     # semantics) and grid-clamped border cells contribute zero area
     ox = F.greatest(F.least(F.col("max_x"), x1) - F.greatest(F.col("min_x"), x0), F.lit(0.0))
     oy = F.greatest(F.least(F.col("max_y"), y1) - F.greatest(F.col("min_y"), y0), F.lit(0.0))
     units = F.floor(((ox / s) * (oy / s)) * F.lit(float(scale))).cast("long")
     return (
-        d.select(
-            (F.col("_gx") * F.lit(grid.n) + F.col("_gy")).alias("cell"),
-            units.alias("_u"),
-        )
+        with_cover_cells(data_rects, grid)
+        .select("cell", units.alias("_u"))
         .groupBy("cell")
         .agg(F.sum("_u").alias("coverage_units"))
     )
@@ -256,11 +232,9 @@ def zonal_stats(data_rects: DataFrame, raster: DataFrame, grid: Grid) -> DataFra
     raster side is O(cells), usually broadcastable; a 2^30-cell band at
     planetary resolution shuffles instead) → groupBy(doc_id) with
     map-side partials.  Zero Python."""
-    cov = with_cover_cells(
-        data_rects.select("doc_id", "min_x", "min_y", "max_x", "max_y"), grid
-    ).select("doc_id", "cell")
     return (
-        cov.join(raster, "cell")
+        cover_tiles(data_rects, grid)
+        .join(raster, "cell")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_cells"),

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid, pick_resolution
-from rtree_cpp_spark.functions.geometry import center_cols
+from rtree_cpp_spark.operators.tiles import primary_cell_col
 from rtree_cpp_spark.plans.manifest import dynamic_overwrite
 
 TARGET_OCCUPANCY = 64.0  # reference node capacity, src/Main.cpp:192
@@ -33,13 +33,7 @@ def median_occupancy_by_level(
     """One sampled pass per candidate level: median docs-per-cell at the
     centroid assignment (SURVEY.md section 4.1)."""
     df = rects if sample_fraction >= 1.0 else rects.sample(fraction=sample_fraction, seed=42)
-    cx, cy = center_cols(
-        F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-        F.col("max_x").cast("double"), F.col("max_y").cast("double"),
-    )
-    cells = df.select(
-        *[Grid(lvl, extent).cell_of_point_col(cx, cy).alias(f"c{lvl}") for lvl in levels]
-    )
+    cells = df.select(*[primary_cell_col(Grid(lvl, extent)).alias(f"c{lvl}") for lvl in levels])
     out: dict[int, float] = {}
     for lvl in levels:
         counts = cells.groupBy(f"c{lvl}").count()
@@ -56,13 +50,7 @@ def occupancy_stats(
     heuristic (SURVEY.md section 4.1) chooses the resolution from.
     Exact ``percentile(0.5)`` (not approx) so the SQL oracle matches."""
     levels = levels or [4, 5, 6]
-    cx, cy = center_cols(
-        F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-        F.col("max_x").cast("double"), F.col("max_y").cast("double"),
-    )
-    cells = rects.select(
-        *[Grid(lvl, extent).cell_of_point_col(cx, cy).alias(f"c{lvl}") for lvl in levels]
-    )
+    cells = rects.select(*[primary_cell_col(Grid(lvl, extent)).alias(f"c{lvl}") for lvl in levels])
     per_level = [
         cells.groupBy(F.col(f"c{lvl}").alias("cell"))
         .agg(F.count("*").alias("n"))
@@ -92,33 +80,15 @@ def choose_grid(
     return Grid(pick_resolution(occ, target), extent)
 
 
-def morton_col(grid: Grid, cell_col: F.Column) -> F.Column:
-    """Z-order sort key from a row-major cell id — pure bit arithmetic,
-    Column-expression (unrolled interleave), used only for layout sort."""
-    cx = F.shiftrightunsigned(cell_col, grid.level)
-    cy = cell_col.bitwiseAND(F.lit(grid.n - 1))
-    z = F.lit(0).cast("long")
-    for i in range(grid.level):
-        bit = F.lit(1 << i)
-        z = (
-            z.bitwiseOR(F.shiftleft(F.shiftrightunsigned(cx, i).bitwiseAND(F.lit(1)), 2 * i))
-            .bitwiseOR(F.shiftleft(F.shiftrightunsigned(cy, i).bitwiseAND(F.lit(1)), 2 * i + 1))
-        )
-    return z
-
-
 def _with_layout_cols(rects: DataFrame, grid: Grid, coarse_levels_up: int) -> DataFrame:
-    """rects + (cell, coarse_cell, _z): the layout's derived key columns."""
-    cx, cy = center_cols(
-        F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-        F.col("max_x").cast("double"), F.col("max_y").cast("double"),
+    """rects + (cell, coarse_cell, _z): the layout's derived key columns.
+    A grid coarser than ``coarse_levels_up`` levels has one coarse cell."""
+    up = min(coarse_levels_up, grid.level)
+    return (
+        rects.withColumn("cell", primary_cell_col(grid))
+        .withColumn("_z", grid.morton_col(F.col("cell")))
+        .withColumn("coarse_cell", grid.parent_col(F.col("cell"), up))
     )
-    cell = grid.cell_of_point_col(cx, cy)
-    df = rects.withColumn("cell", cell).withColumn("_z", morton_col(grid, F.col("cell")))
-    up = coarse_levels_up
-    pcx = F.shiftrightunsigned(F.shiftrightunsigned(F.col("cell"), grid.level), up)
-    pcy = F.shiftrightunsigned(F.col("cell").bitwiseAND(F.lit(grid.n - 1)), up)
-    return df.withColumn("coarse_cell", pcx * F.lit(grid.n >> up) + pcy)
 
 
 def stats_path(path: str) -> str:
@@ -447,7 +417,7 @@ def upsert_layout(
     affected = _affected_partitions(new_df)
     cols = ["doc_id", "min_x", "min_y", "max_x", "max_y", "cell", "_z", "coarse_cell"]
     existing = read_layout(spark, path).where(F.col("coarse_cell").isin(affected))
-    existing = existing.withColumn("_z", morton_col(grid, F.col("cell")))
+    existing = existing.withColumn("_z", grid.morton_col(F.col("cell")))
     keep = existing.join(new_df.select("doc_id").distinct(), "doc_id", "left_anti")
     merged = keep.select(*cols).unionByName(new_df.select(*cols))
     _rewrite_partitions(spark, merged, path, affected)
@@ -473,7 +443,7 @@ def delete_from_layout(
     affected = _affected_partitions(old_df)
     cols = ["doc_id", "min_x", "min_y", "max_x", "max_y", "cell", "_z", "coarse_cell"]
     existing = read_layout(spark, path).where(F.col("coarse_cell").isin(affected))
-    existing = existing.withColumn("_z", morton_col(grid, F.col("cell")))
+    existing = existing.withColumn("_z", grid.morton_col(F.col("cell")))
     keep = existing.join(old_df.select("doc_id").distinct(), "doc_id", "left_anti").select(*cols)
     # emptied partitions fall out of the staged write (no second
     # anti-join pass to pre-compute them)
@@ -542,13 +512,9 @@ def write_bucketed(
     (SURVEY.md §4.2 "bucketing for co-located joins"; the closest Spark
     analog of the reference's persistent R-tree).  Requires a warehouse
     (saveAsTable); asserted shuffle-free by tests via plan inspection."""
-    cx, cy = center_cols(
-        F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-        F.col("max_x").cast("double"), F.col("max_y").cast("double"),
-    )
-    df = rects.withColumn("cell", grid.cell_of_point_col(cx, cy))
     (
-        df.write.mode("overwrite")
+        rects.withColumn("cell", primary_cell_col(grid))
+        .write.mode("overwrite")
         .bucketBy(n_buckets, "cell")
         .sortBy("cell", "min_x")
         .saveAsTable(table_name)

@@ -13,7 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
-from rtree_cpp_spark.operators.tiles import primary_tiles
+from rtree_cpp_spark.operators.spatial_join import spatial_join
+from rtree_cpp_spark.operators.tiles import primary_cell_col, primary_tiles
 from rtree_cpp_spark.sources.extract import rects_only
 from rtree_cpp_spark.sources.synth import DOC_SCHEMA
 
@@ -46,17 +47,12 @@ def run_stream_tiles_once(
 
 
 def stream_spatial_join(docs_stream: DataFrame, static_rects: DataFrame, grid: Grid) -> DataFrame:
-    """Stream-static spatial join: arriving docs are cover-exploded and
-    joined against the static (indexed) rect table per micro-batch —
-    stateless, so no state store grows with the stream.  Semantics match
-    the batch ``spatial_join`` exactly (same refine + reference-point
-    dedup), asserted by the availableNow test."""
-    from rtree_cpp_spark.operators.cover import cell_candidates, side_cover
-    from rtree_cpp_spark.operators.spatial_join import _refine
-
-    a = side_cover(rects_only(docs_stream), grid, "a_")
-    b = side_cover(static_rects, grid, "b_")
-    return _refine(*cell_candidates(a, b, grid, None), grid)
+    """Stream-static spatial join: the batch ``spatial_join`` (plain cell
+    equi-join, no hot-cell census) over each micro-batch of arriving
+    docs against the static rect table — stateless, so no state store
+    grows with the stream; asserted equal to batch by the availableNow
+    test."""
+    return spatial_join(rects_only(docs_stream), static_rects, grid)
 
 
 def stream_range_monitor(
@@ -111,14 +107,7 @@ def stream_cell_stats(docs_stream: DataFrame, grid: Grid) -> DataFrame:
     for every cell touched by each micro-batch."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from rtree_cpp_spark.functions.geometry import center_cols
-
-    r = rects_only(docs_stream)
-    cx, cy = center_cols(
-        F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-        F.col("max_x").cast("double"), F.col("max_y").cast("double"),
-    )
-    tiled = r.withColumn("cell", grid.cell_of_point_col(cx, cy))
+    tiled = rects_only(docs_stream).withColumn("cell", primary_cell_col(grid))
     return tiled.groupBy("cell").applyInPandasWithState(
         _cell_stats_update,
         outputStructType=CELL_STATS_OUTPUT,

@@ -22,7 +22,7 @@ the row id, identical at any parallelism.
 Prints one JSON line and writes it to BENCH/adaptive_scale.json.  Env:
 ADAPT_SCALE_A (default 1000000), ADAPT_SCALE_B (500000), CLUSTER_FRAC
 (0.2), CLUSTER_DIAM (24.0), ADAPT_HOT_THRESHOLD (5000),
-SPARK_GRAFT_CPUS (os.cpu_count()).
+SPARK_GRAFT_CPUS (os.cpu_count()), SPARK_GRAFT_DRIVER_MEM (8g).
 """
 
 from __future__ import annotations
@@ -99,7 +99,7 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(cpus * 2))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -9,7 +9,7 @@ Vectors are a deterministic function of vec_id (parallelism-independent):
 (vec_id % 64 picks one of 64 directions) so IVF lists are meaningful.
 
 Prints one JSON line with walls and recalls.  Env: SPARK_GRAFT_CPUS
-(default os.cpu_count()).
+(default os.cpu_count()), SPARK_GRAFT_DRIVER_MEM (default 8g).
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(cpus * 2))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

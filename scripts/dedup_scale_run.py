@@ -9,7 +9,7 @@ earlier doc) and 10% near-duplicates (one word changed) so both the exact
 and near-dup machinery do real work.
 
 Prints one JSON line: {docs, lsh_pairs, n_components, wall_sec, docs_per_sec}.
-Env: SPARK_GRAFT_CPUS (default os.cpu_count()).
+Env: SPARK_GRAFT_CPUS (default os.cpu_count()), SPARK_GRAFT_DRIVER_MEM (default 8g).
 """
 
 from __future__ import annotations
@@ -57,7 +57,7 @@ def main() -> None:
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus * 2))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -22,7 +22,7 @@ Protocol (same as the r4 join head-to-head):
   bound bug, RTreeBulkLoad.cpp:284-295) — all three counted.
 
 Env: H2H_N (default 3000000), H2H_Q (300000), H2H_K (5),
-SPARK_GRAFT_CPUS (os.cpu_count()).
+SPARK_GRAFT_CPUS (os.cpu_count()), SPARK_GRAFT_DRIVER_MEM (8g).
 Prints one JSON line -> BENCH/knn_h2h.json.
 """
 
@@ -168,7 +168,7 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")

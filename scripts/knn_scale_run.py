@@ -11,7 +11,8 @@ across runs and code changes.
 Prints one JSON line and writes it to BENCH/knn_scale.json; curated
 results live in BENCH/BASELINE.md.
 Env: KNN_SCALE_A (default 100000), KNN_SCALE_B (default 1000000),
-     SPARK_GRAFT_CPUS (default os.cpu_count()).
+     SPARK_GRAFT_CPUS (default os.cpu_count()), SPARK_GRAFT_DRIVER_MEM
+     (default 8g).
 """
 
 from __future__ import annotations
@@ -76,7 +77,7 @@ def main() -> None:
         .appName("knn-scale-run")
         .config("spark.sql.shuffle.partitions", str(cpus * 2))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -19,6 +19,7 @@ Usage:
 Env:
   PIPELINE_SCALE_WORKDIR  corpus parquet cache (reused when present)
   PIPELINE_SCALE_CPUS     local[N] (default 16)
+  SPARK_GRAFT_DRIVER_MEM  driver heap (default 8g)
 
 Prints a per-operator table and one JSON line; curated results live in
 BENCH/BASELINE.md.
@@ -113,7 +114,7 @@ def main() -> None:
         .appName("pipeline-scale-run")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

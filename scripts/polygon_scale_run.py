@@ -25,7 +25,8 @@ artifact.
 Prints one JSON line; curated results live in BENCH/BASELINE.md.
 Env: POLY_SCALE_A (default 1000000), POLY_SCALE_B (default 500000),
      POLY_SCALE_PTS (default 1000000), SPARK_GRAFT_CPUS (default
-     os.cpu_count(), this machine's core count).
+     os.cpu_count(), this machine's core count), SPARK_GRAFT_DRIVER_MEM
+     (default 8g).
 """
 
 from __future__ import annotations
@@ -93,7 +94,7 @@ def main() -> None:
         .appName("polygon-scale-run")
         .config("spark.sql.shuffle.partitions", str(cpus * 2))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

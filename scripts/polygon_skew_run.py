@@ -24,7 +24,8 @@ walls with per-pass detail in the artifact.
 Prints one JSON line -> BENCH/polygon_skew.json (+ curated table in
 BENCH/BASELINE.md).  Env: POLY_SKEW_A (default 600000), POLY_SKEW_B
 (300000), CLUSTER_FRAC (0.25), CLUSTER_DIAM (32.0), POLY_HOT_THRESHOLD
-(5000), POLY_SKEW_PASSES (3), SPARK_GRAFT_CPUS (os.cpu_count()).
+(5000), POLY_SKEW_PASSES (3), SPARK_GRAFT_CPUS (os.cpu_count()),
+SPARK_GRAFT_DRIVER_MEM (8g).
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ def main() -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -12,7 +12,8 @@ task-parallelism both plateau at ~19.7; per-task CPU time inflates 1.8x
 going 8->32 threads while staying flat 2->8).  local[8] vs local[32]
 therefore measures host oversubscription, not the engine.  The default
 pair is local[2] vs local[8] — both inside the real capacity envelope —
-overridable via SCALING_LO/SCALING_HI.
+overridable via SCALING_LO/SCALING_HI.  SPARK_GRAFT_DRIVER_MEM sets the
+driver heap of every JVM (default 8g).
 
 Each level runs in its own subprocess (one JVM per master).  The input
 (interleaved docs with geo spans, FIXTURES.md distribution incl. the
@@ -73,7 +74,7 @@ spark = (SparkSession.builder.master(f"local[{{cpus}}]")
     .config("spark.sql.shuffle.partitions", str(shuffle_parts))
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.driver.memory", "24g")
+    .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
     .config("spark.ui.enabled", "false")
     .getOrCreate())
@@ -108,7 +109,7 @@ def synth_input(
         return a_dir, b_dir  # reuse byte-identical input across runs
     spark = (
         SparkSession.builder.master("local[32]")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -1,9 +1,11 @@
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from rtree_cpp_spark.functions.cells import Grid, pick_resolution
+from rtree_cpp_spark.functions.cells import MAX_LEVEL, Grid, pick_resolution
 
 G = Grid(6)  # 64x64 over [0,1024): cell size 16
 
@@ -103,3 +105,80 @@ def test_sql_twin_matches_numpy(spark):
         .to_numpy()
     )
     np.testing.assert_array_equal(got_duck, expected)
+
+
+@st.composite
+def _codec_case(draw):
+    """A level in [0, MAX_LEVEL], grid coordinates biased to the grid
+    edges, and rects whose centroids straddle the domain border."""
+    lvl = draw(st.integers(min_value=0, max_value=MAX_LEVEL))
+    n = 1 << lvl
+    coord = st.one_of(st.sampled_from([0, n // 2, n - 1]), st.integers(min_value=0, max_value=n - 1))
+    xy = draw(st.lists(st.tuples(coord, coord), min_size=1, max_size=8))
+    edge = st.floats(min_value=-16.0, max_value=1040.0)
+    side = st.floats(min_value=0.0, max_value=64.0)
+    rects = draw(st.lists(st.tuples(edge, edge, side, side), min_size=1, max_size=8))
+    return lvl, xy, rects
+
+
+@settings(max_examples=30, deadline=None)
+@given(case=_codec_case())
+def test_column_codec_matches_numpy(spark, case):
+    """Every Column twin of Grid equals its numpy method, which is the
+    reference: decode, encode, parent at every height, Morton key, cell
+    box, and the primary (centroid) cell."""
+    from rtree_cpp_spark.operators.tiles import primary_cell_col
+
+    lvl, xy, rects = case
+    g = Grid(lvl)
+    cx = np.array([p[0] for p in xy], dtype=np.int64)
+    cy = np.array([p[1] for p in xy], dtype=np.int64)
+    cells = g.encode(cx, cy)
+    cell = F.col("cell")
+    got_cols = [
+        *g.xy_cols(cell),
+        g.cell_col(F.col("cx"), F.col("cy")),
+        g.morton_col(cell),
+        *g.cell_box_cols(cell),
+        *(g.parent_col(cell, up) for up in range(lvl + 1)),
+    ]
+    expected = [
+        *g.cxcy(cells),
+        g.encode(cx, cy),
+        g.morton(cells),
+        *g.cell_bounds(cells),
+        *(g.parent(cells, up) for up in range(lvl + 1)),
+    ]
+    df = spark.createDataFrame(pd.DataFrame({"cx": cx, "cy": cy, "cell": cells}))
+    got = df.select(*(c.alias(f"v{i}") for i, c in enumerate(got_cols))).toPandas()
+    for i, want in enumerate(expected):
+        np.testing.assert_array_equal(got[f"v{i}"].to_numpy(), want, err_msg=f"column {i}")
+
+    r = pd.DataFrame(rects, columns=["min_x", "min_y", "w", "h"])
+    r["max_x"], r["max_y"] = r["min_x"] + r["w"], r["min_y"] + r["h"]
+    want = g.cell_of_point(
+        (r["min_x"].to_numpy() + r["max_x"].to_numpy()) / 2.0,
+        (r["min_y"].to_numpy() + r["max_y"].to_numpy()) / 2.0,
+    )
+    got = spark.createDataFrame(r).select(primary_cell_col(g).alias("c")).toPandas()["c"]
+    np.testing.assert_array_equal(got.to_numpy(), want)
+
+
+@pytest.mark.parametrize("level", [6, 27, 30])
+def test_coarse_cell_col_is_grid_parent(spark, level):
+    """The jobs' lineage key is the exact parent cell at every level.
+    A decode through a double division rounds ``cx`` up once
+    ``2 * level > 53``, e.g. (2^26 + 3, 2^27 - 1) at level 27."""
+    from jobs._common import coarse_cell_col
+
+    g = Grid(level)
+    n = g.n
+    cx = np.array([n - 1, n - 1, 0, n // 2 + 3, n // 2 + 3], dtype=np.int64)
+    cy = np.array([n - 1, 0, n - 1, n - 1, 0], dtype=np.int64)
+    cells = g.encode(cx, cy)
+    df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
+    for coarse in (0, 3, level - 1):
+        got = df.select(coarse_cell_col(g, coarse, F.col("cell"))).toPandas()["part"]
+        np.testing.assert_array_equal(
+            got.to_numpy(), g.parent(cells, level - coarse), err_msg=f"coarse level {coarse}"
+        )
