@@ -223,18 +223,3 @@ def _interleave_bits(v: np.ndarray, nbits: int) -> np.ndarray:
     for i in range(nbits):
         out |= ((v >> np.uint64(i)) & np.uint64(1)) << np.uint64(2 * i)
     return out.astype(np.int64)
-
-
-def pick_resolution(counts_by_level: dict[int, float], target_occupancy: float = 64.0) -> int:
-    """STR density heuristic, distributed analog (SURVEY.md section 4.1).
-
-    The reference packs exactly 64 rects per leaf (reference:
-    src/Main.cpp:192 capacity; slab math RTreeBulkLoad.cpp:38-40).  We
-    pick the *finest* level whose median docs-per-cell is still >= the
-    target occupancy, from a precomputed {level: median_occupancy} map.
-    """
-    eligible = [lvl for lvl, occ in counts_by_level.items() if occ >= target_occupancy]
-    if eligible:
-        return max(eligible)
-    # data too sparse for the target at every candidate level: coarsest wins
-    return min(counts_by_level)

@@ -1,12 +1,7 @@
-"""Scalar geometry kernels — the reference's entire function library.
-
-Each predicate exists in two forms:
-
-- a **Column expression** builder (JVM-side, inside whole-stage codegen —
-  the hot path for joins/filters), and
-- a **numpy kernel** parameterized by dtype (float32 for row-for-row
-  reference parity, float64 to agree with a double-precision SQL oracle),
-  used inside Arrow/pandas UDF refinement kernels and the brute oracle.
+"""Scalar geometry predicates of the reference that the engine's plans
+use, as **Column expression** builders (JVM-side, inside whole-stage
+codegen — the hot path for joins/filters).  Their numpy twins, the
+tests' references, live in ``oracle/geometry.py``.
 
 Semantics locked to the reference (SURVEY.md section 2.3):
 
@@ -22,12 +17,11 @@ Semantics locked to the reference (SURVEY.md section 2.3):
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
-# Column-expression predicates (reference P1, P3, P4, P5, P8)
+# Column-expression predicates (reference P1, P3, P4)
 # ---------------------------------------------------------------------------
 
 
@@ -53,126 +47,8 @@ def contains_col(
     )
 
 
-def equals_col(
-    a_min_x: Column, a_min_y: Column, a_max_x: Column, a_max_y: Column,
-    b_min_x: Column, b_min_y: Column, b_max_x: Column, b_max_y: Column,
-) -> Column:
-    """Coordinate-wise rect equality (reference P6, Rectangle.cpp:35-37)."""
-    return (
-        (a_min_x == b_min_x) & (a_min_y == b_min_y)
-        & (a_max_x == b_max_x) & (a_max_y == b_max_y)
-    )
-
-
-def edge_overlaps_col(
-    a_min_x: Column, a_min_y: Column, a_max_x: Column, a_max_y: Column,
-    b_min_x: Column, b_min_y: Column, b_max_x: Column, b_max_y: Column,
-) -> Column:
-    """Any one coordinate equal (reference P7, Rectangle.cpp:21-23 —
-    unused by any reference query path; provided for completeness)."""
-    return (
-        (a_min_x == b_min_x) | (a_min_y == b_min_y)
-        | (a_max_x == b_max_x) | (a_max_y == b_max_y)
-    )
-
-
 def sq_dist_col(px: Column, py: Column, min_x: Column, min_y: Column, max_x: Column, max_y: Column) -> Column:
     """Squared point→rect distance, 0 inside (reference Rectangle.h:92-112)."""
     dx = F.greatest(min_x - px, px - max_x, F.lit(0.0))
     dy = F.greatest(min_y - py, py - max_y, F.lit(0.0))
     return dx * dx + dy * dy
-
-
-def area_col(min_x: Column, min_y: Column, max_x: Column, max_y: Column) -> Column:
-    """(reference Rectangle.cpp:25-27)"""
-    return (max_x - min_x) * (max_y - min_y)
-
-
-def center_cols(min_x: Column, min_y: Column, max_x: Column, max_y: Column) -> tuple[Column, Column]:
-    """Rect centroid — defines kNN query points (reference Main.cpp:126-129)."""
-    return (min_x + max_x) / 2.0, (min_y + max_y) / 2.0
-
-
-def width_col(min_x: Column, max_x: Column) -> Column:
-    """(reference P8, Rectangle.cpp:39-41)"""
-    return max_x - min_x
-
-
-def height_col(min_y: Column, max_y: Column) -> Column:
-    """(reference P8, Rectangle.cpp:43-45)"""
-    return max_y - min_y
-
-
-def aspect_ratio_col(min_x: Column, min_y: Column, max_x: Column, max_y: Column) -> Column:
-    """width / height (reference P8, Rectangle.cpp:47-53).  Degenerate
-    zero-height rects yield NULL (``try_divide`` — ANSI mode would throw,
-    the reference's float division yields inf) — documented deviation,
-    NULL is the join/filter-safe Spark idiom."""
-    return F.try_divide(width_col(min_x, max_x), height_col(min_y, max_y))
-
-
-# Dialect-neutral SQL strings (shared verbatim between Spark SQL and the
-# DuckDB oracle so the two can never drift).
-
-INTERSECTS_SQL = (
-    "({a}.max_x >= {b}.min_x AND {a}.min_x <= {b}.max_x "
-    "AND {a}.max_y >= {b}.min_y AND {a}.min_y <= {b}.max_y)"
-)
-
-SQ_DIST_SQL = (
-    "(GREATEST({r}.min_x - {px}, {px} - {r}.max_x, 0.0) * "
-    "GREATEST({r}.min_x - {px}, {px} - {r}.max_x, 0.0) + "
-    "GREATEST({r}.min_y - {py}, {py} - {r}.max_y, 0.0) * "
-    "GREATEST({r}.min_y - {py}, {py} - {r}.max_y, 0.0))"
-)
-
-# ---------------------------------------------------------------------------
-# numpy kernels (vectorized, dtype-parameterized)
-# ---------------------------------------------------------------------------
-
-
-def _cast(arrs, dtype):
-    return [np.asarray(a, dtype=dtype) for a in arrs]
-
-
-def intersects_np(a_min_x, a_min_y, a_max_x, a_max_y, b_min_x, b_min_y, b_max_x, b_max_y, dtype=np.float32):
-    ax0, ay0, ax1, ay1, bx0, by0, bx1, by1 = _cast(
-        [a_min_x, a_min_y, a_max_x, a_max_y, b_min_x, b_min_y, b_max_x, b_max_y], dtype
-    )
-    return (ax1 >= bx0) & (ax0 <= bx1) & (ay1 >= by0) & (ay0 <= by1)
-
-
-def contains_np(a_min_x, a_min_y, a_max_x, a_max_y, b_min_x, b_min_y, b_max_x, b_max_y, dtype=np.float32):
-    ax0, ay0, ax1, ay1, bx0, by0, bx1, by1 = _cast(
-        [a_min_x, a_min_y, a_max_x, a_max_y, b_min_x, b_min_y, b_max_x, b_max_y], dtype
-    )
-    return (ax1 >= bx1) & (ax0 <= bx0) & (ay1 >= by1) & (ay0 <= by0)
-
-
-def sq_dist_np(px, py, min_x, min_y, max_x, max_y, dtype=np.float32):
-    """Squared point→rect distance in the given dtype — no sqrt, matching
-    the reference's float32 squared-distance kNN ordering."""
-    px, py, x0, y0, x1, y1 = _cast([px, py, min_x, min_y, max_x, max_y], dtype)
-    zero = dtype(0) if not isinstance(dtype, type) else np.asarray(0, dtype=dtype)
-    dx = np.maximum(np.maximum(x0 - px, px - x1), zero)
-    dy = np.maximum(np.maximum(y0 - py, py - y1), zero)
-    return dx * dx + dy * dy
-
-
-def center_np(min_x, max_x, dtype=np.float32):
-    """1-D centroid in the given dtype (apply per axis)."""
-    x0, x1 = _cast([min_x, max_x], dtype)
-    return (x0 + x1) / dtype(2) if isinstance(dtype, type) else (x0 + x1) / 2
-
-
-def point_in_rect_np(px, py, min_x, min_y, max_x, max_y, boundary: str = "closed", dtype=np.float32):
-    """Point-in-rect.  ``boundary='closed'`` is consistent with the
-    reference's hot-path predicates; ``'open'`` reproduces the strict
-    interior test of the dead-code ``Rectangle::add``
-    (reference Rectangle.cpp:29-33) — both exposed per SURVEY.md P9."""
-    px, py, x0, y0, x1, y1 = _cast([px, py, min_x, min_y, max_x, max_y], dtype)
-    if boundary == "closed":
-        return (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-    if boundary == "open":
-        return (px > x0) & (px < x1) & (py > y0) & (py < y1)
-    raise ValueError(f"boundary must be 'closed' or 'open', got {boundary!r}")

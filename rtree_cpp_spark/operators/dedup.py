@@ -99,22 +99,6 @@ def _minhash_wide(docs: DataFrame, n_hashes: int) -> DataFrame:
     return with_h.groupBy("doc_id").agg(*mins)
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, seed, minhash): tall view of the MinHash signature
-    matrix.  minhash(d, i) = min over shingles s of
-    (A[i] * (h64(s) % P) + B[i]) % P."""
-    wide = _minhash_wide(docs, n_hashes)
-    stacked = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("seed"), F.col(f"m{i}").alias("minhash"))
-                for i in range(n_hashes)
-            ]
-        )
-    )
-    return wide.select("doc_id", stacked.alias("sm")).select("doc_id", "sm.seed", "sm.minhash")
-
-
 def lsh_candidate_pairs(
     docs: DataFrame, n_bands: int = N_BANDS, rows_per_band: int = ROWS_PER_BAND
 ) -> DataFrame:

@@ -1,16 +1,21 @@
 """Batched range queries (reference R1/R2, RTreeBulkLoad.cpp:139-210).
 
 The reference answers one query at a time by DFS with MBR pruning.  The
-distributed re-expression answers the WHOLE query batch in one plan:
+distributed re-expression answers the WHOLE query batch in one plan, as
+a rect join of the queries (side A) against the data (side B) on the
+chain ``spatial_join`` owns:
 
-    queries --cover--> (query_id, cell)   [tiny: broadcast]
-    data    --cover--> (doc_id,  cell)
-    equi-join on cell  -> exact closed-bound predicate
-                       -> reference-point dedup (no distinct shuffle)
+    queries --side_cover--> (query_id, cell)   [tiny: broadcast]
+    data    --side_cover--> (doc_id,  cell)
+    cell_candidates (plain cell equi-join) -> exact closed-bound predicate
+                                           -> reference-point dedup
 
 One broadcast hash join for the whole batch; the data side is never
 shuffled.  With a cell-partitioned layout, Catalyst prunes untouched
 cell partitions (the distributed analog of MBR pruning, SURVEY.md O2).
+The reference's R2 "query contains node MBR → emit whole subtree" fast
+path is not needed: the cover replaces the subtree walk, and the exact
+predicate is 4 comparisons.
 """
 
 from __future__ import annotations
@@ -20,89 +25,36 @@ from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
 from rtree_cpp_spark.functions.geometry import contains_col, intersects_col
-from rtree_cpp_spark.operators.cover import ref_point_cell_col, with_cover_cells
+from rtree_cpp_spark.operators.cover import cell_candidates, side_cover
+from rtree_cpp_spark.operators.spatial_join import _refine
 
 
-def range_query(data_rects: DataFrame, queries: DataFrame, grid: Grid, broadcast_queries: bool = True) -> DataFrame:
+def _query_join(data_rects: DataFrame, queries: DataFrame, grid: Grid, predicate) -> DataFrame:
+    """(query_id, doc_id) for every pair where ``predicate(query, doc)``
+    holds, each pair once."""
+    q = F.broadcast(side_cover(queries.withColumnRenamed("query_id", "doc_id"), grid, "a_"))
+    joined, keep = cell_candidates(q, side_cover(data_rects, grid, "b_"), grid, None)
+    return _refine(joined, keep, grid, predicate=predicate).select(
+        F.col("a_doc_id").alias("query_id"), F.col("b_doc_id").alias("doc_id")
+    )
+
+
+def range_query(data_rects: DataFrame, queries: DataFrame, grid: Grid) -> DataFrame:
     """data_rects(doc_id, min_x..max_y) x queries(query_id, min_x..max_y)
-    → (query_id, doc_id), closed-interval semantics, each pair once.
-
-    Containment fast-path (reference R2, RTreeBulkLoad.cpp:158-164 +
-    getLeafs :127-137): each query cover cell is classified ONCE on the
-    tiny broadcast side — a cell whose closed box lies fully inside the
-    query is *interior*, and every candidate met there is a hit by
-    construction (the doc's cover guarantees it touches the closed cell
-    box, which the query contains), so the per-candidate exact predicate
-    short-circuits to a precomputed boolean.  Exactly the reference's
-    "query contains node MBR → emit whole subtree" re-expressed per cell.
-    Correctness-neutral; assumes geometry intersects the grid domain (the
-    Grid clamping contract — a rect wholly outside the domain could alias
-    onto edge cells it does not touch)."""
-    q = queries.select(
-        "query_id",
-        F.col("min_x").alias("q_min_x"),
-        F.col("min_y").alias("q_min_y"),
-        F.col("max_x").alias("q_max_x"),
-        F.col("max_y").alias("q_max_y"),
-    )
-    q_cells = with_cover_cells(q, grid, prefix="q_")
-    interior = contains_col(
-        F.col("q_min_x"), F.col("q_min_y"), F.col("q_max_x"), F.col("q_max_y"),
-        *grid.cell_box_cols(F.col("cell")),
-    )
-    q_cells = q_cells.withColumn("q_interior", interior)
-    if broadcast_queries:
-        q_cells = F.broadcast(q_cells)
-    d_cells = with_cover_cells(data_rects, grid)
-    hit = intersects_col(
-        F.col("q_min_x"), F.col("q_min_y"), F.col("q_max_x"), F.col("q_max_y"),
-        F.col("min_x"), F.col("min_y"), F.col("max_x"), F.col("max_y"),
-    )
-    ref_cell = ref_point_cell_col(
-        grid, F.col("q_min_x"), F.col("q_min_y"), F.col("min_x"), F.col("min_y")
-    )
-    return (
-        d_cells.join(q_cells, "cell")
-        .where((F.col("cell") == ref_cell) & (F.col("q_interior") | hit))
-        .select("query_id", "doc_id")
-    )
+    → (query_id, doc_id), closed-interval semantics, each pair once."""
+    return _query_join(data_rects, queries, grid, intersects_col)
 
 
-def contains_query(
-    data_rects: DataFrame, queries: DataFrame, grid: Grid, broadcast_queries: bool = True
-) -> DataFrame:
+def contains_query(data_rects: DataFrame, queries: DataFrame, grid: Grid) -> DataFrame:
     """Containment query: (query_id, doc_id) for docs FULLY INSIDE the
     query rect — reference P3 (`contains`, Rectangle.h:74-77) promoted
     from a pruning helper to a first-class plan.  Closed containment:
     docs equal to the query match.
 
-    Same one-broadcast-join shape as :func:`range_query`; the reference-
-    point dedup is valid unchanged because a contained doc's reference
-    point is its own min corner (max(q_min, d_min) = d_min), whose cell
-    is in both covers."""
-    q = queries.select(
-        "query_id",
-        F.col("min_x").alias("q_min_x"),
-        F.col("min_y").alias("q_min_y"),
-        F.col("max_x").alias("q_max_x"),
-        F.col("max_y").alias("q_max_y"),
-    )
-    q_cells = with_cover_cells(q, grid, prefix="q_")
-    if broadcast_queries:
-        q_cells = F.broadcast(q_cells)
-    d_cells = with_cover_cells(data_rects, grid)
-    inside = contains_col(
-        F.col("q_min_x"), F.col("q_min_y"), F.col("q_max_x"), F.col("q_max_y"),
-        F.col("min_x"), F.col("min_y"), F.col("max_x"), F.col("max_y"),
-    )
-    ref_cell = ref_point_cell_col(
-        grid, F.col("q_min_x"), F.col("q_min_y"), F.col("min_x"), F.col("min_y")
-    )
-    return (
-        d_cells.join(q_cells, "cell")
-        .where(inside & (F.col("cell") == ref_cell))
-        .select("query_id", "doc_id")
-    )
+    The reference-point dedup is valid unchanged because a contained
+    doc's reference point is its own min corner (max(q_min, d_min) =
+    d_min), whose cell is in both covers."""
+    return _query_join(data_rects, queries, grid, contains_col)
 
 
 def range_query_layout(

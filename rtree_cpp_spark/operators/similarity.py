@@ -27,37 +27,16 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _h64(s: Column) -> Column:
-    return F.conv(F.substring(F.md5(F.encode(s, "utf-8")), 1, 15), 16, 10).cast("long")
-
-
-def dot_col(a: Column, b: Column) -> Column:
-    """Left-fold dot product of two array<float> columns, in double.
-
-    JVM higher-order-function form (interpreted, no codegen) — kept for
-    small inputs and as the executable spec of the fold order; the hot
-    paths below use the Arrow kernel twin ``_fold_dot_udf``.
-    """
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm_col(a: Column) -> Column:
-    return F.sqrt(dot_col(a, a))
 
 
 def _fold_dot_udf():
     """Arrow-batched left-fold dot product: for each row,
-    acc_{j+1} = acc_j + a_j * b_j in float64 — the exact same IEEE754
-    operation sequence as ``dot_col`` and the DuckDB ``list_reduce``
-    oracle, but vectorized ACROSS rows with numpy."""
+    acc_{j+1} = acc_j + a_j * b_j in float64.  The fold-order spec is
+    the DuckDB oracle's ``list_reduce`` over ``list_zip`` (array order,
+    left fold); this runs the same IEEE754 operation sequence,
+    vectorized ACROSS rows with numpy."""
 
     @F.pandas_udf("double")
     def fold_dot(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -102,20 +81,6 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 20, k: int = 5) -> DataF
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_vec_id", "neighbor_vec_id", "cos_sim", "rank")
-    )
-
-
-def sqdiff_col(a: Column, b: Column) -> Column:
-    """Left-fold squared-L2 distance of two array columns, in double:
-    acc_{j+1} = acc_j + (a_j - b_j)^2 — the exact IEEE754 op sequence of
-    the DuckDB ``list_reduce`` oracle.  Executable spec of the fold
-    order (like ``dot_col``); the IVF hot path runs the same op sequence
-    vectorized in ``_sqdist_matrix``."""
-    d = lambda x, y: x.cast("double") - y.cast("double")  # noqa: E731
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: d(x, y) * d(x, y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
     )
 
 
@@ -167,8 +132,9 @@ def _cent_matrix(cent_rows: list[tuple[int, list[float]]]) -> tuple[np.ndarray, 
 
 def _sqdist_matrix(emb: pd.Series, C: np.ndarray) -> np.ndarray:
     """(rows × centroids) squared-L2 matrix, accumulated dim-by-dim in
-    float64 — per (row, centroid) the identical IEEE754 op sequence as
-    ``sqdiff_col`` / the DuckDB ``list_reduce`` oracle, vectorized
+    float64: acc_{j+1} = acc_j + (a_j - c_j)^2.  The fold-order spec is
+    the DuckDB oracle's ``list_reduce`` (array order, left fold); per
+    (row, centroid) this runs the same IEEE754 op sequence, vectorized
     across rows AND centroids."""
     A = np.stack(emb.to_numpy()).astype(np.float64)
     acc = np.zeros((A.shape[0], C.shape[0]))

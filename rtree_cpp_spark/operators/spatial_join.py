@@ -13,6 +13,8 @@ pre-aggregation.
 Exactly-once pairs: a pair intersecting in several shared cells is kept
 only in the cell of its reference point — no ``distinct`` shuffle
 (SURVEY.md J1).  Output is directed A→B like the reference's multimap.
+``operators.range_query`` runs range and containment queries on the
+same chain, with only ``_refine``'s predicate differing.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
-from rtree_cpp_spark.functions.geometry import contains_col, intersects_col
+from rtree_cpp_spark.functions.geometry import intersects_col
 from rtree_cpp_spark.operators.cover import (
     cell_candidates,
     disk_cells,
@@ -31,25 +33,20 @@ from rtree_cpp_spark.operators.cover import (
 )
 
 
-def _refine(joined: DataFrame, keep: Column, grid: Grid, keep_cell: bool = False) -> DataFrame:
-    """Exact closed-bound predicate plus the generator's exactly-once
+def _refine(
+    joined: DataFrame, keep: Column, grid: Grid, keep_cell: bool = False,
+    predicate=intersects_col,
+) -> DataFrame:
+    """Exact closed-bound ``predicate`` (A, B) — ``intersects_col``, or
+    ``contains_col`` for containment — plus the generator's exactly-once
     ``keep``; ``keep_cell`` adds the COARSE reference-point cell."""
     bounds = ("min_x", "min_y", "max_x", "max_y")
-    a_box = [F.col(f"a_{c}") for c in bounds]
-    hit = intersects_col(*a_box, *(F.col(f"b_{c}") for c in bounds))
+    hit = predicate(*(F.col(f"a_{c}") for c in bounds), *(F.col(f"b_{c}") for c in bounds))
     cell = ref_point_cell_col(
         grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
     ).alias("cell")
     if "cell" in joined.columns:
-        # Containment fast-path (reference R2 analog, RTreeBulkLoad.cpp:
-        # 158-164): if A contains the shared cell's closed box, B — which
-        # touches that box by cover construction — must intersect it;
-        # the exact predicate short-circuits.  Correctness-neutral (same
-        # caveat as range_query: geometry must intersect the grid domain,
-        # the Grid clamping contract).  The skew path's subdivided key
-        # has no coarse cell box, so it goes without.
-        hit = contains_col(*a_box, *grid.cell_box_cols(F.col("cell"))) | hit
-        cell = F.col("cell")  # keep pins it to the reference cell
+        cell = F.col("cell")  # the plain path's key: keep pins it to the reference cell
     return joined.where(keep & hit).select("a_doc_id", "b_doc_id", *([cell] if keep_cell else []))
 
 

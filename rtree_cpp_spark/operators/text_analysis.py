@@ -125,7 +125,7 @@ def rolling_hash(docs: DataFrame, impl: str = "kernel") -> DataFrame:
 
     ``impl='expr'`` is the executable spec (JVM ``F.aggregate`` fold);
     ``impl='kernel'`` is the Arrow-batched numpy twin (same values,
-    asserted by tests; the `dot_col`/`_fold_dot_udf` pattern from
+    asserted by tests; the `_fold_dot_udf` pattern from
     similarity.py).  Measured honestly: the JVM fold is interpreted but
     NOT slow (~1 G char-ops/s at local[32]); the kernel wins only ~1.2x
     at 200k docs x 1k chars — kept as default for the margin and as the

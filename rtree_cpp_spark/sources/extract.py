@@ -4,8 +4,8 @@ The reference parses dataset lines ``"x1 y1, x2 y2"`` as float32 with
 line-order ids (reference: src/Main.cpp:50-78, ``exit(0)`` on bad line).
 Here the same line format lives in each document's ``kind='geo'`` span
 (BASELINE.json input_hint), and extraction is fully **JVM-side Column
-expressions** (whole-stage codegen, zero Python) with a vectorized
-Arrow/pandas-UDF twin kept for float32 parity testing.
+expressions** (whole-stage codegen, zero Python); tests check the
+parse against a numpy float32 parse of the same lines.
 
 Span-sequence invariant: extraction only *adds* rect columns — the
 ``spans`` array passes through untouched, so `(kind, text, media_ref,
@@ -15,8 +15,6 @@ re-joins spans by doc_id (SURVEY.md section 1.4).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -32,9 +30,7 @@ def rect_cols_from_text(txt: Column) -> dict[str, Column]:
     """Parse ``"x1 y1, x2 y2"`` → float32 rect columns.
 
     Spark's ``float`` cast IS IEEE float32 — same type the reference
-    parses into (src/Main.cpp:67).  A malformed line casts to NULL; the
-    caller decides whether to fail fast (mirroring ``exit(0)``,
-    src/Main.cpp:73-74) or drop.
+    parses into (src/Main.cpp:67).  A malformed line casts to NULL.
     """
     parts = F.split(F.trim(txt), r"[,\s]+")
     return {
@@ -45,23 +41,20 @@ def rect_cols_from_text(txt: Column) -> dict[str, Column]:
     }
 
 
-def with_rect(docs: DataFrame, fail_fast: bool = True) -> DataFrame:
+def with_rect(docs: DataFrame) -> DataFrame:
     """docs(doc_id, spans, ...) → + (min_x, min_y, max_x, max_y) float32.
 
-    ``fail_fast=True`` raises on any doc without a parseable geo span —
-    the distributed analog of the reference's ``exit(0)`` on a bad line
+    Raises on any doc without a parseable geo span — the distributed
+    analog of the reference's ``exit(0)`` on a bad line
     (src/Main.cpp:73-74) — via ``raise_error`` inside the plan (no
     driver-side collect).
     """
     out = docs
-    cols = rect_cols_from_text(geo_text_col(F.col("spans")))
-    for name, c in cols.items():
+    for name, c in rect_cols_from_text(geo_text_col(F.col("spans"))).items():
         out = out.withColumn(name, c)
-    if fail_fast:
-        bad = F.lit(None).cast("float")
-        for name in RECT_COLS:
-            bad = F.when(F.col(name).isNull(), F.raise_error(F.concat(F.lit("malformed geo span in doc "), F.col("doc_id")))).otherwise(F.col(name))
-            out = out.withColumn(name, bad)
+    bad = F.raise_error(F.concat(F.lit("malformed geo span in doc "), F.col("doc_id")))
+    for name in RECT_COLS:
+        out = out.withColumn(name, F.when(F.col(name).isNull(), bad).otherwise(F.col(name)))
     return out
 
 
@@ -69,39 +62,6 @@ def rects_only(docs: DataFrame) -> DataFrame:
     """Narrow projection carried through shuffles: (doc_id, rect).
     Spans are re-joined by doc_id at the end (SURVEY.md section 1.4)."""
     return with_rect(docs).select("doc_id", *RECT_COLS)
-
-
-# ---------------------------------------------------------------------------
-# Arrow/pandas-UDF twin (float32 parity path; used in tests to prove the
-# JVM parse and the numpy float32 parse agree bit-for-bit)
-# ---------------------------------------------------------------------------
-
-
-def parse_geo_texts_np(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized float32 parse of ``"x1 y1, x2 y2"`` lines."""
-    split = texts.str.replace(",", " ", regex=False).str.split()
-    arr = np.asarray(split.tolist(), dtype=np.float32)
-    if arr.ndim != 2 or arr.shape[1] != 4:
-        raise ValueError("malformed geo span line")  # mirrors exit(0), Main.cpp:73-74
-    return pd.DataFrame(
-        {"min_x": arr[:, 0], "min_y": arr[:, 1], "max_x": arr[:, 2], "max_y": arr[:, 3]}
-    )
-
-
-def with_rect_pandas(docs: DataFrame) -> DataFrame:
-    """mapInPandas variant of :func:`with_rect` (Arrow batches, float32)."""
-    fields = ", ".join(f"{c} float" for c in RECT_COLS)
-    schema = f"{', '.join(f'{f.name} {f.dataType.simpleString()}' for f in docs.schema.fields)}, {fields}"
-
-    def run(batches):
-        for pdf in batches:
-            geo = pdf["spans"].map(
-                lambda spans: next(s["text"] for s in spans if s["kind"] == "geo")
-            )
-            rect = parse_geo_texts_np(geo)
-            yield pd.concat([pdf.reset_index(drop=True), rect], axis=1)
-
-    return docs.mapInPandas(run, schema=schema)
 
 
 def spans_signature_col(spans: Column) -> Column:

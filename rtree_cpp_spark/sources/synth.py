@@ -211,7 +211,7 @@ def synth_range_queries_pdf(n: int, seed: int = 43) -> pd.DataFrame:
             "max_y": np.minimum(y + size, 1024.0),
         }
     )
-    # one query containing everything (containment fast-path, RTreeBulkLoad.cpp:158-164)
+    # one query containing everything: every doc is a hit, every cell a candidate cell
     pdf.loc[0, ["min_x", "min_y", "max_x", "max_y"]] = [0.0, 0.0, 1024.0, 1024.0]
     return pdf
 

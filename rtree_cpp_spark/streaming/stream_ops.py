@@ -1,10 +1,12 @@
 """Structured Streaming twins of the batch operators.
 
 The reference is batch-only (SURVEY.md section 2.10), so these extend it:
-a continuously-arriving document stream gets tile assignments, and an
-event stream gets watermarked windowed rollups — the shapes a 100 TB
-ingest pipeline actually runs.  Tested with ``availableNow`` triggers
-(bounded replay) against the batch operators' output.
+a continuously-arriving document stream is rasterized into per-cell
+coverage deltas (``run_stream_rasterize_once``), and an event stream is
+sessionized by a custom stateful operator (``stream_sessionize``) — the
+shapes a 100 TB ingest pipeline actually runs.  Tested with
+``availableNow`` triggers (bounded replay) against the batch operators'
+output.
 """
 
 from __future__ import annotations
@@ -13,8 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
-from rtree_cpp_spark.operators.spatial_join import spatial_join
-from rtree_cpp_spark.operators.tiles import primary_cell_col, primary_tiles
+from rtree_cpp_spark.operators.tiles import rasterize
 from rtree_cpp_spark.sources.extract import rects_only
 from rtree_cpp_spark.sources.synth import DOC_SCHEMA
 
@@ -22,99 +23,6 @@ from rtree_cpp_spark.sources.synth import DOC_SCHEMA
 def stream_docs(spark: SparkSession, docs_dir: str) -> DataFrame:
     """readStream over a parquet directory of interleaved docs."""
     return spark.readStream.schema(DOC_SCHEMA).parquet(docs_dir)
-
-
-def stream_tiles(docs_stream: DataFrame, grid: Grid) -> DataFrame:
-    """Streaming primary-tile assignment: stateless projection — runs
-    per micro-batch with no state store."""
-    return primary_tiles(rects_only(docs_stream), grid)
-
-
-def run_stream_tiles_once(
-    spark: SparkSession, docs_dir: str, out_dir: str, checkpoint_dir: str, grid: Grid
-) -> None:
-    """Drain everything currently in docs_dir into a parquet tile table
-    (availableNow), exactly-once via the checkpoint."""
-    q = (
-        stream_tiles(stream_docs(spark, docs_dir), grid)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_spatial_join(docs_stream: DataFrame, static_rects: DataFrame, grid: Grid) -> DataFrame:
-    """Stream-static spatial join: the batch ``spatial_join`` (plain cell
-    equi-join, no hot-cell census) over each micro-batch of arriving
-    docs against the static rect table — stateless, so no state store
-    grows with the stream; asserted equal to batch by the availableNow
-    test."""
-    return spatial_join(rects_only(docs_stream), static_rects, grid)
-
-
-def stream_range_monitor(
-    docs_stream: DataFrame, queries_static: DataFrame, grid: Grid
-) -> DataFrame:
-    """Standing range queries over an arriving doc stream: every
-    micro-batch of docs is matched against the static query set (tiny,
-    broadcast) — the continuous form of the batch ``range_query``, same
-    closed-interval semantics and reference-point dedup, stateless (no
-    state store; each doc is reported once, when it arrives)."""
-    from rtree_cpp_spark.operators.range_query import range_query
-
-    return range_query(rects_only(docs_stream), queries_static, grid)
-
-
-CELL_STATS_OUTPUT = (
-    "cell long, n_docs long, mbr_min_x float, mbr_min_y float, mbr_max_x float, mbr_max_y float"
-)
-CELL_STATS_STATE = (
-    "n_docs long, mbr_min_x double, mbr_min_y double, mbr_max_x double, mbr_max_y double"
-)
-
-
-def _cell_stats_update(key, pdfs, state):
-    """Custom stateful kernel (applyInPandasWithState): per-cell running
-    doc count + MBR — the streaming analog of the reference's
-    incremental node-MBR maintenance (Node.cpp:20-38)."""
-    import pandas as pd
-
-    if state.exists:
-        n, mnx, mny, mxx, mxy = state.get
-    else:
-        n, mnx, mny, mxx, mxy = 0, float("inf"), float("inf"), float("-inf"), float("-inf")
-    for pdf in pdfs:
-        n += len(pdf)
-        mnx = min(mnx, float(pdf["min_x"].min()))
-        mny = min(mny, float(pdf["min_y"].min()))
-        mxx = max(mxx, float(pdf["max_x"].max()))
-        mxy = max(mxy, float(pdf["max_y"].max()))
-    state.update((n, mnx, mny, mxx, mxy))
-    yield pd.DataFrame(
-        [{
-            "cell": key[0], "n_docs": n,
-            "mbr_min_x": mnx, "mbr_min_y": mny, "mbr_max_x": mxx, "mbr_max_y": mxy,
-        }]
-    )
-
-
-def stream_cell_stats(docs_stream: DataFrame, grid: Grid) -> DataFrame:
-    """Streaming per-cell stats over the primary-tile assignment via a
-    custom stateful operator; emits the updated (cell, n_docs, MBR) row
-    for every cell touched by each micro-batch."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    tiled = rects_only(docs_stream).withColumn("cell", primary_cell_col(grid))
-    return tiled.groupBy("cell").applyInPandasWithState(
-        _cell_stats_update,
-        outputStructType=CELL_STATS_OUTPUT,
-        stateStructType=CELL_STATS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def run_stream_rasterize_once(
@@ -137,7 +45,6 @@ def run_stream_rasterize_once(
     — ADVICE r4).  At 10^12 docs this is the incremental tile-update
     path: a serving layer folds the delta stream into the band with an
     idempotent merge."""
-    from rtree_cpp_spark.operators.tiles import rasterize
 
     def _batch(bdf: DataFrame, bid: int) -> None:
         (
@@ -152,37 +59,6 @@ def run_stream_rasterize_once(
     q = (
         stream_docs(spark, docs_dir)
         .writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_dedup_events(events_stream: DataFrame, watermark: str = "24 hours") -> DataFrame:
-    """Streaming exact dedup over an event stream: each ``event_id`` is
-    emitted once; re-deliveries arriving within the watermark horizon
-    are dropped (``dropDuplicatesWithinWatermark`` — state is bounded by
-    the horizon, unlike a plain streaming ``dropDuplicates`` whose key
-    state grows forever).  The streaming twin of batch
-    ``SELECT DISTINCT``-by-key, and the at-least-once → exactly-once
-    repair stage of a 100 TB ingest pipeline."""
-    return events_stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-def run_stream_dedup_once(
-    spark: SparkSession, events_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    ).parquet(events_dir)
-    q = (
-        stream_dedup_events(events)
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -259,35 +135,3 @@ def stream_sessionize(events_stream: DataFrame, gap_s: float | None = None) -> D
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def stream_events_hourly(events_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window rollup: late events beyond the
-    watermark are dropped; state is bounded by watermark horizon."""
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("hour"), "event_type", "n_events", "sum_value")
-    )
-
-
-def run_stream_events_once(
-    spark: SparkSession, events_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    ).parquet(events_dir)
-    q = (
-        stream_events_hourly(events)
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

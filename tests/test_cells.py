@@ -5,7 +5,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from rtree_cpp_spark.functions.cells import MAX_LEVEL, Grid, pick_resolution
+from rtree_cpp_spark.functions.cells import MAX_LEVEL, Grid
 
 G = Grid(6)  # 64x64 over [0,1024): cell size 16
 
@@ -75,12 +75,6 @@ def test_point_cell_within_cover_property(x, y, lvl):
     assert cell in set(cover.tolist())
     x0, y0, x1, y1 = g.cell_bounds(cell)
     assert x0 <= x <= x1 and y0 <= y <= y1
-
-
-def test_pick_resolution():
-    assert pick_resolution({4: 300.0, 5: 80.0, 6: 20.0}) == 5
-    assert pick_resolution({4: 30.0, 5: 8.0}) == 4  # too sparse: coarsest
-    assert pick_resolution({4: 300.0, 5: 80.0, 6: 64.0}) == 6
 
 
 def test_sql_twin_matches_numpy(spark):

@@ -6,7 +6,10 @@ No test runs ``jobs/*.py``, ``scripts/*.py``, ``__spark_entry__.py`` or
 parameter would break them silently.  This parses each file with
 ``ast`` (nothing is executed, no Spark session starts), resolves every
 ``from rtree_cpp_spark... import name`` against the engine modules and
-checks each call's keyword names against ``inspect.signature``."""
+checks each call's keyword names against ``inspect.signature``.
+
+The same callers are the roots of an unreached-code audit: every
+top-level engine function must be reachable from them, transitively."""
 
 from __future__ import annotations
 
@@ -130,3 +133,94 @@ def test_engine_call_keywords_bind(path):
         for k in _unbound_keywords(callee, keywords)
     ]
     assert not unbound, unbound
+
+
+ENGINE = ROOT / "rtree_cpp_spark"
+# engine functions no job, script, gate entry or benchmark calls, kept
+# on purpose (name → reason)
+UNREACHED_OK = {
+    "rtree_cpp_spark.sources.synth.synth_docs_pdf":
+        "fixture generator: tests build their docs tables with it",
+    "rtree_cpp_spark.sources.synth.synth_docs_df_fast":
+        "fixture generator: the JVM-side synth for large test corpora",
+    "rtree_cpp_spark.sources.synth._fmt_coord":
+        "helper of the fixture generator synth_docs_pdf",
+    "rtree_cpp_spark.sources.synth.synth_range_queries_pdf":
+        "fixture generator: range-query batches for tests",
+    "rtree_cpp_spark.sources.synth.synth_knn_queries_pdf":
+        "fixture generator: kNN query batches for tests",
+}
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _engine_bindings(tree: ast.AST) -> dict[str, str]:
+    """Local name → dotted engine target (``module.name`` or a module)
+    for every engine import anywhere in ``tree``."""
+    out: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0 and node.module \
+                and node.module.split(".")[0] == "rtree_cpp_spark":
+            for alias in node.names:
+                out[alias.asname or alias.name] = f"{node.module}.{alias.name}"
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == "rtree_cpp_spark" and alias.asname:
+                    out[alias.asname] = alias.name
+    return out
+
+
+def _references(nodes, bindings: dict[str, str]) -> set[str]:
+    """Dotted engine names that ``nodes`` load: ``f`` and ``mod.f``."""
+    refs: set[str] = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name) and node.id in bindings:
+                refs.add(bindings[node.id])
+            elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name) \
+                    and node.value.id in bindings:
+                refs.add(f"{bindings[node.value.id]}.{node.attr}")
+    return refs
+
+
+def unreached_engine_functions() -> list[str]:
+    """Top-level engine ``def``s and ``class``es that no caller reaches,
+    transitively.  Roots: ``CALLERS``, ``bench.py`` and the engine's own
+    module-level statements; tests are not callers."""
+    defs: dict[str, list[str]] = {}  # dotted name → names its body loads
+    roots: set[str] = set()
+    for path in sorted(ENGINE.rglob("*.py")):
+        mod = _module_name(path)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        top = {
+            n.name for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        bindings = {**_engine_bindings(tree), **{name: f"{mod}.{name}" for name in top}}
+        for node in tree.body:
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            refs = _references([node], bindings)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[f"{mod}.{node.name}"] = sorted(refs - {f"{mod}.{node.name}"})
+            else:
+                roots |= refs
+    for path in [*CALLERS, ROOT / "bench.py"]:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        roots |= _references([tree], _engine_bindings(tree))
+    reached: set[str] = set()
+    todo = [r for r in roots if r in defs]
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo.extend(r for r in defs[name] if r in defs)
+    return sorted(set(defs) - reached - set(UNREACHED_OK))
+
+
+def test_engine_has_no_unreached_functions():
+    unreached = unreached_engine_functions()
+    assert not unreached, "\n".join(unreached)

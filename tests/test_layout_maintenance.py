@@ -1,13 +1,10 @@
-"""Incremental layout maintenance: upsert / delete / density re-tiling
-(the distributed analog of the reference's dead-code dynamic path,
-Node.cpp:53-111) — partition-local rewrites only."""
+"""The written layout's MBR-stats sidecar and the partition pruning it
+drives (reference root-level MBR pruning, RTreeBulkLoad.cpp:154-156)."""
 
 import os
 
 import pandas as pd
 import pytest
-
-from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
 from rtree_cpp_spark.plans import layout
@@ -20,100 +17,6 @@ def table(spark, rects_a_pdf, tmp_path):
     path = str(tmp_path / "tbl")
     layout.write_layout(spark.createDataFrame(rects_a_pdf), path, GRID)
     return path
-
-
-def _part_files(path: str) -> dict[str, set]:
-    out = {}
-    for d in os.listdir(path):
-        if d.startswith("coarse_cell="):
-            out[d] = set(os.listdir(os.path.join(path, d)))
-    return out
-
-
-def test_upsert_replaces_and_inserts(spark, rects_a_pdf, table):
-    mod = rects_a_pdf.head(5).copy()
-    # expand symmetrically: centers (and thus cells) unchanged, geometry changed
-    mod["min_x"] -= 0.25
-    mod["max_x"] += 0.25
-    new = pd.DataFrame(
-        {
-            "doc_id": ["N1", "N2", "N3"],
-            "min_x": [1.0, 500.0, 900.0],
-            "min_y": [1.0, 500.0, 900.0],
-            "max_x": [2.0, 501.0, 901.0],
-            "max_y": [2.0, 501.0, 901.0],
-        }
-    )
-    changes = pd.concat([mod, new], ignore_index=True)
-    before = _part_files(table)
-    res = layout.upsert_layout(spark, spark.createDataFrame(changes), table, GRID)
-    after = _part_files(table)
-
-    got = layout.read_layout(spark, table).toPandas()
-    assert len(got) == len(rects_a_pdf) + 3
-    assert got["doc_id"].is_unique
-    # replaced geometry is the new one
-    g5 = got.set_index("doc_id").loc[mod["doc_id"]]
-    assert (g5["min_x"].to_numpy() == mod.set_index("doc_id")["min_x"].to_numpy()).all()
-    # only the affected coarse partitions were rewritten
-    affected_dirs = {f"coarse_cell={p}" for p in res["affected_partitions"]}
-    for d, files in before.items():
-        if d not in affected_dirs:
-            assert after[d] == files, f"untouched partition {d} was rewritten"
-
-
-def test_delete_and_emptied_partition(spark, rects_a_pdf, table):
-    full = layout.read_layout(spark, table).toPandas()
-    # wipe one entire coarse partition + a few docs elsewhere
-    victim_part = int(full["coarse_cell"].mode()[0])
-    whole_part = full[full["coarse_cell"] == victim_part]
-    others = full[full["coarse_cell"] != victim_part].head(4)
-    to_del = pd.concat([whole_part, others])[
-        ["doc_id", "min_x", "min_y", "max_x", "max_y"]
-    ]
-    res = layout.delete_from_layout(spark, spark.createDataFrame(to_del), table, GRID)
-    assert victim_part in res["emptied_partitions"]
-    got = layout.read_layout(spark, table).toPandas()
-    assert len(got) == len(full) - len(to_del)
-    assert not set(to_del["doc_id"]) & set(got["doc_id"])
-    assert not os.path.exists(os.path.join(table, f"coarse_cell={victim_part}"))
-
-
-def test_upsert_then_query_consistency(spark, rects_a_pdf, table):
-    """After maintenance the layout still answers queries correctly."""
-    new = pd.DataFrame(
-        {
-            "doc_id": ["Q1"],
-            "min_x": [100.0], "min_y": [100.0], "max_x": [101.0], "max_y": [101.0],
-        }
-    )
-    layout.upsert_layout(spark, spark.createDataFrame(new), table, GRID)
-    from rtree_cpp_spark.operators.range_query import range_query
-
-    q = spark.createDataFrame(
-        pd.DataFrame(
-            {"query_id": ["R"], "min_x": [99.0], "min_y": [99.0], "max_x": [102.0], "max_y": [102.0]}
-        )
-    )
-    data = layout.read_layout(spark, table).select(
-        "doc_id", "min_x", "min_y", "max_x", "max_y"
-    )
-    hits = range_query(data, q, GRID).toPandas()
-    assert "Q1" in set(hits["doc_id"])
-
-
-def test_maybe_retile_on_drift(spark, rects_a_pdf, tmp_path):
-    path = str(tmp_path / "fine")
-    fine = Grid(8)
-    layout.write_layout(spark.createDataFrame(rects_a_pdf), path, fine)
-    # 400 docs over a 256x256 grid: median occupancy ~1 << target/band
-    g2 = layout.maybe_retile(spark, path, fine, levels=[2, 3, 4, 5, 6, 7, 8])
-    assert g2.level < fine.level
-    got = layout.read_layout(spark, path).toPandas()
-    assert sorted(got["doc_id"]) == sorted(rects_a_pdf["doc_id"])
-    # within band now: a second call is a no-op returning the same grid
-    g3 = layout.maybe_retile(spark, path, g2, levels=[2, 3, 4, 5, 6, 7, 8])
-    assert g3.level == g2.level
 
 
 def test_pruned_range_query_matches_and_prunes(spark, rects_a_pdf, table):
@@ -157,37 +60,20 @@ def test_pruned_range_query_matches_and_prunes(spark, rects_a_pdf, table):
     assert "coarse_cell" in buf.getvalue().split("PartitionFilters", 1)[1][:400]
 
 
-def test_stats_sidecar_tracks_delete(spark, rects_a_pdf, table):
-    """Deleting every doc of a coarse partition drops its stats row, so
-    queries over that region prune to nothing."""
-    victims_cells = layout.read_layout(spark, table).where(F.col("coarse_cell") == 0)
-    victims = victims_cells.select("doc_id", "min_x", "min_y", "max_x", "max_y").toPandas()
-    if len(victims) == 0:
-        pytest.skip("partition 0 empty in fixture")
-    layout.delete_from_layout(spark, spark.createDataFrame(victims), table, GRID)
-    st = layout.read_partition_stats(spark, table).toPandas()
-    assert 0 not in set(st["coarse_cell"])
-    # stats still consistent with data for a surviving partition
-    data = layout.read_layout(spark, table).toPandas()
-    p = int(st["coarse_cell"].iloc[0])
-    sub = data[data["coarse_cell"] == p]
-    row = st[st["coarse_cell"] == p].iloc[0]
-    assert row["n_docs"] == len(sub)
-    assert row["mbr_min_x"] == sub["min_x"].min()
-    assert row["mbr_max_y"] == sub["max_y"].max()
-
-
 def test_legacy_layout_partial_sidecar_never_drops_rows(spark, rects_a_pdf, table):
-    """Upserting into a layout whose sidecar predates the stats feature
-    (simulated by deleting it) leaves a PARTIAL sidecar — exclusion-based
-    pruning must still return every matching row."""
+    """A PARTIAL sidecar — some partitions without a stats row, as in a
+    layout written before the sidecar existed or a crash between the
+    data and stats writes (simulated by deleting every other stats
+    partition) — exclusion-based pruning must still return every
+    matching row."""
     import shutil
 
     from rtree_cpp_spark.operators.range_query import range_query, range_query_layout
 
-    shutil.rmtree(layout.stats_path(table))  # legacy layout: no sidecar
-    mod = rects_a_pdf.head(3).copy()
-    layout.upsert_layout(spark, spark.createDataFrame(mod), table, GRID)
+    stats = layout.stats_path(table)
+    parts = sorted(d for d in os.listdir(stats) if d.startswith("coarse_cell="))
+    for d in parts[::2]:
+        shutil.rmtree(os.path.join(stats, d))
     st = layout.read_partition_stats(spark, table).toPandas()
     data_parts = layout.read_layout(spark, table).select("coarse_cell").distinct().count()
     assert 0 < len(st) < data_parts  # sidecar really is partial
@@ -202,230 +88,3 @@ def test_legacy_layout_partial_sidecar_never_drops_rows(spark, rects_a_pdf, tabl
         layout.read_layout(spark, table).select("doc_id", "min_x", "min_y", "max_x", "max_y"),
         queries, GRID).collect())
     assert got == exp and len(got) > 0
-
-
-def test_heal_completes_interrupted_swap(spark, rects_a_pdf, table):
-    """Simulate a crash between a partition dir's delete and its rename:
-    the staged copy survives; heal_layout moves it in and the table is
-    whole again."""
-    import shutil
-
-    full = layout.read_layout(spark, table).toPandas()
-    victim = int(full["coarse_cell"].mode()[0])
-    staging = layout._swap_staging(table)
-    # craft the crash state: committed staging (_SUCCESS + _EMPTIED
-    # marker) holding the victim's (new) data; the live dir is already
-    # deleted
-    os.makedirs(staging, exist_ok=True)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
-    open(os.path.join(staging, "_EMPTIED"), "w").close()
-    shutil.move(
-        os.path.join(table, f"coarse_cell={victim}"),
-        os.path.join(staging, f"coarse_cell={victim}"),
-    )
-    assert layout.read_layout(spark, table).where(
-        F.col("coarse_cell") == victim
-    ).count() == 0  # partition is gone, as after the crash
-    healed = layout.heal_layout(spark, table)
-    assert healed == [victim]
-    assert not os.path.exists(staging)
-    got = layout.read_layout(spark, table).toPandas()
-    assert sorted(got["doc_id"]) == sorted(full["doc_id"])
-    # idempotent + no-op without staging
-    assert layout.heal_layout(spark, table) == []
-    # a staging dir WITHOUT _SUCCESS is a dead partial write: dropped
-    os.makedirs(os.path.join(staging, "coarse_cell=9999"), exist_ok=True)
-    assert layout.heal_layout(spark, table) == []
-    assert not os.path.exists(staging)
-
-
-def test_heal_swap_without_marker_is_dead(spark, rects_a_pdf, table):
-    """Crash after the staged write's _SUCCESS but before the _EMPTIED
-    marker: no live dir has been touched yet, so the op never happened —
-    heal must drop the staging and leave the table byte-identical (if it
-    swapped without the marker it couldn't know which partitions the op
-    emptied, half-applying a delete)."""
-    import shutil
-
-    full = sorted(layout.read_layout(spark, table).toPandas()["doc_id"])
-    staging = layout._swap_staging(table)
-    victim = 0
-    os.makedirs(staging, exist_ok=True)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()  # no _EMPTIED
-    live = os.path.join(table, f"coarse_cell={victim}")
-    if os.path.exists(live):
-        shutil.copytree(live, os.path.join(staging, f"coarse_cell={victim}"))
-    assert layout.heal_layout(spark, table) == []
-    assert not os.path.exists(staging)
-    assert sorted(layout.read_layout(spark, table).toPandas()["doc_id"]) == full
-
-
-def test_heal_swap_deletes_emptied_partition(spark, rects_a_pdf, table):
-    """Crash after the marker committed but before the swap loop touched
-    an EMPTIED partition: its live dir must not resurrect the deleted
-    rows — heal removes it (and its stats row) from the marker alone."""
-    full = layout.read_layout(spark, table).toPandas()
-    victim = int(full["coarse_cell"].mode()[0])
-    staging = layout._swap_staging(table)
-    os.makedirs(staging, exist_ok=True)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
-    with open(os.path.join(staging, "_EMPTIED"), "w") as f:
-        f.write(str(victim))
-    assert os.path.exists(os.path.join(table, f"coarse_cell={victim}"))
-    healed = layout.heal_layout(spark, table)
-    assert healed == [victim]
-    assert not os.path.exists(os.path.join(table, f"coarse_cell={victim}"))
-    st = layout.read_partition_stats(spark, table).toPandas()
-    assert victim not in set(st["coarse_cell"])
-    got = layout.read_layout(spark, table).toPandas()
-    assert sorted(got["doc_id"]) == sorted(
-        full[full["coarse_cell"] != victim]["doc_id"]
-    )
-
-
-def test_heal_swap_drops_stale_stats_row(spark, rects_a_pdf, table):
-    """Crash between the marker and the stats-delete loop: the victim's
-    live stats row still describes the OLD data.  After heal swaps the
-    staged (new) data in, that row must be GONE — a doc upserted outside
-    the old MBR would otherwise be pruned out of range-query results."""
-    import shutil
-
-    from rtree_cpp_spark.operators.range_query import range_query_layout
-
-    full = layout.read_layout(spark, table).toPandas()
-    victim = int(full["coarse_cell"].mode()[0])
-    staging = layout._swap_staging(table)
-    # staged new data: the victim partition plus one doc FAR outside the
-    # victim partition's old MBR (placed by file, not by centroid — the
-    # hive dir is the authority on membership here, as after a real
-    # staged write where the doc's centroid stays in the victim cell)
-    os.makedirs(staging, exist_ok=True)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
-    open(os.path.join(staging, "_EMPTIED"), "w").close()
-    shutil.copytree(
-        os.path.join(table, f"coarse_cell={victim}"),
-        os.path.join(staging, f"coarse_cell={victim}"),
-    )
-    vic_rows = full[full["coarse_cell"] == victim]
-    outlier = vic_rows.head(1).copy()
-    outlier["doc_id"] = "OUTLIER"
-    # old victim MBR is a subset of [min, max] of its rows; put the
-    # outlier well outside the union of ALL partitions' x range
-    far_x = float(full["max_x"].max()) + 300.0
-    outlier[["min_x", "max_x"]] = [[far_x, far_x + 1.0]]
-    spark.createDataFrame(outlier.drop(columns=["coarse_cell"])).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(staging, f"coarse_cell={victim}"))
-    healed = layout.heal_layout(spark, table)
-    assert healed == [victim]
-    st = layout.read_partition_stats(spark, table).toPandas()
-    assert victim not in set(st["coarse_cell"])  # stale row dropped
-    # and the pruned range query still finds the outlier (missing stats
-    # row = read the partition; a stale row would have pruned it away)
-    q = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": ["out"],
-                "min_x": [far_x - 1.0], "min_y": [0.0],
-                "max_x": [far_x + 2.0], "max_y": [1024.0],
-            }
-        )
-    )
-    hits = range_query_layout(spark, table, q, GRID).toPandas()
-    assert "OUTLIER" in set(hits["doc_id"])
-
-
-def test_heal_partial_reheal_is_lossless(spark, rects_a_pdf, table):
-    """heal itself crashing mid-swap must stay recoverable: a partition
-    already renamed in (staged dir gone) is NOT in the emptied list, so
-    a re-heal never deletes it."""
-    import shutil
-
-    full = layout.read_layout(spark, table).toPandas()
-    parts = sorted(full["coarse_cell"].unique())[:2]
-    assert len(parts) == 2
-    done, pending = int(parts[0]), int(parts[1])
-    staging = layout._swap_staging(table)
-    os.makedirs(staging, exist_ok=True)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
-    open(os.path.join(staging, "_EMPTIED"), "w").close()
-    # `done` was already swapped by the crashed heal (live dir present,
-    # nothing staged); `pending` is still staged, its live dir deleted
-    shutil.move(
-        os.path.join(table, f"coarse_cell={pending}"),
-        os.path.join(staging, f"coarse_cell={pending}"),
-    )
-    healed = layout.heal_layout(spark, table)
-    assert healed == [pending]
-    got = layout.read_layout(spark, table).toPandas()
-    assert sorted(got["doc_id"]) == sorted(full["doc_id"])
-    assert done in set(got["coarse_cell"])
-
-
-def test_heal_retile_never_keeps_old_grid_sidecar(spark, rects_a_pdf, tmp_path):
-    """Crash BEFORE maybe_retile deleted the live (old-grid) sidecar:
-    committed __retiling data+sidecar next to a fully live old table.
-    heal must install the STAGED sidecar, never keep the old-grid one —
-    old-grid coarse_cell MBRs against new-grid data prune wrongly."""
-    path = str(tmp_path / "tbl3")
-    layout.write_layout(spark.createDataFrame(rects_a_pdf), path, Grid(6))
-    full = sorted(layout.read_layout(spark, path).toPandas()["doc_id"])
-    # committed retile at a DIFFERENT grid (different coarse cell space)
-    retiled = path + "__retiling"
-    layout.write_layout(
-        spark.createDataFrame(rects_a_pdf), retiled, Grid(4), coarse_levels_up=2
-    )
-    new_stats = layout.read_partition_stats(spark, retiled).toPandas()
-    layout.heal_layout(spark, path)
-    assert not os.path.exists(retiled)
-    assert not os.path.exists(layout.stats_path(retiled))
-    assert sorted(layout.read_layout(spark, path).toPandas()["doc_id"]) == full
-    st = layout.read_partition_stats(spark, path).toPandas()
-    # the installed sidecar is the STAGED (new-grid) one
-    assert sorted(st["coarse_cell"]) == sorted(new_stats["coarse_cell"])
-    assert set(st["coarse_cell"]) == set(
-        layout.read_layout(spark, path).toPandas()["coarse_cell"].unique()
-    )
-
-
-def test_heal_retile_torn_sidecar_means_no_sidecar(spark, rects_a_pdf, tmp_path):
-    """Crash during write_layout's sidecar write (data committed, sidecar
-    not): heal installs the data and drops BOTH the torn staged sidecar
-    and the stale live one — no sidecar (read everything) beats a wrong
-    one (silently dropped rows)."""
-    path = str(tmp_path / "tbl4")
-    layout.write_layout(spark.createDataFrame(rects_a_pdf), path, Grid(6))
-    full = sorted(layout.read_layout(spark, path).toPandas()["doc_id"])
-    retiled = path + "__retiling"
-    layout.write_layout(
-        spark.createDataFrame(rects_a_pdf), retiled, Grid(4), coarse_levels_up=2
-    )
-    os.remove(os.path.join(layout.stats_path(retiled), "_SUCCESS"))  # torn
-    layout.heal_layout(spark, path)
-    assert sorted(layout.read_layout(spark, path).toPandas()["doc_id"]) == full
-    assert not os.path.exists(layout.stats_path(path))
-    assert not os.path.exists(layout.stats_path(retiled))
-    # exclusion-based pruning degrades to "prune nothing" without sidecar
-    q = pd.DataFrame(
-        {"query_id": ["q"], "min_x": [0.0], "min_y": [0.0],
-         "max_x": [10.0], "max_y": [10.0]}
-    )
-    assert layout.excluded_partitions_for_queries(spark, path, q) == []
-
-
-def test_heal_completes_interrupted_retile(spark, rects_a_pdf, tmp_path):
-    """Crash between the retile's table delete and rename: the committed
-    __retiling rewrite (data + sidecar) is renamed in by heal_layout."""
-    import shutil
-
-    path = str(tmp_path / "tbl2")
-    layout.write_layout(spark.createDataFrame(rects_a_pdf), path, GRID)
-    full = sorted(layout.read_layout(spark, path).toPandas()["doc_id"])
-    # craft the crash state: a committed retile staging, table deleted
-    shutil.move(path, path + "__retiling")
-    shutil.move(layout.stats_path(path), layout.stats_path(path + "__retiling"))
-    assert not os.path.exists(path)
-    layout.heal_layout(spark, path)
-    assert sorted(layout.read_layout(spark, path).toPandas()["doc_id"]) == full
-    assert os.path.exists(layout.stats_path(path))
-    assert not os.path.exists(path + "__retiling")

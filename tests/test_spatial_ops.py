@@ -283,6 +283,36 @@ def test_contains_query_vs_brute(spark, rects_a_df, rects_a_pdf, range_queries_p
     assert_same_rows(got, exp)
 
 
+def test_out_of_domain_rect_never_matches(spark):
+    """Geometry outside the grid extent clamps into edge cells, where it
+    meets every rect covering those cells.  A domain-covering A must not
+    pair with B rects wholly outside the domain: only the exact
+    predicate decides, on every rect-pair path."""
+    from rtree_cpp_spark.operators.range_query import contains_query
+
+    grid = Grid(4)  # extent 1024
+    a_pdf = pd.DataFrame(
+        {"doc_id": ["A"], "min_x": [0.0], "min_y": [0.0], "max_x": [1024.0], "max_y": [1024.0]}
+    )
+    b_pdf = pd.DataFrame(
+        {
+            "doc_id": ["far", "neg", "in"],
+            "min_x": [2000.0, -30.0, 10.0], "min_y": [2000.0, -30.0, 10.0],
+            "max_x": [2001.0, -20.0, 20.0], "max_y": [2001.0, -20.0, 20.0],
+        }
+    )
+    a, b = spark.createDataFrame(a_pdf), spark.createDataFrame(b_pdf)
+    exp = brute.join_brute(a_pdf, b_pdf)
+    assert exp.values.tolist() == [["A", "in"]]
+    assert_same_rows(spatial_join(a, b, grid), exp)
+    assert_same_rows(spatial_join(a, b, grid, hot_threshold=0), exp)  # skew path
+    q = spark.createDataFrame(a_pdf.rename(columns={"doc_id": "query_id"}))
+    exp_q = exp.rename(columns={"a_doc_id": "query_id", "b_doc_id": "doc_id"})
+    assert_same_rows(range_query(b, q, grid), exp_q)
+    # A contains exactly the B rects it intersects here
+    assert_same_rows(contains_query(b, q, grid), exp_q)
+
+
 def test_knn_join_vs_brute(spark, rects_a_df, rects_b_df, rects_a_pdf, rects_b_pdf):
     from rtree_cpp_spark.operators.knn import knn_join
 
@@ -1084,4 +1114,24 @@ def test_anti_range_query_plan_is_broadcast_nlj(spark):
         df.explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastNestedLoopJoin" in plan and "LeftAnti" in plan
+    assert "Exchange hashpartitioning" not in plan  # data side unshuffled
+
+
+@pytest.mark.parametrize("name", ["range_query", "contains_query"])
+def test_range_and_contains_query_plan_is_broadcast_hash_join(spark, name):
+    """Range and containment queries broadcast the query cover and never
+    shuffle the data side: one BroadcastHashJoin, no hash exchange."""
+    import contextlib
+    import io
+
+    from rtree_cpp_spark.operators import range_query as rq
+    from rtree_cpp_spark.sources import rects
+    from test_entry_contract import SF_DIR  # sf0.001
+
+    df = getattr(rq, name)(rects.rects_a(spark, SF_DIR), rects.queries_range(spark, SF_DIR), Grid(6))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert "BroadcastHashJoin" in plan
     assert "Exchange hashpartitioning" not in plan  # data side unshuffled

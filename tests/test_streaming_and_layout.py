@@ -3,35 +3,11 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
-from rtree_cpp_spark.operators.events import hourly_rollup
 from rtree_cpp_spark.operators.multimodal import attach_media, extract_features
-from rtree_cpp_spark.operators.tiles import primary_tiles
-from rtree_cpp_spark.plans.layout import choose_grid, write_layout
-from rtree_cpp_spark.sources import synth
+from rtree_cpp_spark.plans.layout import write_layout
 from rtree_cpp_spark.sources.extract import rects_only
-from rtree_cpp_spark.streaming.stream_ops import run_stream_events_once, run_stream_tiles_once
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_stream_tiles_matches_batch(spark, docs_a_df, tmp_path):
-    docs_dir = str(tmp_path / "docs")
-    out = str(tmp_path / "tiles_out")
-    ckpt = str(tmp_path / "ckpt")
-    docs_a_df.write.parquet(docs_dir)
-    grid = Grid(6)
-    run_stream_tiles_once(spark, docs_dir, out, ckpt, grid)
-    got = spark.read.parquet(out).toPandas().sort_values(["cell", "doc_id"]).reset_index(drop=True)
-    exp = (
-        primary_tiles(rects_only(docs_a_df), grid)
-        .toPandas()
-        .sort_values(["cell", "doc_id"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, exp)
-    # exactly-once: a second availableNow drain adds nothing
-    run_stream_tiles_once(spark, docs_dir, out, ckpt, grid)
-    assert spark.read.parquet(out).count() == len(exp)
 
 
 def test_stream_rasterize_matches_batch(spark, docs_a_df, tmp_path):
@@ -101,73 +77,6 @@ def test_stream_rasterize_matches_batch(spark, docs_a_df, tmp_path):
     pd.testing.assert_frame_equal(got2, exp)
 
 
-def test_stream_events_matches_batch(spark, tmp_path):
-    events = spark.read.parquet(f"{SF}/events.parquet")
-    out = str(tmp_path / "ev_out")
-    ckpt = str(tmp_path / "ev_ckpt")
-    src = str(tmp_path / "ev_src")
-    events.write.parquet(src)
-    run_stream_events_once(spark, src, out, ckpt)
-    got = spark.read.parquet(out).toPandas().sort_values(["hour", "event_type"]).reset_index(drop=True)
-    exp = hourly_rollup(events).toPandas().sort_values(["hour", "event_type"]).reset_index(drop=True)
-    # append mode only emits windows the watermark has passed: windows
-    # ending within 2h (watermark) + 1h (window) of max event time are
-    # withheld at end-of-stream — exclude them from the batch expectation
-    max_ts = events.agg(F.max("ts")).collect()[0][0]
-    horizon = max_ts - pd.Timedelta(hours=3)
-    exp_closed = exp[exp["hour"] <= horizon].reset_index(drop=True)
-    got_closed = got[got["hour"] <= horizon].reset_index(drop=True)
-    pd.testing.assert_frame_equal(got_closed[exp.columns], exp_closed)
-    # and every emitted row agrees with batch (no spurious rows)
-    merged = got.merge(exp, on=["hour", "event_type"], suffixes=("_s", "_b"))
-    assert len(merged) == len(got)
-    assert (merged["n_events_s"] == merged["n_events_b"]).all()
-
-
-def test_stream_range_monitor_matches_batch(spark, docs_a_df, tmp_path):
-    """Standing range queries over a doc stream: availableNow drain of the
-    whole corpus must equal the batch range_query on the same inputs."""
-    from rtree_cpp_spark.operators.range_query import range_query
-    from rtree_cpp_spark.streaming.stream_ops import stream_docs, stream_range_monitor
-
-    docs_dir = str(tmp_path / "docs")
-    out = str(tmp_path / "rm_out")
-    ckpt = str(tmp_path / "rm_ckpt")
-    docs_a_df.write.parquet(docs_dir)
-    grid = Grid(6)
-    queries = spark.createDataFrame(synth.synth_range_queries_pdf(10, seed=5))
-    q = (
-        stream_range_monitor(stream_docs(spark, docs_dir), queries, grid)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out).toPandas().sort_values(["query_id", "doc_id"]).reset_index(drop=True)
-    exp = (
-        range_query(rects_only(docs_a_df), queries, grid)
-        .toPandas()
-        .sort_values(["query_id", "doc_id"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, exp)
-
-
-def test_choose_grid_density_heuristic(spark):
-    # clustered synthetic: finer levels drop below 64 median occupancy
-    docs = spark.createDataFrame(synth.synth_docs_pdf("A", 2000, seed=42), schema=synth.DOC_SCHEMA)
-    rects = rects_only(docs)
-    g = choose_grid(rects, levels=[1, 2, 3, 4, 5, 6])
-    assert 1 <= g.level <= 6
-    # occupancy at the chosen level is >= 64 or it's the coarsest candidate
-    from rtree_cpp_spark.plans.layout import median_occupancy_by_level
-
-    occ = median_occupancy_by_level(rects, [g.level])
-    assert occ[g.level] >= 64.0 or g.level == 1
-
-
 def test_write_layout_roundtrip(spark, rects_a_pdf, tmp_path):
     rects = spark.createDataFrame(rects_a_pdf)
     path = str(tmp_path / "layout")
@@ -197,93 +106,6 @@ def test_multimodal_feature_kernel(spark, docs_a_pdf):
         if len(raw):
             exp0 = np.array_split(np.frombuffer(raw, dtype=np.uint8).astype(np.float32), 8)[0].mean()
             assert abs(r["feature"][0] - exp0) < 1e-6
-
-
-def test_stream_spatial_join_matches_batch(spark, docs_a_df, docs_b_df, tmp_path):
-    from rtree_cpp_spark.operators.spatial_join import spatial_join
-    from rtree_cpp_spark.streaming.stream_ops import stream_docs, stream_spatial_join
-
-    docs_dir = str(tmp_path / "sj_docs")
-    docs_a_df.write.parquet(docs_dir)
-    grid = Grid(5)
-    static_b = rects_only(docs_b_df)
-    q = (
-        stream_spatial_join(stream_docs(spark, docs_dir), static_b, grid)
-        .writeStream.format("memory")
-        .queryName("sj_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("SELECT * FROM sj_stream").toPandas()
-        .sort_values(["a_doc_id", "b_doc_id"]).reset_index(drop=True)
-    )
-    exp = (
-        spatial_join(rects_only(docs_a_df), static_b, grid).toPandas()
-        .sort_values(["a_doc_id", "b_doc_id"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, exp)
-
-
-def test_stream_cell_stats_stateful(spark, docs_a_df, tmp_path):
-    """applyInPandasWithState: final per-cell state across TWO separate
-    micro-batch sets equals the batch aggregate over all docs."""
-    from rtree_cpp_spark.streaming.stream_ops import stream_cell_stats, stream_docs
-    from rtree_cpp_spark.functions.geometry import center_cols
-
-    half = docs_a_df.count() // 2
-    pdf = docs_a_df.toPandas()
-    docs_dir = str(tmp_path / "cs_docs")
-    ckpt = str(tmp_path / "cs_ckpt")
-    out_dir = str(tmp_path / "cs_out")
-    grid = Grid(4)
-
-    def drain():
-        def sink(df, epoch_id):
-            df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out_dir)
-
-        q = (
-            stream_cell_stats(stream_docs(spark, docs_dir), grid)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    spark.createDataFrame(pdf.iloc[:half], schema=docs_a_df.schema).write.mode("overwrite").parquet(docs_dir)
-    drain()
-    spark.createDataFrame(pdf.iloc[half:], schema=docs_a_df.schema).write.mode("append").parquet(docs_dir)
-    drain()
-    # latest emitted row per cell across both drains == final running state
-    emitted = spark.read.parquet(out_dir).toPandas()
-    final = (
-        emitted.sort_values("epoch")
-        .groupby("cell", as_index=False)
-        .last()
-        .drop(columns=["epoch"])
-        .sort_values("cell")
-        .reset_index(drop=True)
-    )
-
-    r = rects_only(docs_a_df)
-    cx, cy = center_cols(
-        F.col("min_x").cast("double"), F.col("min_y").cast("double"),
-        F.col("max_x").cast("double"), F.col("max_y").cast("double"),
-    )
-    exp = (
-        r.withColumn("cell", grid.cell_of_point_col(cx, cy))
-        .groupBy("cell")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("min_x").alias("mbr_min_x"), F.min("min_y").alias("mbr_min_y"),
-            F.max("max_x").alias("mbr_max_x"), F.max("max_y").alias("mbr_max_y"),
-        )
-        .toPandas().sort_values("cell").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(final[exp.columns].astype(exp.dtypes.to_dict()), exp)
 
 
 def test_multimodal_resize_and_frames(spark):
@@ -374,68 +196,6 @@ def test_bucketed_write_recovers_orphaned_warehouse_dir(spark, rects_a_pdf):
         assert spark.table(name).count() == n
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def test_bucketed_join_has_no_exchange(spark, rects_a_pdf, rects_b_pdf):
-    """Cell-bucketed tables join with ZERO exchange — the write-once
-    amortized shuffle that makes the layout 'the index' at scale."""
-    from rtree_cpp_spark.plans.layout import write_bucketed
-
-    grid = Grid(5)
-    write_bucketed(spark.createDataFrame(rects_a_pdf), "bkt_a", grid, n_buckets=8)
-    write_bucketed(spark.createDataFrame(rects_b_pdf), "bkt_b", grid, n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the sort-merge path (at scale neither side broadcasts)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.table("bkt_a").select(F.col("doc_id").alias("a_doc_id"), "cell")
-        b = spark.table("bkt_b").select(F.col("doc_id").alias("b_doc_id"), "cell")
-        joined = a.join(b, "cell")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan[:2000]
-        assert "Exchange hashpartitioning" not in plan, plan[:2000]
-        assert "Bucketed: true" in plan, plan[:2000]
-        # and it computes the same candidate multiset as a plain join
-        plain = (
-            spark.createDataFrame(rects_a_pdf)
-            .withColumn("cell", grid.cell_of_point_col(
-                (F.col("min_x") + F.col("max_x")) / 2, (F.col("min_y") + F.col("max_y")) / 2))
-            .select(F.col("doc_id").alias("a_doc_id"), "cell")
-            .join(
-                spark.createDataFrame(rects_b_pdf)
-                .withColumn("cell", grid.cell_of_point_col(
-                    (F.col("min_x") + F.col("max_x")) / 2, (F.col("min_y") + F.col("max_y")) / 2))
-                .select(F.col("doc_id").alias("b_doc_id"), "cell"),
-                "cell",
-            )
-        )
-        assert joined.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
-def test_stream_dedup_events_drops_redeliveries(spark, tmp_path):
-    """At-least-once input (every event delivered twice) -> exactly one
-    output row per event_id, matching the batch DISTINCT."""
-    from rtree_cpp_spark.streaming.stream_ops import run_stream_dedup_once
-
-    events = spark.read.parquet(f"{SF}/events.parquet").limit(2000)
-    src = str(tmp_path / "dup_src")
-    out = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    events.write.parquet(src)
-    events.write.mode("append").parquet(src)  # second delivery of every event
-    assert spark.read.parquet(src).count() == 2 * events.count()
-    run_stream_dedup_once(spark, src, out, ckpt)
-    got = spark.read.parquet(out)
-    n = events.count()
-    assert got.count() == n
-    assert got.select("event_id").distinct().count() == n
-    # value-level agreement with the batch side
-    merged = got.join(events.select("event_id", F.col("value").alias("v_b")), "event_id")
-    assert merged.where(F.col("value") != F.col("v_b")).count() == 0
 
 
 def test_real_media_decode_roundtrip(spark):

@@ -55,18 +55,6 @@ def test_jvm_extract_matches_float32_oracle(spark, docs_a_df, rects_a_pdf):
     assert dt["min_x"] == "float"
 
 
-def test_pandas_extract_matches_jvm(spark, docs_a_df):
-    jvm = extract.rects_only(docs_a_df).toPandas().sort_values("doc_id").reset_index(drop=True)
-    pdu = (
-        extract.with_rect_pandas(docs_a_df)
-        .select("doc_id", "min_x", "min_y", "max_x", "max_y")
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(jvm, pdu)
-
-
 def test_span_signature_invariant(spark, docs_a_df):
     # extraction + a shuffle + re-join by doc_id preserves the span sequence
     sig_in = docs_a_df.select(
